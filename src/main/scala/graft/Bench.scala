@@ -574,7 +574,7 @@ object Bench {
       .write.mode("overwrite").json(s"$work/in")
     val cfg = graft.streaming.PipelineConfig(
       warehouse = s"$work/wh", upsert = true, keepDeletes = false,
-      dedupColumn = "__source_ts_ms", concurrentTables = 2)
+      dedupColumn = "__source_ts_ms")
     val t0 = System.nanoTime()
     val q = graft.streaming.CdcPipeline.start(spark, s"$work/in", s"$work/ckpt", cfg,
       maxFilesPerTrigger = trickleBatches.map(_ => 1))

@@ -117,6 +117,14 @@ object ConnectedComponents {
     * relation, checkpointed to keep lineage flat. Star graphs hash-skew
     * onto their hub's reducer only for the min aggregation, which
     * map-side combines — the edge relation itself stays (src, dst) pairs.
+    *
+    * Convergence is PROBABILISTIC. Both the fixpoint test and the early
+    * exit compare two edge relations by a (count, sum of xxhash64) signature,
+    * not as sets. Two unequal relations with equal signatures would stop
+    * the loop before its fixpoint, and the result could then split a
+    * component in two. xxhash64 is not collision-resistant: for
+    * non-adversarial node ids a false match is about 2⁻⁶⁴ per comparison,
+    * but inputs built to collide can force one.
     */
   def componentsByStarContraction(edges: DataFrame, srcCol: String, dstCol: String,
                                   maxIter: Int = 50): DataFrame = {
@@ -131,9 +139,10 @@ object ConnectedComponents {
       .where(col("u") > col("v")).distinct().localCheckpoint(true)
     // convergence signature: (edge count, order-independent hash sum) —
     // one tiny aggregate per round instead of a full set-difference join.
-    // A signature collision on unequal edge sets (≈2⁻⁶⁴ per round) would
-    // only stop one round early on a graph that was one rename from
-    // fixpoint; the star-shape invariant keeps labels consistent.
+    // Equal signatures are taken as equal edge sets, so a collision on
+    // unequal sets (≈2⁻⁶⁴ per comparison for non-adversarial ids) stops
+    // the loop early with a possibly under-merged result — see the
+    // scaladoc. The early exit below rests on the same signature.
     def signature(df: DataFrame): (Long, BigDecimal) = {
       // decimal sum: exact and overflow-free under ANSI mode at any count
       val r = df.agg(count(lit(1)),

@@ -15,6 +15,21 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * upsert vs append, keep-deletes, dedup column, heartbeat skip prefix,
   * per-destination partition specs (`*` = default), excluded columns (via
   * mapping config), bounded table-level parallelism, raw-event archive.
+  *
+  * `concurrentTables` bounds how many TARGET TABLES of one micro-batch are
+  * processed at once (the reference's `concurrent-uploads`). `0`, the
+  * default, means one worker per core: a batch runs
+  * `min(#target tables in the batch, sparkContext.defaultParallelism)`
+  * workers, resolved when the batch runs. This departs from the
+  * reference, whose default is 1. `1` processes the tables one after
+  * another on the batch thread, with no thread pool. The unit is the
+  * mapped target table, not the destination: destinations that
+  * `tableMapper` sends to one table (a case fold, a shard-merging
+  * `replaceRegex`) run one after another, in sorted order, inside one
+  * worker, because a table's commit is single-writer. Shared tables that
+  * any destination may write (the schema history, the dead-letter table)
+  * therefore receive their rows in commit order, not destination order.
+  * `tableOperationTimeout` applies per target table.
   */
 final case class PipelineConfig(
     warehouse: String,
@@ -27,7 +42,7 @@ final case class PipelineConfig(
     heartbeatPrefix: Option[String] = Some("__debezium-heartbeat"),
     partitionBy: Map[String, Seq[String]] = Map.empty,
     tableProperties: Map[String, String] = Map.empty,
-    concurrentTables: Int = 1,
+    concurrentTables: Int = 0,
     scd2History: Boolean = false,
     archiveEvents: Boolean = false,
     nullKeyPolicy: CdcApply.NullKeyPolicy = CdcApply.NullKeyPolicy.Fail,
@@ -45,6 +60,9 @@ final case class PipelineConfig(
     smallBatchMaxRows: Int = 20000,
     smallBatchMaxBytes: Long = 8L << 20
 ) {
+  require(concurrentTables >= 0,
+    s"concurrentTables must be >= 0 (0 = one per core), got $concurrentTables")
+
   def partitionSpecFor(table: String): Seq[String] =
     partitionBy.getOrElse(table, partitionBy.getOrElse("*", Seq.empty))
 }
@@ -132,14 +150,12 @@ object CdcPipeline {
         .collect()
         .map(r => r.getString(0) ->
           (r.getLong(1), r.getSeq[String](2), Option(r.getString(3)))).toMap
-      val results = parallelize(meta.keys.toSeq.sorted, cfg.concurrentTables,
-        cfg.tableOperationTimeout) { dest =>
+      applyByTable(spark, meta.keys, cfg) { dest =>
         val (n, schemas, keySchema) = meta(dest)
         processDestination(spark, batch.filter(col("destination") === dest),
           dest, schemas, keySchema, cfg, batchId)
-        dest -> n
+        n
       }
-      results.toMap
     } finally batch.unpersist()
   }
 
@@ -206,13 +222,12 @@ object CdcPipeline {
         rs.flatMap(r => schemaOf(r.getString(2))).distinct.toSeq,
         rs.iterator.flatMap(r => schemaOf(r.getString(1))).nextOption())
     }
-    parallelize(meta.keys.toSeq.sorted, cfg.concurrentTables,
-      cfg.tableOperationTimeout) { dest =>
+    applyByTable(spark, meta.keys, cfg) { dest =>
       val (n, schemas, keySchema) = meta(dest)
       processDestination(spark, localDf(byDest(dest)), dest, schemas, keySchema,
         cfg, batchId)
-      dest -> n
-    }.toMap
+      n
+    }
   }
 
   private def processDestination(spark: SparkSession, slice: DataFrame, dest: String,
@@ -401,6 +416,9 @@ object CdcPipeline {
     */
   val Scd2BatchArrivalCol = "__graft_batch_id"
 
+  /** Name prefix of the per-table worker threads of [[parallelize]]. */
+  val WorkerThreadPrefix = "graft-table-worker-"
+
   /** Per-table replay marker for append-mode destinations. */
   val CdcBatchIdProp = "cdc.last-batch-id"
 
@@ -422,10 +440,36 @@ object CdcPipeline {
       current_timestamp().as("event_sink_timestamptz")))
   }
 
+  /** W11 — applies `f` to every destination of a batch, one worker per
+    * mapped target table (see [[PipelineConfig]]): destinations are
+    * grouped by `cfg.tableMapper.map`, a group runs its destinations in
+    * sorted order, and up to `cfg.concurrentTables` groups (0 = one per
+    * core) run at once. Groups are ordered by their first destination, so
+    * with one destination per table a sequential run keeps the sorted
+    * destination order. Returns `f`'s result per destination.
+    */
+  private def applyByTable(spark: SparkSession, dests: Iterable[String],
+                           cfg: PipelineConfig)(f: String => Long): Map[String, Long] = {
+    val byTable = dests.toSeq.groupBy(cfg.tableMapper.map).values.toSeq
+      .map(_.sorted).sortBy(_.head)
+    val workers =
+      if (cfg.concurrentTables > 0) cfg.concurrentTables
+      else spark.sparkContext.defaultParallelism
+    parallelize(byTable, workers, cfg.tableOperationTimeout)(_.map(d => d -> f(d)))
+      .flatten.toMap
+  }
+
+  private val workerIds = new java.util.concurrent.atomic.AtomicLong()
+
   /** W11 — bounded per-table parallelism with a per-table timeout (the
     * reference's per-upload `Await`, SINK/BatchConfig.java:31-38); any
     * failure or timeout fails the batch before offsets commit
     * (at-least-once, like the reference).
+    *
+    * The pool is built per call and its threads are created on demand by
+    * the submitting thread, so each worker inherits a copy of the
+    * caller's Spark local properties: under `foreachBatch` that is the
+    * stream's job group, which `query.stop()` cancels.
     */
   private[streaming] def parallelize[A, B](
       items: Seq[A], parallelism: Int,
@@ -436,7 +480,12 @@ object CdcPipeline {
     // otherwise block the stream forever
     else if ((parallelism <= 1 || items.size <= 1) && !timeout.isFinite) items.map(f)
     else {
-      val pool = Executors.newFixedThreadPool(math.min(math.max(1, parallelism), items.size))
+      val pool = Executors.newFixedThreadPool(
+        math.min(math.max(1, parallelism), items.size), { (r: Runnable) =>
+          val t = new Thread(r, s"$WorkerThreadPrefix${workerIds.incrementAndGet()}")
+          t.setDaemon(true) // a hung writer past its timeout must not pin the JVM
+          t
+        })
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       // ANY failure interrupts the other in-flight workers before the batch
       // fails: a zombie writer surviving into the replayed batch would race

@@ -225,9 +225,10 @@ final class ManagedTable private (
   /** Per-handle cache of committed manifests for the commit-path GC
     * (round 12): committed manifests are immutable, and the retention
     * diff re-reads the same window every commit — each read is an FS RPC
-    * on an object store. Bounded to the newest 64 versions; a missing or
-    * unparsable manifest caches as empty (gap versions from multi-version
-    * publishes never gain a manifest later, so that is stable).
+    * on an object store. Bounded to the newest 64 versions. Only manifests
+    * that were read are cached: a missing one (a gap version of a
+    * multi-version publish) is never cached and is probed again on the next
+    * read, and an unparsable one throws out of [[readManifestCached]].
     */
   @transient private var manifestCache: Map[Long, Seq[ManifestEntry]] = Map.empty
 
@@ -1062,10 +1063,13 @@ final class ManagedTable private (
     dropBranchOnlyGroups(staged)
   }
 
-  /** Delete a dropped/published branch's staged group dirs, sparing any
+  /** Retire a dropped/published branch's staged group dirs, sparing any
     * path a live reference still covers (the current snapshot, another
     * branch, or a retained/tagged manifest — a staged group is
-    * uuid-fresh, so overlaps are defensive, not expected).
+    * uuid-fresh, so overlaps are defensive, not expected). Deletion goes
+    * through the commit-lease age guard of [[retireGroups]]: a dir younger
+    * than the grace is deferred to a later commit of this handle, never
+    * deleted under a concurrent writer that may still be landing it.
     */
   private def dropBranchOnlyGroups(staged: Seq[ManifestEntry]): Unit = {
     if (staged.isEmpty) return
@@ -1074,9 +1078,7 @@ final class ManagedTable private (
     }
     val keep = ((versions().map(_._1) ++ taggedVs).distinct
       .flatMap(readManifestCached) ++ liveBranchEntries).map(_.path).toSet
-    staged.map(_.path).distinct.filterNot(keep).foreach { p =>
-      fs.delete(new Path(tableDir, p), true)
-    }
+    retireGroups((staged.map(_.path).toSet ++ pendingRetire) -- keep)
   }
 
   /** Row-level DELETE staged onto a WAP branch (round 9 — Iceberg routes
@@ -3851,25 +3853,33 @@ final class ManagedTable private (
         Some(headRows.map(_.get(keyIdx)).filter(_ != null).distinct.toSeq)
       else None)
     }
-    val (src0, smallKeys, keyBounds) =
+    val (src0, smallKeys, keyBounds, pruneState) =
       if (keyPrunable) {
         val r = source
           .agg(count(lit(1)), min(col(ids.head)), max(col(ids.head))).head()
         if (r.getLong(0) <= 64L) {
-          val (local, keys) = localize(source.limit(65).collect())
-          (local, keys, None)
-        } else (source, None, Some((r.get(1), r.get(2))))
+          val headRows = source.limit(65).collect()
+          if (headRows.length <= 64) {
+            val (local, keys) = localize(headRows)
+            (local, keys, None, true)
+          }
+          // A non-deterministic source counted ≤ 64 rows, then returned
+          // 65: localizing them would silently truncate it, and the count's
+          // key bounds describe another evaluation — merge the full plan
+          // against unpruned state.
+          else (source, None, None, false)
+        } else (source, None, Some((r.get(1), r.get(2))), true)
       } else {
         val headRows = source.limit(65).collect()
         if (headRows.length <= 64) {
           val (local, keys) = localize(headRows)
-          (local, keys, None)
-        } else (source, None, None)
+          (local, keys, None, false)
+        } else (source, None, None, false)
       }
 
     val s = src0.alias("s")
     val state = stageToBranch.map(readBranch)
-      .getOrElse(statePrunedBySourceKeys(smallKeys, keyBounds, keyPrunable))
+      .getOrElse(statePrunedBySourceKeys(smallKeys, keyBounds, pruneState))
       .select(_meta.schema.fieldNames.map(col).toIndexedSeq: _*).alias("t")
     val joinCond = ids.map(i => col(s"s.$i") === col(s"t.$i")).reduce(_ && _)
     val joined = s.join(state, joinCond, "left_outer")

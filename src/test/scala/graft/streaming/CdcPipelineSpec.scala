@@ -423,4 +423,180 @@ class CdcPipelineSpec extends AnyFunSuite with SharedSpark {
       assert(f == s, s"$t content diverged: fast=$f slow=$s")
     }
   }
+
+  /** Destination-table contents of a warehouse, by table name. */
+  private def tables(wh: String, names: Seq[String]): Map[String, Seq[Seq[Any]]] =
+    names.map { n =>
+      n -> ManagedTable.load(spark, wh, n).get.read().orderBy("id").collect()
+        .map(_.toSeq).toSeq
+    }.toMap
+
+  test("default concurrency: destinations mapped to one table share a worker; equals sequential") {
+    val batch = Seq(
+      EventFactory.event(1, "o1", "c", 100L, destination = "db.Orders"),
+      EventFactory.event(2, "o2", "c", 100L, destination = "db.Orders"),
+      EventFactory.event(3, "o3", "c", 100L, destination = "db.Orders"),
+      EventFactory.event(3, "o3b", "u", 200L, destination = "db.orders"),
+      EventFactory.event(4, "o4", "c", 200L, destination = "db.orders"),
+      EventFactory.event(1, "c1", "c", 100L, destination = "db.customers"),
+      EventFactory.event(2, "c2", "c", 100L, destination = "db.customers"))
+      .toDF("destination", "key", "value")
+    // both the driver-side small-batch path and the distributed path
+    for (smallRows <- Seq(20000, 0)) {
+      val root = Files.createTempDirectory("graft-fold").toString
+      val conc = PipelineConfig(warehouse = s"$root/conc", keepDeletes = false,
+        smallBatchMaxRows = smallRows)
+      assert(conc.concurrentTables == 0)
+      val seq = conc.copy(warehouse = s"$root/seq", concurrentTables = 1)
+      val written = CdcPipeline.processBatch(spark, batch, conc, batchId = 0L)
+      assert(written == Map("db.Orders" -> 3L, "db.orders" -> 2L, "db.customers" -> 2L))
+      CdcPipeline.processBatch(spark, batch, seq, batchId = 0L)
+      val names = Seq("db_orders", "db_customers")
+      val got = tables(conc.warehouse, names)
+      assert(got == tables(seq.warehouse, names))
+      assert(got("db_orders").map(r => (r(0), r(1))) ==
+        Seq((1, "o1"), (2, "o2"), (3, "o3b"), (4, "o4")), got("db_orders"))
+    }
+  }
+
+  test("default concurrency: a multi-destination, multi-batch stream equals the sequential run") {
+    val evolvedSchema = EventFactory.customerValueSchema.replace(
+      """{"field":"__deleted","type":"boolean","optional":true}""",
+      """{"field":"__deleted","type":"boolean","optional":true},{"field":"email","type":"string","optional":true}""")
+    val key5 = s"""{"schema":${EventFactory.customerKeySchema},"payload":{"id":5}}"""
+    val val5 = s"""{"schema":$evolvedSchema,"payload":{"id":5,"first_name":"eve","email":"e@x.io","__op":"c","__source_ts_ns":300,"__source_ts_ms":0,"__deleted":false}}"""
+    val dests = Seq("inv.customers", "inv.orders", "inv.items")
+    val files = Seq(
+      dests.flatMap(d => (1 to 4).map(i => EventFactory.event(i, s"$d-$i", "c", 100L, d))),
+      dests.flatMap(d => Seq(EventFactory.event(2, s"$d-2b", "u", 200L, d),
+        EventFactory.event(3, null, "d", 200L, d))) :+ (("inv.customers", key5, val5)),
+      dests.flatMap(d => Seq(EventFactory.event(1, s"$d-1c", "u", 300L, d),
+        EventFactory.event(6, s"$d-6", "c", 300L, d))))
+    def run(cfg: PipelineConfig, root: String): Unit = {
+      val src = s"$root/events"; Files.createDirectories(java.nio.file.Paths.get(src))
+      // the file source orders a trigger's files by modification time
+      files.zipWithIndex.foreach { case (f, i) =>
+        writeEvents(src, s"b$i.json", f)
+        new java.io.File(src, s"b$i.json").setLastModified(1000000000000L + i * 60000L)
+      }
+      CdcPipeline.start(spark, src, s"$root/cp", cfg, maxFilesPerTrigger = Some(1))
+        .awaitTermination(120000)
+    }
+    val rootC = Files.createTempDirectory("graft-conc").toString
+    val rootS = Files.createTempDirectory("graft-seq").toString
+    run(PipelineConfig(warehouse = s"$rootC/wh", keepDeletes = false), rootC)
+    run(PipelineConfig(warehouse = s"$rootS/wh", keepDeletes = false,
+      concurrentTables = 1), rootS)
+    val names = Seq("inv_customers", "inv_orders", "inv_items")
+    val got = tables(s"$rootC/wh", names)
+    assert(got == tables(s"$rootS/wh", names))
+    assert(got("inv_items").map(r => (r(0), r(1))) ==
+      Seq((1, "inv.items-1c"), (2, "inv.items-2b"), (4, "inv.items-4"), (6, "inv.items-6")))
+    assert(got("inv_customers").exists(_.contains("e@x.io")))
+    assert(graft.tables.ParityStores.loadOffsets(spark, s"$rootC/wh")
+      .flatMap(_.get("batchId")).contains("2"))
+  }
+
+  test("default concurrency: one failing table fails the batch; the fixed replay lands every table once") {
+    val nullIdVal =
+      s"""{"schema":${EventFactory.customerValueSchema},"payload":{"id":null,"first_name":"ghost","__op":"c","__source_ts_ns":5,"__source_ts_ms":0,"__deleted":false}}"""
+    val nullIdKey = s"""{"schema":${EventFactory.customerKeySchema},"payload":{"id":null}}"""
+    // a keyless destination takes the append path, whose replay marker
+    // is what keeps a re-run batch from landing twice
+    val logVal = (i: Int) => EventFactory.event(i, s"log$i", "c", 100L)._3
+    val b0 = Seq(EventFactory.event(1, "c1", "c", 100L),
+      EventFactory.event(1, "o1", "c", 100L, destination = "testc.inventory.orders"),
+      ("testc.inventory.log", null, logVal(1)))
+    val b1 = Seq(EventFactory.event(2, "c2", "c", 200L),
+      ("testc.inventory.customers", nullIdKey, nullIdVal),
+      EventFactory.event(2, "o2", "c", 200L, destination = "testc.inventory.orders"),
+      ("testc.inventory.log", null, logVal(2)))
+    def feed(root: String): String = {
+      val src = s"$root/events"; Files.createDirectories(java.nio.file.Paths.get(src))
+      // the file source orders a trigger's files by modification time
+      for ((b, i) <- Seq(b0, b1).zipWithIndex) {
+        writeEvents(src, s"b$i.json", b)
+        new java.io.File(src, s"b$i.json").setLastModified(1000000000000L + i * 60000L)
+      }
+      src
+    }
+    val root = Files.createTempDirectory("graft-conc-fail").toString
+    val src = feed(root)
+    val cfg = PipelineConfig(warehouse = s"$root/wh", keepDeletes = false)
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      CdcPipeline.start(spark, src, s"$root/cp", cfg, maxFilesPerTrigger = Some(1))
+        .awaitTermination(120000)
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(ex).exists(_.contains("null identifier field")))
+    assert(graft.tables.ParityStores.loadOffsets(spark, cfg.warehouse)
+      .flatMap(_.get("batchId")).contains("0"), "the failed batch advanced the offset row")
+    // the fix: replay the same checkpoint with the poison row dropped
+    val fixed = cfg.copy(nullKeyPolicy = graft.cdc.CdcApply.NullKeyPolicy.Drop)
+    CdcPipeline.start(spark, src, s"$root/cp", fixed, maxFilesPerTrigger = Some(1))
+      .awaitTermination(120000)
+    assert(graft.tables.ParityStores.loadOffsets(spark, cfg.warehouse)
+      .flatMap(_.get("batchId")).contains("1"))
+    // reference: the fixed config from the start, sequentially
+    val refRoot = Files.createTempDirectory("graft-conc-ref").toString
+    CdcPipeline.start(spark, feed(refRoot), s"$refRoot/cp",
+      fixed.copy(warehouse = s"$refRoot/wh", concurrentTables = 1),
+      maxFilesPerTrigger = Some(1)).awaitTermination(120000)
+    val names = Seq("testc_inventory_customers", "testc_inventory_orders",
+      "testc_inventory_log")
+    val got = tables(cfg.warehouse, names)
+    assert(got == tables(s"$refRoot/wh", names))
+    assert(got.values.map(_.size).toSeq == Seq(2, 2, 2), got)
+  }
+
+  test("default concurrency: query.stop() cancels in-flight table jobs and leaves no worker running") {
+    import org.apache.spark.sql.functions.{col, udf}
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft-conc-stop").toString
+    val src = s"$root/events"; Files.createDirectories(java.nio.file.Paths.get(src))
+    writeEvents(src, "b0.json", Seq(
+      EventFactory.event(1, "c1", "c", 100L),
+      EventFactory.event(1, "o1", "c", 100L, destination = "testc.inventory.orders")))
+    SlowRule.inFlight.set(0); SlowRule.peak.set(0)
+    // a rule that blocks until its task is interrupted: each table's
+    // expectation job stays in flight until the stop cancels it
+    // (non-deterministic, so the optimizer cannot fold it into the local
+    // relation on the driver: it runs in a task)
+    val blocks = udf { (_: Int) =>
+      SlowRule.peak.accumulateAndGet(SlowRule.inFlight.incrementAndGet(), math.max)
+      try { Thread.sleep(120000); true } finally SlowRule.inFlight.decrementAndGet()
+    }.asNondeterministic()
+    val cfg = PipelineConfig(warehouse = s"$root/wh",
+      expectations = Seq(graft.operators.Expectations.Rule("blocks", blocks(col("id")))))
+    val q = CdcPipeline.start(spark, src, s"$root/cp", cfg)
+    def eventually(what: String)(cond: => Boolean): Unit = {
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (!cond && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(cond, what)
+    }
+    def workers = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(CdcPipeline.WorkerThreadPrefix))
+    val tracker = spark.sparkContext.statusTracker
+    def running = tracker.getJobIdsForGroup(q.runId.toString).count(id =>
+      tracker.getJobInfo(id).exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
+    try {
+      eventually("both tables' jobs should run at once")(SlowRule.peak.get >= 2)
+      // the workers' jobs carry the stream's job group, which stop() cancels
+      eventually("the in-flight jobs should belong to the stream")(running >= 2)
+    } finally q.stop()
+    assert(!q.isActive)
+    eventually("cancelled tasks must stop")(SlowRule.inFlight.get == 0)
+    eventually(s"no table worker may outlive the stop: $workers")(workers.isEmpty)
+    eventually("no job of the stream may still run")(running == 0)
+    for (t <- Seq("testc_inventory_customers", "testc_inventory_orders"))
+      assert(ManagedTable.load(spark, cfg.warehouse, t).forall(_.read().count() == 0), t)
+    assert(graft.tables.ParityStores.loadOffsets(spark, cfg.warehouse).isEmpty)
+  }
+}
+
+/** In-flight and peak call counts of the blocking expectation rule above. */
+object SlowRule {
+  val inFlight = new java.util.concurrent.atomic.AtomicInteger()
+  val peak = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -221,6 +221,25 @@ class DmlSpec extends AnyFunSuite with SharedSpark {
     assert(m(12) == "n12")
   }
 
+  test("mergeInto: a non-deterministic small source that grows between evaluations is not truncated") {
+    val w = wh
+    val t = seed(w, "nd")
+    // Each evaluation of the source runs the filter over ids 1..100 in one
+    // task. The first evaluation (the key-bounds count) keeps 64 rows, every
+    // later one keeps all 100 — so the bounded collect that follows sees 65.
+    NonDeterministicSource.calls.set(0L)
+    val grows = udf((_: Long) => NonDeterministicSource.calls.getAndIncrement() >= 36L)
+      .asNondeterministic()
+    val src = spark.range(1, 101, 1, 1).filter(grows(col("id")))
+      .select(col("id").cast("int").as("id"), concat(lit("s"), col("id")).as("name"),
+        lit(0).as("grp"), col("id").as("v"))
+    t.mergeInto(src)
+    val got = t.read().select("id", "name").collect().map(r => (r.getInt(0), r.getString(1)))
+    assert(got.length == 100 && got.map(_._1).distinct.length == 100, got.toSeq)
+    assert(got.forall { case (id, name) => name == s"s$id" },
+      s"rows left unmerged: ${got.filterNot { case (id, name) => name == s"s$id" }.toSeq}")
+  }
+
   test("DML on a partitioned table goes through manifest commits (time travel works)") {
     val w = wh
     val t = seed(w, "p1", partitionBy = Seq("bucket(4,id)"))
@@ -832,4 +851,9 @@ class DmlSpec extends AnyFunSuite with SharedSpark {
     t.mergeInto(big.limit(0))
     assert(t.meta.currentVersion == v0)
   }
+}
+
+/** Call counter of the non-deterministic merge source above (one JVM in local mode). */
+object NonDeterministicSource {
+  val calls = new java.util.concurrent.atomic.AtomicLong()
 }

@@ -1204,6 +1204,30 @@ class ManagedTableSpec extends AnyFunSuite with SharedSpark {
     assert(reloaded.read().count() == 5)
   }
 
+  test("abandonBranch defers a staged group dir younger than the commit-lease grace") {
+    val wh = tmpWarehouse()
+    val t = ManagedTable.create(spark, wh, "youngb", schema, Seq("id"))
+    t.append(rows((1, "a", "c", 1L)))
+    t.stageAppend(rows((2, "b", "c", 2L)), "wip")
+    val fs = TableMeta.fs(spark.sparkContext.hadoopConfiguration, wh)
+    val branchManifest = fs.listStatus(new org.apache.hadoop.fs.Path(s"$wh/youngb/manifests"))
+      .map(_.getPath).filter(_.getName.startsWith("branch=wip")).head
+    val staged = Manifest.read(fs, branchManifest).get
+      .map(e => new org.apache.hadoop.fs.Path(s"$wh/youngb", e.path))
+    assert(staged.nonEmpty && staged.forall(fs.exists))
+    // default grace (5 minutes): the just-written dirs could be a
+    // concurrent writer's, so abandoning the branch must not delete them
+    t.abandonBranch("wip")
+    assert(staged.forall(fs.exists), "a staged dir younger than the grace was deleted")
+    assert(t.read().count() == 1)
+    // the deferred dirs are retried by this handle's next commit, which
+    // retires them once they are older than the grace
+    t.setProperties(Map("commit.lock-grace-ms" -> "0"))
+    t.append(rows((3, "c", "c", 3L)))
+    assert(!staged.exists(fs.exists), "deferred staged dirs must be retired later")
+    assert(t.read().count() == 2)
+  }
+
   test("branch accumulation: createBranch + stageAppendInto generations, reload, debris swept") {
     val wh = tmpWarehouse()
     val t = ManagedTable.create(spark, wh, "wacc", schema, Seq("id"))
