@@ -22,9 +22,12 @@ import org.apache.spark.sql.types.StringType
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // SQL identity for managed tables: SELECT * FROM graft.<table>
-    // (+ $files/$snapshots/$refs/$changes/$v<N> suffixes) against
-    // spark.graft.warehouse — see [[graft.plans.ResolveGraftTables]].
+    // SQL identity for managed tables against spark.graft.warehouse:
+    // a `graft.<table>` read IS the DSv2 table — the rule loads it
+    // through [[graft.catalog.GraftCatalog]] (suffixes $v<N>, $branch_<b>,
+    // $files, … included), so no catalog registration is needed; it also
+    // resolves $changes, persisted views and SQL DML — see
+    // [[graft.plans.ResolveGraftTables]].
     ext.injectResolutionRule(session => new graft.plans.ResolveGraftTables(session))
     // SQL DDL: CREATE/DROP TABLE graft.<t>, ALTER TABLE graft.<t>
     // ADD/DROP/RENAME COLUMN(S) + SET TBLPROPERTIES — rewritten at the
@@ -34,8 +37,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectParser((session, delegate) =>
       new graft.plans.GraftSqlParser(session, delegate))
     // manifest-answered min/max/count for the DataFrame-API spelling over
-    // V1 graft-table relations (the SQL spelling is handled at the parser
-    // seam) — see [[graft.plans.ManifestAggOnV1]].
+    // V1 graft-table relations (SQL reads answer through the V2 scan
+    // builder) — see [[graft.plans.ManifestAggOnV1]].
     ext.injectOptimizerRule(session => new graft.plans.ManifestAggOnV1(session))
 
     ext.injectFunction((

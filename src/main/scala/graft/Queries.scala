@@ -929,6 +929,12 @@ object Queries {
   private def v2PlannedGroups(df: DataFrame): Int =
     graft.catalog.GraftScan.servedGroupDirs(df)
 
+  /** A V2 manifest answer: a LocalTableScan with no BatchScan left. */
+  private def v2LocalOnly(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.executedPlan.toString
+    plan.contains("LocalTableScan") && !plan.contains("BatchScan")
+  }
+
   /** Pushed LIMIT through the DSv2 catalog (round 11,
     * [[graft.catalog.GraftScanBuilder.pushLimit]]): `LIMIT n` over a
     * keyless all-data table plans only enough manifest groups to cover n
@@ -1581,22 +1587,13 @@ object Queries {
     Some("""SELECT DISTINCT 'o_orderpriority=' || o_orderpriority AS partition
       |FROM orders""".stripMargin))
 
-  /** Manifest-answered SQL aggregates under the oracle
-    * ([[graft.plans.ResolveGraftDdl]]): `count(*)` / `min` / `max` over
-    * an all-data graft table answer from the manifest's row counts and
-    * column bounds — LocalRelation plans, ZERO file scans (the
-    * Iceberg snapshot-summary answer: milliseconds instead of a 100 TB
-    * scan). The query function REQUIRES the scan-free plan shape at
-    * runtime, so this row fails if the rewrite ever stops firing, and
-    * the DuckDB oracle pins the VALUES against the raw parquet.
-    */
-  /** SQL-seam LIMIT / ORDER-BY-LIMIT group truncation (round 11,
-    * [[graft.plans.ResolveGraftTables]]'s analysis-time rewrite over
-    * [[graft.tables.StatsPrune]] — the SAME rules the V2 scan pushes,
-    * spelled as `SELECT … FROM graft.t ORDER BY k LIMIT n`): on a
-    * key-clustered 4-commit table the top-N reads only the boundary
-    * group and a bare LIMIT reads only the covering prefix, both
-    * runtime-asserted via inputFiles against the full read. Sort/Limit
+  /** SQL-surface LIMIT / ORDER-BY-LIMIT group truncation (round 11):
+    * `SELECT … FROM graft.t ORDER BY k LIMIT n` reads the DSv2 table, so
+    * the limit and top-N push into [[graft.catalog.GraftScanBuilder]]
+    * ([[graft.tables.StatsPrune]]'s rules). On a key-clustered 4-commit
+    * table the top-N reads only the boundary group and a bare LIMIT
+    * reads only the covering prefix, both runtime-asserted via the
+    * served manifest groups against the full read. Sort/Limit
     * stay in the plan, so the unique sort key makes the result exact
     * and deterministic for the oracle hash.
     */
@@ -1616,12 +1613,12 @@ object Queries {
       withGraftSession(s, wh) { s2 =>
         val full = s2.sql("SELECT o_orderkey FROM graft.orders_lt")
         val lim = s2.sql("SELECT o_orderkey FROM graft.orders_lt LIMIT 100")
-        require(lim.inputFiles.length < full.inputFiles.length,
-          "SQL LIMIT must read a strict subset of files")
+        require(v2PlannedGroups(lim) < v2PlannedGroups(full),
+          "SQL LIMIT must read a strict subset of groups")
         val topn = s2.sql("SELECT o_orderkey, o_totalprice FROM graft.orders_lt " +
           "ORDER BY o_orderkey LIMIT 100")
         if (firstChunk >= 100L)
-          require(topn.inputFiles.length < full.inputFiles.length,
+          require(v2PlannedGroups(topn) < v2PlannedGroups(full),
             "SQL top-N must read only the boundary group")
         topn
       }
@@ -1629,6 +1626,16 @@ object Queries {
     Some("""SELECT o_orderkey, o_totalprice FROM orders
       |ORDER BY o_orderkey LIMIT 100""".stripMargin))
 
+  /** Manifest-answered SQL aggregates under the oracle: `count(*)` /
+    * `min` / `max` over an all-data graft table answer from the
+    * manifest's row counts and column bounds — the V2 scan builder's
+    * pushed aggregate (a LocalTableScan) for `graft.<t>` SQL, a
+    * LocalRelation for the V1 source — ZERO file scans (the Iceberg
+    * snapshot-summary answer: milliseconds instead of a 100 TB scan).
+    * The query function REQUIRES the scan-free plan shapes at runtime,
+    * so this row fails if the answer ever stops firing, and the DuckDB
+    * oracle pins the VALUES against the raw parquet.
+    */
   val sqlManifestAgg = Q("sql_manifest_agg",
     (s, dir) => {
       val wh = java.nio.file.Files.createTempDirectory("graft_sqlma").toString
@@ -1651,12 +1658,13 @@ object Queries {
               org.apache.spark.sql.functions.lit(1)).as("n_rows"),
             org.apache.spark.sql.functions.min("o_orderkey").as("min_key"),
             org.apache.spark.sql.functions.max("o_orderkey").as("max_key"))
-        Seq(sqlAnswer, v1).foreach { d =>
-          require(d.queryExecution.optimizedPlan.collectLeaves().forall(
-            _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
-            "manifest-answered aggregate did not produce a scan-free plan:\n" +
-              d.queryExecution.optimizedPlan)
-        }
+        require(v2LocalOnly(sqlAnswer),
+          "manifest-answered SQL aggregate did not produce a scan-free plan:\n" +
+            sqlAnswer.queryExecution.executedPlan)
+        require(v1.queryExecution.optimizedPlan.collectLeaves().forall(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
+          "manifest-answered V1 aggregate did not produce a scan-free plan:\n" +
+            v1.queryExecution.optimizedPlan)
         require(v1.collect().toSeq == sqlAnswer.collect().toSeq,
           "V1 and SQL manifest-agg answers diverged")
         sqlAnswer
@@ -1667,10 +1675,10 @@ object Queries {
       |FROM orders""".stripMargin))
 
   /** Partition-GROUPED manifest aggregates under the oracle (round 10,
-    * [[graft.plans.ResolveGraftDdl]] / [[graft.plans.ManifestAggOnV1]]):
+    * [[graft.catalog.GraftScanBuilder]] / [[graft.plans.ManifestAggOnV1]]):
     * `GROUP BY <identity partition source>` with count/min/max answered
     * from per-entry row counts and column bounds — the Iceberg
-    * partitions-metadata-table rollup, LocalRelation plan, ZERO file
+    * partitions-metadata-table rollup, a scan-free plan with ZERO file
     * scans even though the table was appended in TWO batches (multiple
     * entries per tuple fold). Runtime-asserts the scan-free shape for
     * BOTH the SQL and the V1 DataFrame spellings and their value parity;
@@ -1696,12 +1704,13 @@ object Queries {
           .groupBy(col("o_orderpriority"))
           .agg(count(org.apache.spark.sql.functions.lit(1)).as("n_rows"),
             min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
-        Seq(bySql, byV1).foreach { d =>
-          require(d.queryExecution.optimizedPlan.collectLeaves().forall(
-            _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
-            "grouped manifest aggregate did not produce a scan-free plan:\n" +
-              d.queryExecution.optimizedPlan)
-        }
+        require(v2LocalOnly(bySql),
+          "grouped manifest SQL aggregate did not produce a scan-free plan:\n" +
+            bySql.queryExecution.executedPlan)
+        require(byV1.queryExecution.optimizedPlan.collectLeaves().forall(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
+          "grouped manifest V1 aggregate did not produce a scan-free plan:\n" +
+            byV1.queryExecution.optimizedPlan)
         require(bySql.collect().map(_.toSeq).toSet ==
           byV1.collect().map(_.toSeq).toSet,
           "SQL and V1 grouped manifest-agg answers diverged")
@@ -1717,7 +1726,7 @@ object Queries {
     * appended in TWO key-chunked batches so every file group carries
     * tight key bounds alongside its status tuple. The audit query
     * conjoins a status IN list with a key range; runtime-asserts the
-    * plan opens strictly fewer files than the full scan AND than either
+    * plan serves strictly fewer groups than the full scan AND than either
     * conjunct alone (the candidate-set intersection is real, not just
     * one predicate winning), then the oracle checks the rows. The key
     * midpoint is data-derived on both sides ((min+max)/2 — BIGINT
@@ -1737,11 +1746,11 @@ object Queries {
         def q(where: String) = s2.sql(
           s"""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderpriority
              |FROM graft.orders_pc WHERE $where""".stripMargin)
-        val all = s2.sql("SELECT * FROM graft.orders_pc").inputFiles.length
-        val fIn = q("o_orderstatus IN ('F', 'P')").inputFiles.length
-        val fRange = q(s"o_orderkey <= $mid").inputFiles.length
+        val all = v2PlannedGroups(s2.sql("SELECT * FROM graft.orders_pc"))
+        val fIn = v2PlannedGroups(q("o_orderstatus IN ('F', 'P')"))
+        val fRange = v2PlannedGroups(q(s"o_orderkey <= $mid"))
         val conj = q(s"o_orderstatus IN ('F', 'P') AND o_orderkey <= $mid")
-        val fConj = conj.inputFiles.length
+        val fConj = v2PlannedGroups(conj)
         require(fIn < all && fRange < all,
           s"single-conjunct pruning lost: in=$fIn range=$fRange all=$all")
         require(fConj < fIn && fConj < fRange,

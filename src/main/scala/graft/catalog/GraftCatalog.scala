@@ -30,6 +30,13 @@ import graft.tables.{ManagedTable, TableMeta}
   * (docs/iceberg.md catalog configuration); graft re-expresses it over
   * the manifest layer.
   *
+  * It is also the ONE read path of the graft SQL surface: with
+  * [[graft.GraftExtensions]] installed, `graft.<table>` reads resolve to
+  * this catalog's tables over `spark.graft.warehouse`
+  * ([[GraftCatalog.forWarehouse]]), no registration needed. The
+  * identifier suffix grammar (`$v<N>`, `$branch_<b>`, `$files`, …) lives
+  * here, so both spellings accept it.
+  *
   * Also a [[FunctionCatalog]]: Catalyst resolves the reported `bucket`
   * transform through [[GraftBucketFunction]], whose semantics equal the
   * write path's `pmod(hash(col), n)` — identical to Spark's own
@@ -58,7 +65,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
 
   override def name(): String = catalogName
 
-  private def spark: SparkSession = SparkSession.active
+  // set by [[GraftCatalog.forWarehouse]]; a registered catalog serves
+  // the active session
+  private var session: Option[SparkSession] = None
+
+  private def spark: SparkSession = session.getOrElse(SparkSession.active)
 
   /** Tables live flat under the warehouse: `<catalog>.<t>` and
     * `<catalog>.default.<t>` name the same table.
@@ -81,18 +92,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       .getOrElse(throw new NoSuchTableException(ident))
   }
 
-  /** Plain resolution adjudicates `spark.wap.branch` exactly like the
-    * graft SQL surface: with the conf naming a LIVE branch of this table,
-    * the read serves the branch's staged view; an absent branch falls
-    * back to live. A V2 read and a graft SQL read in one session must
-    * never disagree. Metadata tables resolve under BOTH spellings —
-    * `<cat>.t$files` (the graft SQL surface's) and `<cat>.t.files`
-    * (Iceberg's nested form) — for `files`/`partitions`/`snapshots`/
-    * `refs`, as read-only driver-local scans (manifest-scale, zero file
-    * reads); like the SQL surface they describe the LIVE table.
+  /** Plain resolution adjudicates `spark.wap.branch` like the SQL
+    * writes do: with the conf naming a LIVE branch of this table, the
+    * read serves the branch's staged view; an absent branch falls back to
+    * live. Metadata tables resolve under BOTH spellings — `<cat>.t$files`
+    * and `<cat>.t.files` (Iceberg's nested form) — for `files`/
+    * `partitions`/`snapshots`/`refs`, as read-only driver-local scans
+    * (manifest-scale, zero file reads) describing the LIVE table.
     */
   override def loadTable(ident: Identifier): Table =
-    metadataTable(ident).getOrElse {
+    metadataTable(ident).orElse(refTable(ident)).getOrElse {
       val t = managed(ident)
       val wap = spark.conf.getOption("spark.wap.branch").filter(_.nonEmpty)
         .filter(b => t.branches().contains(b))
@@ -129,6 +138,28 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     }
   }
 
+  private val VersionSuffix = """v(\d{1,17})""".r
+
+  /** `t$v<N>` (snapshot N) and `t$branch_<b>` (branch b's staged view):
+    * the identifier spellings of `VERSION AS OF`, read-only like it. A
+    * name that is not a live branch, or a malformed suffix, is no table;
+    * a version no longer retained fails listing why.
+    */
+  private def refTable(ident: Identifier): Option[Table] = {
+    val dollar = ident.name.indexOf('$')
+    if (dollar <= 0) return None
+    val base = Identifier.of(ident.namespace, ident.name.substring(0, dollar))
+    ident.name.substring(dollar + 1) match {
+      case VersionSuffix(v) => Some(loadTable(base, v.toLong.toString))
+      case b if b.startsWith("branch_") =>
+        val t = managed(base)
+        val branch = b.stripPrefix("branch_")
+        if (!t.branches().contains(branch)) throw new NoSuchTableException(ident)
+        Some(new GraftV2Table(t, Some(branch)))
+      case _ => None
+    }
+  }
+
   /** `VERSION AS OF '<ref>'` — snapshot number, tag or branch; resolved
     * eagerly so an unknown ref fails at analysis listing the live refs.
     */
@@ -139,8 +170,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
   }
 
   /** `TIMESTAMP AS OF` — micros since epoch (Spark's V2 contract); reads
-    * the last snapshot committed at or before it, like the SQL surface's
-    * `readAsOf`.
+    * the last snapshot committed at or before it, like
+    * [[ManagedTable.readAsOf]].
     */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val t = managed(ident)
@@ -324,6 +355,17 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
 }
 
 object GraftCatalog {
+  /** The catalog the `graft.<t>` SQL surface of `session` reads through:
+    * named `graft`, over warehouse `wh`. Unregistered: Spark reaches it
+    * through the relations it resolves, never by name.
+    */
+  def forWarehouse(session: SparkSession, wh: String): GraftCatalog = {
+    val c = new GraftCatalog
+    c.initialize("graft", new CaseInsensitiveStringMap(Map("warehouse" -> wh).asJava))
+    c.session = Some(session)
+    c
+  }
+
   /** Same key-constraint property the graft SQL CREATE surface uses. */
   val IdsProp = "graft.identifier-fields"
 

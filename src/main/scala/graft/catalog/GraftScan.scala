@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInterna
 import org.apache.spark.sql.connector.expressions.{Expressions, Expression => V2Expression}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
-import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -117,10 +118,10 @@ final class GraftScanBuilder(t: ManagedTable, pinnedRef: Option[String] = None,
     }
   }
 
-  /** Manifest-answered aggregates through the V2 seam — the third
-    * spelling of what `SELECT count(*)/min/max FROM graft.t` and the V1
-    * `df.agg(...)` already collapse to: when every live group is plain
-    * data carrying the needed stats, the aggregate answers from ONE
+  /** Manifest-answered aggregates — what `SELECT count(*)/min/max` over
+    * `graft.t` or `<cat>.t` collapses to (the V1 `df.agg(...)` gets the
+    * same from [[graft.plans.ManifestAggOnV1]]): when every live group is
+    * plain data carrying the needed stats, the aggregate answers from ONE
     * manifest read as a [[LocalScan]] — zero file scans on a 100 TB
     * table. The table layer's exactness gates (MoR states, branch views,
     * bound-less or pre-evolution columns, non-round-tripping tuples)
@@ -503,8 +504,7 @@ object GraftScan {
 
   /** A pushed `ORDER BY col LIMIT n` (first sort key only — dominance is
     * STRICT, so later sort keys never adjudicate a dropped group).
-    * Truncation logic lives in [[graft.tables.StatsPrune]] — ONE
-    * implementation shared with the SQL surface's analysis-time rewrite.
+    * Truncation logic lives in [[graft.tables.StatsPrune]].
     */
   final case class TopNHint(col: String, asc: Boolean, nullsFirst: Boolean, n: Int)
 
@@ -663,9 +663,9 @@ object GraftScan {
                             exactRegion: Seq[(String, Set[String])] = Seq.empty): Planned = {
     val name = t.name
     val keyed = t.meta.identifierFields.nonEmpty
-    require(t.v2Format == "parquet",
+    require(fileFormats.contains(t.v2Format),
       s"graft V2 catalog: table $name stores ${t.v2Format} groups — the V2 read " +
-        "path is parquet-only; read via the graft SQL surface")
+        s"path reads ${fileFormats.keys.toSeq.sorted.mkString("/")}; read via ManagedTable.read()")
     // Multi-epoch KEYED tables (round 11): cross-epoch delete scopes are
     // GLOBAL on identifiers (a new-epoch delete hides old-epoch rows in
     // other tuples), so per-split MoR locality needs help — each split
@@ -687,7 +687,7 @@ object GraftScan {
     require(!t.meta.identifierFields.exists(i =>
         aliases.contains(i) || defaults.contains(i)),
       s"graft V2 catalog: table $name has rename lineage / an initial default " +
-        "on an IDENTIFIER column — read via the graft SQL surface, which folds " +
+        "on an IDENTIFIER column — read via ManagedTable.read(), which folds " +
         "them before delete resolution")
 
     val snapshot0 = entriesOverride.getOrElse(
@@ -737,15 +737,16 @@ object GraftScan {
     // delete-source file lists, and chunked splits share delete/posdel
     // groups — one lookup per group dir, not per use
     val fileCache = scala.collection.mutable.HashMap.empty[String, Array[GFile]]
+    val suffix = "." + t.v2Format
     def filesOf(e: ManifestEntry): Array[GFile] =
       fileCache.getOrElseUpdate(e.path, {
         val dir = new Path(t.v2TableDir, e.path)
         if (e.files.nonEmpty)
-          e.files.iterator.filter(_.name.endsWith(".parquet"))
+          e.files.iterator.filter(_.name.endsWith(suffix))
             .map(f => GFile(new Path(dir, f.name).toString, f.bytes, e.seq))
             .toArray
         else fs.listStatus(dir).collect {
-          case s if s.isFile && s.getPath.getName.endsWith(".parquet") &&
+          case s if s.isFile && s.getPath.getName.endsWith(suffix) &&
               !s.getPath.getName.startsWith(".") && !s.getPath.getName.startsWith("_") =>
             GFile(s.getPath.toString, s.getLen, e.seq)
         }
@@ -980,7 +981,7 @@ object GraftScan {
         }
       }
     val delSchema = StructType(ids.map(n => dataSchema(n)) :+ dataSchema(SeqCol))
-    val fmt = new ParquetFileFormat()
+    val fmt = fileFormats(t.v2Format)()
     // row-based output: the vectorized reader still runs inside, yielding
     // rows — the reader loop consumes one row at a time. Each build gets
     // its OWN hadoop conf: the builder writes its requested schema into
@@ -997,7 +998,7 @@ object GraftScan {
     // unfiltered reader: skipping breaks the running-ordinal = row-index
     // identity the (file, pos) pairs address.
     val dataReaderF =
-      if (parquetFilters.isEmpty) null
+      if (parquetFilters.isEmpty || t.v2Format != "parquet") null
       else fmt.buildReaderWithPartitionValues(spark, dataSchema,
         new StructType(), matSchema, parquetFilters.toIndexedSeq, opts,
         spark.sessionState.newHadoopConf())
@@ -1013,6 +1014,14 @@ object GraftScan {
       required.fields.map(_.dataType), aliasIdxs, defaultVals, dataReaderF,
       t.v2EpochBoundaries)
   }
+
+  /** Group file formats the reader opens (`write.format-default`): by-name
+    * projection and in-file row order, which the (file, pos) posdel pairs
+    * address, hold for both.
+    */
+  private val fileFormats: Map[String, () => FileFormat] = Map(
+    "parquet" -> (() => new ParquetFileFormat()),
+    "orc"     -> (() => new OrcFileFormat()))
 
   private[catalog] def keyTypeSupported(dt: DataType): Boolean = dt match {
     case StringType | IntegerType | LongType | ShortType | ByteType |
@@ -1359,21 +1368,28 @@ object GraftPartitionReader {
     * would achieve the same sharing but pulls every delete row through
     * the driver (§5: the driver should do no data work); executor-local
     * sharing costs at most one build per executor instead. SoftReferences
-    * let memory pressure reclaim; the crude size bound caps the key set.
-    * Cross-run reuse is impossible by construction — keys embed absolute
-    * group paths, which are freshly minted uuid dirs per table write.
+    * let memory pressure reclaim; past [[MaxStateKeys]] keys the least
+    * recently used key is evicted, so a hot tuple's state survives a scan
+    * of many cold ones. Cross-run reuse is impossible by construction —
+    * keys embed absolute group paths, which are freshly minted uuid dirs
+    * per table write.
     */
+  private[catalog] val MaxStateKeys = 64
+
   private val stateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.ref.SoftReference[AnyRef]]()
+    new java.util.LinkedHashMap[String, java.lang.ref.SoftReference[AnyRef]](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, java.lang.ref.SoftReference[AnyRef]]): Boolean =
+        size() > MaxStateKeys
+    }
 
   private[catalog] def sharedState[A <: AnyRef](key: String)(build: => A): A = {
-    val ref = stateCache.get(key)
+    val ref = stateCache.synchronized(stateCache.get(key)) // a hit refreshes recency
     val hit = if (ref != null) ref.get() else null
     if (hit != null) hit.asInstanceOf[A]
     else {
       val v = build // racy double-build is idempotent; last put wins
-      if (stateCache.size > 64) stateCache.clear()
-      stateCache.put(key, new java.lang.ref.SoftReference[AnyRef](v))
+      stateCache.synchronized(stateCache.put(key, new java.lang.ref.SoftReference[AnyRef](v)))
       v
     }
   }

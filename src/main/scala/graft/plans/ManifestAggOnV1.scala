@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.{DataType, StructField}
   * is exactly a `format("graft-table")` relation (possibly under a pure
   * column projection) collapses to a LocalRelation built from the
   * manifest's row counts and column bounds — ZERO file scans, matching
-  * what `SELECT min(c) FROM graft.t` already does at the parser seam
-  * ([[ResolveGraftDdl]]). On a 100 TB table that is milliseconds instead
+  * what `SELECT min(c) FROM graft.t` gets from the V2 scan builder's
+  * pushed aggregate ([[graft.catalog.GraftScanBuilder]]). On a 100 TB table that is milliseconds instead
   * of a full-table job for the `df.agg(...)` spelling of the same
   * question.
   *
@@ -143,8 +143,8 @@ class ManifestAggOnV1(session: SparkSession) extends Rule[LogicalPlan] {
 object ManifestAggOnV1 {
   /** Stats-domain value (i→Long, f→Double, s→String) → the column's
     * Catalyst-INTERNAL value through Catalyst's own cast — shared by the
-    * SQL parser seam ([[ResolveGraftDdl]]) and the V1 plan rule so both
-    * spellings of `min(c)` materialize identically.
+    * V2 scan builder and the V1 plan rule so both spellings of `min(c)`
+    * materialize identically.
     */
   def statsToColumn(raw: Any, dt: DataType, session: SparkSession): Any = {
     val normalized = raw match {

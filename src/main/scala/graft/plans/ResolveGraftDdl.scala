@@ -32,51 +32,7 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
 
   private val IdsProp = "graft.identifier-fields"
 
-  /** The read-side rule, for the shared pruned-scan machinery
-    * ([[ResolveGraftTables.prunedTimeTravel]]).
-    */
-  private lazy val tables = new ResolveGraftTables(session)
-
-  /** Aggregate/Project nodes whose PARENT still needs their shape: a
-    * HAVING clause resolves against the child Aggregate (replacing it
-    * with a LocalRelation would strand the aggregate condition in a
-    * plain Filter and fail analysis), and an ORDER BY carrying any
-    * function call may need the analyzer to push it INTO the aggregate.
-    * The manifest-answer rewrites below must not fire on these — falling
-    * through to the real plan is always correct, just unoptimized.
-    * Identity-based: the same textual subtree elsewhere is unaffected.
-    */
-  private def havingGuarded(plan: LogicalPlan): java.util.Set[LogicalPlan] = {
-    val s = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean]())
-    plan.foreach {
-      case h: org.apache.spark.sql.catalyst.analysis.UnresolvedHaving =>
-        s.add(h.child)
-      case so: org.apache.spark.sql.catalyst.plans.logical.Sort
-          if so.order.exists(_.exists(
-            _.isInstanceOf[org.apache.spark.sql.catalyst.analysis.UnresolvedFunction])) =>
-        s.add(so.child)
-      case _ => ()
-    }
-    s
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val guarded = havingGuarded(plan)
-    applyRules(plan, guarded)
-  }
-
-  private def applyRules(plan: LogicalPlan,
-                         guarded: java.util.Set[LogicalPlan]): LogicalPlan =
-    plan.resolveOperatorsDown {
-    // filtered version-ref reads prune against the pinned manifest
-    // (round 9); falling through unchanged lets the recursion resolve
-    // the child via the bare RelationTimeTravel case below
-    case f @ org.apache.spark.sql.catalyst.plans.logical.Filter(cond,
-        tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel) =>
-      tables.prunedTimeTravel(cond, tt).getOrElse(f)
-    case tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel =>
-      timeTravel(tt).getOrElse(tt)
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsDown {
     case st: org.apache.spark.sql.catalyst.plans.logical.ShowTables =>
       showTables(st).getOrElse(st)
     case d: org.apache.spark.sql.catalyst.plans.logical.DescribeRelation =>
@@ -85,51 +41,6 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
       showCreateTable(sc).getOrElse(sc)
     case sp: org.apache.spark.sql.catalyst.plans.logical.ShowPartitions =>
       showPartitions(sp).getOrElse(sp)
-    // `SELECT count(*)/min(c)/max(c) FROM graft.t` answered from the
-    // MANIFEST when exact (all-data-kind groups with recorded row counts
-    // / column bounds) — Iceberg's snapshot-summary / manifest-bounds
-    // answers: milliseconds instead of a 100 TB scan. MoR tables (hidden
-    // rows) and bound-less columns fall through to the real plan.
-    // Snapshot-at-statement semantics, BY DESIGN: the value is pinned
-    // when the statement is planned, exactly like every `graft.t`
-    // relation ([[ResolveGraftTables]] resolves to `t.read()`'s analyzed
-    // plan, whose manifest was read at resolution — the Iceberg scan-
-    // plans-pin-a-snapshot model). A retained DataFrame re-collected
-    // after later commits returns the planned snapshot on BOTH paths;
-    // re-issue `spark.sql(...)` to observe new commits.
-    case p @ Project(projs, GraftAggSource(name, ref))
-        if !guarded.contains(p) && projs.nonEmpty &&
-          projs.forall(manifestAggOf(_).isDefined) =>
-      session.conf.getOption("spark.graft.warehouse")
-        .flatMap(wh => ManagedTable.load(session, wh, name))
-        // an active spark.wap.branch routes plain READS of this table to
-        // the branch's staged view (ResolveGraftTables) — the manifest
-        // answer reads the LIVE snapshot and would silently disagree
-        // with SELECT *; fall through to the real (branch) plan. An
-        // EXPLICIT ref read is unaffected by wap (round 10) — the table
-        // layer refuses branch-name refs itself.
-        .filterNot(t => ref.isEmpty && session.conf.getOption("spark.wap.branch")
-          .filter(_.nonEmpty).exists(t.branches().contains))
-        .flatMap(manifestAnswer(_, projs.map(manifestAggOf(_).get), ref))
-        .getOrElse(p)
-    // `SELECT day, …, count(*)/min(c)/max(c) FROM graft.t GROUP BY day, …`
-    // where every grouping column is an identity partition source:
-    // per-tuple answers from per-entry row counts and bounds (the Iceberg
-    // partitions-metadata-table rollup) — same exactness gates and
-    // snapshot-at-statement semantics as the bare aggregate above; see
-    // [[ManagedTable.manifestGroupedAgg]].
-    case agg: org.apache.spark.sql.catalyst.plans.logical.Aggregate
-        if !guarded.contains(agg) &&
-          GraftAggSource.unapply(agg.child).isDefined &&
-          agg.groupingExpressions.nonEmpty &&
-          agg.groupingExpressions.forall {
-            case g: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-              g.nameParts.length == 1
-            case _ => false
-          } => {
-      val (name, ref) = GraftAggSource.unapply(agg.child).get
-      groupedManifestAnswer(agg, name, ref).getOrElse(agg)
-    }
     case c @ CreateTable(UnresolvedIdentifier(Seq(g, name), _), columns,
         partitioning, spec: UnresolvedTableSpec, ifNotExists)
         if g.equalsIgnoreCase("graft") =>
@@ -915,209 +826,6 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
           }
         }
       }
-    case _ => None
-  }
-
-  /** A plan a manifest aggregate may answer over: (table name, pinned
-    * ref) — the bare `graft.t` relation (ref None) or `graft.t VERSION
-    * AS OF <snapshot-or-tag>` over it (round 10; timestamps and branch
-    * refs fall through — the former need version resolution the scan
-    * already does, the latter are staged views only the scan sees).
-    */
-  private object GraftAggSource {
-    def unapply(p: LogicalPlan): Option[(String, Option[String])] = {
-      def nameOf(r: LogicalPlan): Option[String] = r match {
-        case u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-            if u.multipartIdentifier.length == 2 &&
-              u.multipartIdentifier.head.equalsIgnoreCase("graft") &&
-              !u.multipartIdentifier(1).contains('$') =>
-          Some(u.multipartIdentifier(1))
-        case _ => None
-      }
-      p match {
-        case tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel
-            if tt.timestamp.isEmpty && tt.version.exists(_.nonEmpty) =>
-          nameOf(tt.relation).map(_ -> tt.version)
-        case other => nameOf(other).map(_ -> None)
-      }
-    }
-  }
-
-  /** A manifest-answerable single aggregate: count(*), min(col), or
-    * max(col). (kind, column, output name). */
-  private def manifestAggOf(proj: org.apache.spark.sql.catalyst.expressions.NamedExpression)
-      : Option[(String, Option[String], String)] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute, UnresolvedFunction, UnresolvedStar}
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal}
-    def parse(e: Expression): Option[(String, Option[String], String)] = e match {
-      case UnresolvedFunction(Seq(fn), args, false, None, false, Nil, false) =>
-        (fn.toLowerCase, args) match {
-          case ("count", Seq(Literal(1, _)))     => Some(("count", None, "count(1)"))
-          case ("count", Seq(_: UnresolvedStar)) => Some(("count", None, "count(1)"))
-          case ("min", Seq(a: UnresolvedAttribute)) if a.nameParts.length == 1 =>
-            Some(("min", Some(a.nameParts.head), s"min(${a.nameParts.head})"))
-          case ("max", Seq(a: UnresolvedAttribute)) if a.nameParts.length == 1 =>
-            Some(("max", Some(a.nameParts.head), s"max(${a.nameParts.head})"))
-          case _ => None
-        }
-      case _ => None
-    }
-    proj match {
-      case a @ Alias(child, _)       => parse(child).map { case (k, c, _) => (k, c, a.name) }
-      case UnresolvedAlias(child, _) => parse(child)
-      case _                         => None
-    }
-  }
-
-  /** The GROUP-BY-partition-source form of [[manifestAnswer]]: every
-    * output must be one of the grouping attributes (pass-through) or a
-    * manifest-answerable aggregate ([[manifestAggOf]]); one row per live
-    * tuple combination. Unresolvable shapes fall through to the real
-    * plan.
-    */
-  private def groupedManifestAnswer(
-      agg: org.apache.spark.sql.catalyst.plans.logical.Aggregate,
-      name: String, ref: Option[String] = None): Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute}
-    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, Literal}
-    val gNames = agg.groupingExpressions
-      .map(_.asInstanceOf[UnresolvedAttribute].nameParts.head)
-    if (gNames.map(_.toLowerCase(java.util.Locale.ROOT)).distinct.length !=
-        gNames.length) return None
-    def gIdx(parts: Seq[String]): Option[Int] =
-      if (parts.length != 1) None
-      else Some(gNames.indexWhere(_.equalsIgnoreCase(parts.head))).filter(_ >= 0)
-    session.conf.getOption("spark.graft.warehouse")
-      .flatMap(wh => ManagedTable.load(session, wh, name))
-      // same wap-branch fall-through as the bare-aggregate case: the
-      // manifest answer reads LIVE and must not disagree with SELECT *
-      // (explicit ref reads are unaffected by wap)
-      .filterNot(t => ref.isEmpty && session.conf.getOption("spark.wap.branch")
-        .filter(_.nonEmpty).exists(t.branches().contains))
-      .flatMap { t =>
-        def fieldOf(n: String) =
-          t.meta.schema.fields.find(_.name.equalsIgnoreCase(n))
-        // Left((groupIdx, outputName)) = grouping passthrough; Right(want)
-        val outs = agg.aggregateExpressions.map {
-          case a: UnresolvedAttribute =>
-            gIdx(a.nameParts).map(i => Left((i, a.nameParts.head)))
-          case al @ Alias(a: UnresolvedAttribute, _) =>
-            gIdx(a.nameParts).map(i => Left((i, al.name)))
-          case UnresolvedAlias(a: UnresolvedAttribute, _) =>
-            gIdx(a.nameParts).map(i => Left((i, a.nameParts.head)))
-          case e => manifestAggOf(e).map(Right(_))
-        }
-        if (!outs.forall(_.isDefined)) None
-        else {
-          val flat = outs.map(_.get)
-          val wants = flat.collect { case Right((k, c, _)) => (k, c) }
-          val wantFields = wants.map { case (_, c) => c.map(fieldOf) }
-          val gFields = gNames.map(fieldOf)
-          if (wantFields.exists(_.exists(_.isEmpty)) || gFields.exists(_.isEmpty)) None
-          else {
-            val gfs = gFields.map(_.get)
-            val resolved = wants.zip(wantFields).map { case ((k, _), f) =>
-              (k, f.flatten.map(_.name))
-            }
-            t.manifestGroupedAgg(gfs.map(_.name), resolved, ref).map { rows =>
-              val tz = session.sessionState.conf.sessionLocalTimeZone
-              val attrs = flat.map {
-                case Left((i, n)) =>
-                  AttributeReference(n, gfs(i).dataType, nullable = true)()
-                case Right(("count", _, n)) =>
-                  AttributeReference(n, org.apache.spark.sql.types.LongType,
-                    nullable = false)()
-                case Right((_, Some(c), n)) =>
-                  AttributeReference(n, fieldOf(c).get.dataType, nullable = true)()
-                case Right((k, None, n)) => // unreachable: min/max carry a column
-                  AttributeReference(n, org.apache.spark.sql.types.LongType)()
-              }
-              val data = rows.map { case (tuple, vals) =>
-                val gVals = tuple.zip(gfs).map { case (s, gf) =>
-                  s.map(v => Cast(Literal(v), gf.dataType, Some(tz)).eval(null)).orNull
-                }
-                var i = -1
-                InternalRow.fromSeq(flat.map {
-                  case Left((gi, _)) => gVals(gi)
-                  case Right(("count", _, _)) => i += 1; vals(i)
-                  case Right((_, Some(c), _)) =>
-                    i += 1
-                    ManifestAggOnV1.statsToColumn(vals(i), fieldOf(c).get.dataType, session)
-                  case Right(_) => i += 1; vals(i)
-                })
-              }
-              LocalRelation(attrs, data)
-            }
-          }
-        }
-      }
-  }
-
-  /** One LocalRelation row answering EVERY aggregate in the project list
-    * (round 10: multi-aggregate SELECTs fold in one statement); None if
-    * any single cell is not exactly answerable.
-    */
-  private def manifestAnswer(t: ManagedTable,
-                             aggs: Seq[(String, Option[String], String)],
-                             ref: Option[String] = None): Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    val cells = aggs.map {
-      case ("count", _, name) => t.fastRowCount(ref).map { n =>
-        (AttributeReference(name, org.apache.spark.sql.types.LongType,
-          nullable = false)(), n: Any)
-      }
-      case (kind, Some(colName), name) =>
-        t.meta.schema.fields.find(_.name.equalsIgnoreCase(colName)).flatMap { fld =>
-          t.manifestColExtreme(fld.name, wantMin = kind == "min", ref).map { raw =>
-            // stats domain → the column's type (shared with the V1 plan
-            // rule so both spellings materialize identically)
-            (AttributeReference(name, fld.dataType, nullable = true)(),
-              ManifestAggOnV1.statsToColumn(raw, fld.dataType, session))
-          }
-        }
-      case _ => None
-    }
-    if (cells.exists(_.isEmpty)) None
-    else Some(LocalRelation(cells.map(_.get._1),
-      Seq(InternalRow.fromSeq(cells.map(_.get._2)))))
-  }
-
-  /** SQL time travel — the grammar-level spelling of the `graft.t$v<N>`
-    * identifier suffix and [[ManagedTable.readAsOf]]. Handled at the
-    * parser seam like the DDL: built-in relation resolution fails hard on
-    * a time-travel over an uncataloged identifier before extension rules
-    * would see it.
-    *
-    * `VERSION AS OF` accepts a snapshot number, a TAG name, or a WAP
-    * BRANCH name (round 8, matching Iceberg's ref resolution in time
-    * travel): a non-numeric version string resolves through
-    * [[ManagedTable.tags]] first (tags are immutable pins — the
-    * reproducibility use), then [[ManagedTable.branches]] (the staged
-    * audit view), and an unknown ref fails with the live ref names
-    * rather than Spark's generic unresolved-relation error.
-    */
-  private def timeTravel(tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel)
-      : Option[LogicalPlan] = tt.relation match {
-    case u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-        if u.multipartIdentifier.length == 2 &&
-          u.multipartIdentifier.head.equalsIgnoreCase("graft") &&
-          !u.multipartIdentifier(1).contains('$') =>
-      session.conf.getOption("spark.graft.warehouse")
-        .flatMap(wh => ManagedTable.load(session, wh, u.multipartIdentifier(1)))
-        .flatMap { t =>
-          val df = (tt.version, tt.timestamp) match {
-            case (Some(v), _) if v.nonEmpty => Some(t.readRef(v))
-            case (None, Some(e)) if e.foldable =>
-              val micros = org.apache.spark.sql.catalyst.expressions.Cast(
-                e, org.apache.spark.sql.types.TimestampType,
-                Some(session.sessionState.conf.sessionLocalTimeZone)).eval(null)
-              Option(micros).map(m => t.readAsOf(m.asInstanceOf[Long] / 1000L))
-            case _ => None
-          }
-          df.map(_.queryExecution.analyzed)
-        }
     case _ => None
   }
 

@@ -1,43 +1,46 @@
 package graft.plans
 
+import graft.catalog.GraftCatalog
 import graft.tables.ManagedTable
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, Not, NullsFirst}
-import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, Filter, GlobalLimit, InsertIntoStatement, LocalLimit, LogicalPlan, MergeIntoTable, Project, Sort, SubqueryAlias, UpdateTable}
+import org.apache.spark.sql.catalyst.analysis.{AsOfTimestamp, AsOfVersion, NoSuchTableException, RelationTimeTravel, TimeTravelSpec, UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, Literal, Not}
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, InsertIntoStatement, LogicalPlan, MergeIntoTable, SubqueryAlias, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Analyzer rule giving managed tables a first-class SQL identity:
-  * `SELECT * FROM graft.users` resolves to the table's merge-on-read scan
-  * against `spark.graft.warehouse` — no view pre-registration, always the
-  * current snapshot at query time. This is the Catalyst-native seam the
-  * reference's CDI strategy injection maps to (SURVEY §2.8): injected via
-  * [[graft.GraftExtensions]], the rule rewrites the unresolved relation
-  * into an already-analyzed subplan, so every downstream optimization
-  * (pushdown, pruning, AQE) applies as if the user had written the
-  * DataFrame directly.
+/** Analyzer rule giving managed tables a first-class SQL identity against
+  * `spark.graft.warehouse`, injected via [[graft.GraftExtensions]] (the
+  * Catalyst-native seam the reference's CDI strategy injection maps to,
+  * SURVEY §2.8). A `graft.<t>` READ is the DSv2 table: the rule loads it
+  * through [[GraftCatalog]] and resolves it to the same
+  * `DataSourceV2Relation` a registered `<cat>.<t>` gets, so one scan
+  * builder serves both spellings.
   *
-  * Identifier forms (Iceberg metadata-table style):
-  *  - `graft.<table>`            — current snapshot
+  * Identifier forms (Iceberg metadata-table style), parsed by the
+  * catalog except where noted:
+  *  - `graft.<table>`            — current snapshot (or the staged view
+  *    of a live branch named by `spark.wap.branch`)
   *  - `graft.<table>$v<N>`       — time travel to version N
-  *  - `graft.<table>$files`      — [[ManagedTable.filesMetadata]]
-  *  - `graft.<table>$snapshots`  — [[ManagedTable.snapshotsMetadata]]
-  *  - `graft.<table>$refs`       — [[ManagedTable.refsMetadata]]
-  *  - `graft.<table>$changes`    — full changelog (seq + tombstone cols)
-  *  - `graft.<table>$branch_<b>` — WAP branch audit view (round 8); a
-  *    set `spark.wap.branch` routes plain reads and INSERTs of tables
-  *    carrying that branch the same way
+  *  - `graft.<table>$branch_<b>` — WAP branch audit view
+  *  - `graft.<table>$files` / `$snapshots` / `$refs` / `$partitions`
+  *  - `graft.<table>$changes`    — full changelog (seq + tombstone cols),
+  *    resolved here: a changelog, not a table scan
+  *  - `graft.<view>`             — a persisted view, expanded here
   *
-  * Unknown tables fall through unresolved so Spark's normal error (and
-  * temp-view/catalog resolution for other names) is preserved.
+  * The rule also turns SQL DML over `graft.<t>` into eager
+  * [[GraftDmlCommand]]s. Unknown tables fall through unresolved so
+  * Spark's normal error (and temp-view/catalog resolution for other
+  * names) is preserved.
   */
 class ResolveGraftTables(session: SparkSession) extends Rule[LogicalPlan] {
 
-  // top-down: the Filter case must see its still-unresolved child before
-  // the bare-relation case rewrites it
+  // top-down: DML statements and time travel must see their
+  // still-unresolved relation before the bare-relation case rewrites it
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsDown {
     // ---- SQL DML: the statement nodes Spark's parser produces become
     // eager [[GraftDmlCommand]]s over the ManagedTable row-level DML API
@@ -201,40 +204,13 @@ class ResolveGraftTables(session: SparkSession) extends Rule[LogicalPlan] {
       val GraftTarget(name, tAlias) = m.targetTable: @unchecked
       loadTable(name).map(t => buildMerge(m, t, name, tAlias))
         .getOrElse(refuseIfView(name, "MERGE", m))
-    // `WHERE c = <lit>` directly over a graft relation: resolve to the
-    // MANIFEST-PRUNED scan (column bounds + Bloom filters,
-    // [[ManagedTable.readWhereEq]]) instead of the full scan — the filter
-    // is kept on top (pruning opens a superset of the matching groups),
-    // so semantics are identical and the win is groups never opened. The
-    // planning-time analogue of parquet row-group bloom pruning, one
-    // level up.
-    // `FROM graft.t [ORDER BY c …] LIMIT n` — analysis-time GROUP
-    // truncation, the SQL spelling of the V2 scan's pushed limit/top-N
-    // (ONE shared implementation: [[graft.tables.StatsPrune]]). Only the
-    // RELATION is rewritten to a pruned merge-on-read scan; the
-    // Sort/Project/Limit above are kept verbatim, so semantics never
-    // depend on the truncation, and every ineligible shape (a Filter in
-    // between, MoR states, an active wap branch, missing stats) falls
-    // through to the normal resolution.
-    case gl @ GlobalLimit(Literal(n: Int, org.apache.spark.sql.types.IntegerType),
-        ll @ LocalLimit(_, limChild)) if n > 0 =>
-      truncatedLimitChild(limChild, n)
-        .map(c => gl.copy(child = ll.copy(child = c))).getOrElse(gl)
-    case f @ Filter(cond, u: UnresolvedRelation) if isGraft(u) &&
-        !u.multipartIdentifier(1).contains('$') =>
-      val name = u.multipartIdentifier(1)
-      // manifest pruning scans the LIVE snapshot — under an active
-      // spark.wap.branch the read must see the staged view instead, so
-      // pruning steps aside (correctness over the group-skip win). The
-      // conf check comes FIRST: in the common wap-off case the extra
-      // table load (metadata read + load-time sweep) must not tax every
-      // filtered read.
-      val wapActive = session.conf.getOption("spark.wap.branch")
-        .filter(_.nonEmpty)
-        .exists(b => loadTable(name).exists(_.branches().contains(b)))
-      (if (wapActive) resolve(name)
-       else resolvePruned(name, cond).orElse(resolve(name)))
-        .map(child => Filter(cond, child)).getOrElse(f)
+    // `VERSION AS OF '<ref>'` (snapshot number, tag or branch) and
+    // `TIMESTAMP AS OF <expr>` — the catalog's versioned loads
+    case tt @ RelationTimeTravel(u: UnresolvedRelation, ts, version) if isGraft(u) &&
+        !u.multipartIdentifier(1).contains('$') &&
+        ts.forall(e => e.resolved && e.foldable) =>
+      resolve(u.multipartIdentifier(1),
+        TimeTravelSpec.create(ts, version, conf.sessionLocalTimeZone)).getOrElse(tt)
     case u: UnresolvedRelation if isGraft(u) =>
       resolve(u.multipartIdentifier(1)).getOrElse(u)
   }
@@ -242,34 +218,6 @@ class ResolveGraftTables(session: SparkSession) extends Rule[LogicalPlan] {
   private def isGraft(u: UnresolvedRelation): Boolean =
     u.multipartIdentifier.length == 2 &&
       u.multipartIdentifier.head.equalsIgnoreCase("graft")
-
-  /** `WHERE …` over a `VERSION AS OF '<ref>'` read (round 9): composite
-    * pruning against the PINNED manifest — retained manifests carry the
-    * same bounds/Blooms/tuples, so a time-travel audit query prunes like
-    * a live read instead of paying a full scan. Called from
-    * [[ResolveGraftDdl]] (time travel resolves at the PARSE seam, before
-    * this resolution rule would see the node); None = not a graft
-    * version-ref read or nothing prunable — the caller's plain pinned
-    * resolution takes over.
-    */
-  private[plans] def prunedTimeTravel(cond: Expression,
-      tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel)
-      : Option[LogicalPlan] = tt.relation match {
-    case u: UnresolvedRelation if isGraft(u) &&
-        !u.multipartIdentifier(1).contains('$') && tt.version.exists(_.nonEmpty) =>
-      resolvePruned(u.multipartIdentifier(1), cond, tt.version)
-        .map(child => Filter(cond, child))
-    case _ => None
-  }
-
-  /** The session's `spark.wap.branch` when it names a live branch of
-    * `t` — the branch plain reads of `t` must observe. READS ONLY: an
-    * absent branch falls back to the live snapshot (one session conf
-    * audits just the tables actually staged on).
-    */
-  private def wapBranchOn(t: ManagedTable): Option[String] =
-    session.conf.getOption("spark.wap.branch").filter(_.nonEmpty)
-      .filter(t.branches().contains)
 
   /** The session's `spark.wap.branch` for WRITE routing — writes under
     * the conf ALWAYS target the branch (created on first touch, like
@@ -535,268 +483,34 @@ class ResolveGraftTables(session: SparkSession) extends Rule[LogicalPlan] {
     case other     => Seq(other)
   }
 
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case other     => Seq(other)
-  }
-
-  /** The COMPOSITE pruned scan over every prunable conjunct
-    * ([[ManagedTable.readPrunedConjunction]]): per column, ranges and
-    * equalities fold into one inclusive-bounds conjunct, and candidate
-    * entry sets intersect across conjuncts — bounds ∧ Bloom ∧
-    * partition-tuple per conjunct. The caller keeps the original filter
-    * on top, so pruning only ever opens a superset of the matching
-    * groups.
+  /** A `graft.<t>` read: the SAME DSv2 table `<cat>.<t>` resolves to,
+    * loaded through a [[GraftCatalog]] over the session's CURRENT
+    * `spark.graft.warehouse` (re-read per resolution, so a session may
+    * switch warehouses), so filters, limits, top-N and manifest-answered
+    * aggregates push into one [[graft.catalog.GraftScanBuilder]]. The
+    * catalog owns the suffix grammar (`$v<N>`, `$branch_<b>`, `$files`,
+    * `$snapshots`, `$refs`, `$partitions`) and `spark.wap.branch`
+    * routing. Only the changelog (`$changes`, not a table scan) and
+    * persisted views resolve here.
     */
-  /** Is this projection list PLAIN — only stars and bare column
-    * references? Anything else refuses the LIMIT rewrite: at this
-    * pre-resolution point an expression could still turn out to be a
-    * generator (`explode` parses as an UnresolvedFunction) or a window
-    * function — both non-row-preserving, so a truncated input would
-    * produce wrong output — and an Alias could SHADOW the sort column
-    * (`SELECT name AS ts … ORDER BY ts` sorts by name, not the table's
-    * ts the truncation would prune on).
-    */
-  private def plainProjection(
-      list: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression]): Boolean =
-    list.forall {
-      case _: org.apache.spark.sql.catalyst.analysis.UnresolvedStar => true
-      case _: UnresolvedAttribute => true
-      case _ => false
-    }
-
-  /** The bare `graft.<t>` relation under a LIMIT-eligible shape (through
-    * SubqueryAlias wrappers and PLAIN projections only — any other
-    * operator or expression, e.g. a Filter, an aliasing Project, a
-    * not-yet-resolved generator/window, makes the shape ineligible), or
-    * None.
-    */
-  private def bareGraftUnder(p: LogicalPlan): Option[UnresolvedRelation] = p match {
-    case u: UnresolvedRelation
-        if isGraft(u) && !u.multipartIdentifier(1).contains('$') => Some(u)
-    case SubqueryAlias(_, q)  => bareGraftUnder(q)
-    case Project(list, q) if plainProjection(list) => bareGraftUnder(q)
-    case _                    => None
-  }
-
-  /** Replace the bare relation with `replacement`, keeping every
-    * wrapper [[bareGraftUnder]] admitted (alias references must
-    * survive).
-    */
-  private def swapBareGraft(p: LogicalPlan, replacement: LogicalPlan): LogicalPlan =
-    p match {
-      case _: UnresolvedRelation => replacement
-      case sa @ SubqueryAlias(_, q) => sa.copy(child = swapBareGraft(q, replacement))
-      case pj @ Project(_, q)       => pj.copy(child = swapBareGraft(q, replacement))
-      case other                    => other
-    }
-
-  /** The LIMIT rewrite's child: a Sort on top takes the top-N rule
-    * (first sort key + direction + null ordering; dominance is STRICT
-    * always — see [[graft.tables.StatsPrune.topNTruncate]]), a plain
-    * projection takes the row-count prefix rule. None = ineligible →
-    * normal resolution.
-    */
-  private def truncatedLimitChild(child: LogicalPlan, n: Int): Option[LogicalPlan] = {
-    def loadEligible(u: UnresolvedRelation): Option[ManagedTable] =
-      loadTable(u.multipartIdentifier(1)).filter(t => wapBranchOn(t).isEmpty)
-    child match {
-      case s @ Sort(orders, true, inner, _) if orders.nonEmpty =>
-        // the subquery-alias qualifier (if any) the sort key may carry
-        def aliasOf(p: LogicalPlan): Option[String] = p match {
-          case SubqueryAlias(id, _) => Some(id.name)
-          case Project(_, q)        => aliasOf(q)
-          case _                    => None
-        }
-        val resolver = session.sessionState.analyzer.resolver
-        // ONLY a bare top-level column (`c`) or the relation's alias
-        // qualifying it (`x.c`): a multi-part reference whose LAST part
-        // happens to match a top-level column (e.g. a struct field
-        // `s.c`) must NOT prune on that column's stats — the kept Sort
-        // orders by something else entirely
-        val colName = orders.head.child match {
-          case a: UnresolvedAttribute if a.nameParts.length == 1 =>
-            Some(a.nameParts.head)
-          case a: UnresolvedAttribute if a.nameParts.length == 2 &&
-              aliasOf(inner).exists(resolver(_, a.nameParts.head)) =>
-            Some(a.nameParts.last)
-          case _ => None
-        }
-        for {
-          c <- colName
-          u <- bareGraftUnder(inner)
-          t <- loadEligible(u)
-          field <- t.meta.schema.fields.find(f =>
-            session.sessionState.analyzer.resolver(f.name, c))
-          pruned <- t.readTopNPruned(field.name,
-            asc = orders.head.direction == Ascending,
-            nullsFirst = orders.head.nullOrdering == NullsFirst, n = n)
-        } yield s.copy(child = swapBareGraft(inner, pruned.queryExecution.analyzed))
-      case other =>
-        for {
-          u <- bareGraftUnder(other)
-          t <- loadEligible(u)
-          pruned <- t.readLimitPruned(n)
-        } yield swapBareGraft(other, pruned.queryExecution.analyzed)
-    }
-  }
-
-  private def resolvePruned(name: String, cond: Expression,
-                            ref: Option[String] = None): Option[LogicalPlan] = {
+  private def resolve(name: String, at: Option[TimeTravelSpec] = None): Option[LogicalPlan] = {
     val wh = session.conf.getOption("spark.graft.warehouse")
     if (wh.isEmpty) return None
-    ManagedTable.load(session, wh.get, name).flatMap { t =>
-      // (column, isLower, inclusive?, literal) per range conjunct;
-      // equality contributes both bounds
-      val ranges = conjuncts(cond).flatMap {
-        case EqualTo(a: UnresolvedAttribute, l: Literal) if l.value != null =>
-          Seq((a.nameParts.last, true, l), (a.nameParts.last, false, l))
-        case EqualTo(l: Literal, a: UnresolvedAttribute) if l.value != null =>
-          Seq((a.nameParts.last, true, l), (a.nameParts.last, false, l))
-        case GreaterThanOrEqual(a: UnresolvedAttribute, l: Literal) if l.value != null =>
-          Seq((a.nameParts.last, true, l))
-        case GreaterThan(a: UnresolvedAttribute, l: Literal) if l.value != null =>
-          Seq((a.nameParts.last, true, l))
-        case LessThanOrEqual(a: UnresolvedAttribute, l: Literal) if l.value != null =>
-          Seq((a.nameParts.last, false, l))
-        case LessThan(a: UnresolvedAttribute, l: Literal) if l.value != null =>
-          Seq((a.nameParts.last, false, l))
-        case GreaterThanOrEqual(l: Literal, a: UnresolvedAttribute) if l.value != null =>
-          Seq((a.nameParts.last, false, l))
-        case GreaterThan(l: Literal, a: UnresolvedAttribute) if l.value != null =>
-          Seq((a.nameParts.last, false, l))
-        case LessThanOrEqual(l: Literal, a: UnresolvedAttribute) if l.value != null =>
-          Seq((a.nameParts.last, true, l))
-        case LessThan(l: Literal, a: UnresolvedAttribute) if l.value != null =>
-          Seq((a.nameParts.last, true, l))
-        case _ => Seq.empty
-      }
-      // Pruning rewrites the comparison into the COLUMN's domain, which
-      // is only Spark-equivalent when Spark itself would compare there.
-      // A numeric literal against a STRING column coerces the COLUMN
-      // (s = 5 matches "05"); pruning on the string "5" would drop "05".
-      // So: same type, string=string, or integral literal into an
-      // integral column with exact value round-trip. Everything else
-      // falls back to the unpruned scan.
-      import org.apache.spark.sql.types._
-      def comparableInColumnDomain(fld: StructField, l: Literal): Boolean = {
-        def integral(dt: DataType) = dt match {
-          case ByteType | ShortType | IntegerType | LongType => true
-          case _ => false
-        }
-        fld.dataType == l.dataType ||
-          (integral(fld.dataType) && integral(l.dataType))
-      }
-      def extValue(fld: StructField, l: Literal): Option[Any] = {
-        if (!comparableInColumnDomain(fld, l)) return None
-        val casted = try Cast(l, fld.dataType, Some(conf.sessionLocalTimeZone))
-          .eval(null) catch { case _: Exception => null }
-        // integral narrowing must round-trip exactly (1e10 into an INT
-        // column must not prune on the truncated value)
-        val roundTrips = casted != null && (fld.dataType == l.dataType || {
-          val back = try Cast(Literal.create(casted, fld.dataType), l.dataType,
-            Some(conf.sessionLocalTimeZone)).eval(null) catch { case _: Exception => null }
-          back == l.value
-        })
-        if (!roundTrips) None
-        else Some(CatalystTypeConverters.convertToScala(casted, fld.dataType))
-      }
-      def logical(df: org.apache.spark.sql.DataFrame): LogicalPlan =
-        df.select(t.meta.schema.fieldNames.toIndexedSeq.map(
-          org.apache.spark.sql.functions.col): _*).queryExecution.analyzed
-      // COMPOSITE pruning (round 9): every prunable conjunct contributes —
-      // bounds are grouped PER COLUMN (equality contributed both bounds
-      // above, so `k = 5` becomes the closed range [5, 5] and Bloom-probes)
-      // and the per-conjunct candidate sets INTERSECT inside
-      // readPrunedConjunction (bounds ∧ Bloom ∧ partition-tuple per
-      // conjunct) — `WHERE k = 5 AND day >= X` prunes multiplicatively.
-      // Multiple bounds on one side fold to the TIGHTEST
-      // ([[ManagedTable.tightestBound]], shared with the V1 seam)
-      val rangePreds = ranges.groupBy(_._1).toSeq.flatMap { case (colName, bs) =>
-        t.meta.schema.fields.find(_.name.equalsIgnoreCase(colName)).flatMap { fld =>
-          val lo = ManagedTable.tightestBound(
-            bs.collect { case (_, true, l) => l }.flatMap(extValue(fld, _)),
-            takeMax = true)
-          val hi = ManagedTable.tightestBound(
-            bs.collect { case (_, false, l) => l }.flatMap(extValue(fld, _)),
-            takeMax = false)
-          if (lo.isEmpty && hi.isEmpty) None
-          else Some(ManagedTable.PruneConjunct(fld.name, lo, hi))
-        }
-      }
-      // IN lists (round 9): any-value-may-be-present probing. Null
-      // members never match a row (three-valued IN), so they drop from
-      // the probe list; the REMAINING values must ALL convert to the
-      // column domain — one coercion-suspect member could match rows
-      // via Spark's own casting in groups the other values would prune.
-      val inPreds = conjuncts(cond).flatMap {
-        case In(a: UnresolvedAttribute, ls)
-            if ls.nonEmpty && ls.forall(_.isInstanceOf[Literal]) =>
-          t.meta.schema.fields.find(_.name.equalsIgnoreCase(a.nameParts.last))
-            .flatMap { fld =>
-              val lits = ls.map(_.asInstanceOf[Literal]).filter(_.value != null)
-              val vs = lits.map(extValue(fld, _))
-              if (vs.exists(_.isEmpty)) None
-              else Some(ManagedTable.PruneConjunct(fld.name, None, None,
-                Some(vs.flatten)))
-            }
-        case _ => None
-      }
-      val preds = rangePreds ++ inPreds
-      if (preds.isEmpty) None
-      else {
-        val pruned = t.readPrunedConjunction(preds, ref)
-        // Projection must match what the UNPRUNED path would output, or
-        // adding a prunable WHERE silently changes the schema: live and
-        // branch reads project to the table schema (read()/readBranch),
-        // while snapshot/tag reads surface derived partition columns
-        // (readVersion is unprojected) — keep the physical columns there
-        // so e.g. a filter on a derived column still resolves on top.
-        val branchView = ref.exists(r => !r.forall(_.isDigit) &&
-          !t.tags().contains(r) && t.branches().contains(r))
-        val versionRead = ref.isDefined && !branchView
-        Some(if (versionRead) pruned.queryExecution.analyzed else logical(pruned))
-      }
-    }
-  }
-
-  private def resolve(ident: String): Option[LogicalPlan] = {
-    val wh = session.conf.getOption("spark.graft.warehouse")
-    if (wh.isEmpty) return None
-    val (name, suffix) = ident.indexOf('$') match {
-      case -1 => (ident, None)
-      case i  => (ident.take(i), Some(ident.drop(i + 1)))
-    }
-    ManagedTable.load(session, wh.get, name) match {
-      case Some(t) =>
-        val df = suffix match {
-          // `spark.wap.branch`: session-scoped write-audit-publish
-          // context (round 8, Iceberg's WAP conf) — plain reads see the
-          // branch's staged view when the branch exists on THIS table;
-          // an absent branch falls back to the live snapshot, so one
-          // session conf audits just the tables actually staged on.
-          case None => Some(wapBranchOn(t).map(t.readBranch).getOrElse(t.read()))
-          case Some(s) if s.startsWith("branch_") &&
-              t.branches().contains(s.stripPrefix("branch_")) =>
-            Some(t.readBranch(s.stripPrefix("branch_")))
-          case Some("files")      => Some(t.filesMetadata())
-          case Some("snapshots")  => Some(t.snapshotsMetadata())
-          case Some("refs")       => Some(t.refsMetadata())
-          case Some("partitions") => Some(t.partitionsMetadata())
-          case Some("changes")   => Some(t.readChangesBetween(0L, t.meta.currentVersion))
-          case Some(v) if v.length > 1 && v.length <= 18 &&
-              v.startsWith("v") && v.drop(1).forall(_.isDigit) =>
-            // non-empty + length-bounded digits keep toLong total; a
-            // RETAINED-version miss still raises readVersion's informative
-            // error, while malformed suffixes fall through to Spark's
-            // normal unresolved-relation error
-            Some(t.readVersion(v.drop(1).toLong))
-          case _ => None
-        }
-        df.map(_.queryExecution.analyzed)
-      case None if suffix.isEmpty => expandView(wh.get, name)
-      case None => None
-    }
+    if (name.endsWith("$changes"))
+      return ManagedTable.load(session, wh.get, name.stripSuffix("$changes"))
+        .map(t => t.readChangesBetween(0L, t.meta.currentVersion).queryExecution.analyzed)
+    val catalog = GraftCatalog.forWarehouse(session, wh.get)
+    val ident = Identifier.of(Array.empty[String], name)
+    val table =
+      try Some(at match {
+        case None                    => catalog.loadTable(ident)
+        case Some(AsOfVersion(ref))  => catalog.loadTable(ident, ref)
+        case Some(AsOfTimestamp(us)) => catalog.loadTable(ident, us)
+      })
+      catch { case _: NoSuchTableException => None }
+    table.map(tb => SubqueryAlias(Seq("graft", name), DataSourceV2Relation.create(
+        tb, Some(catalog), Some(ident), CaseInsensitiveStringMap.empty(), at)): LogicalPlan)
+      .orElse(if (name.contains('$') || at.isDefined) None else expandView(wh.get, name))
   }
 
   /** Thread-local stack of views currently being expanded — expansion is

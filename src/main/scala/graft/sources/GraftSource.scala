@@ -354,7 +354,7 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
     }
     // write-audit-publish: an active `spark.wap.branch` routes V1 appends
     // to branch STAGING — the same adjudication as SQL INSERT
-    // ([[graft.plans.ResolveGraftTables]]): writes under the conf always
+    // ([[graft.plans.ResolveGraftTables]]'s DML): writes under the conf always
     // target the branch (created on first touch), so a misspelled or
     // not-yet-staged name stages rather than silently mutating the live
     // table mid-audit; overwrites are refused (branches stage appends and
@@ -743,8 +743,8 @@ private[sources] final case class GraftChangesRelation(
 /** Manifest-answerable aggregate surface of the V1 relation (round 10):
   * the plan-level seam [[graft.plans.ManifestAggOnV1]] matches so a bare
   * `df.agg(min/max/count)` over `format("graft-table")` answers from the
-  * manifest (LocalRelation, zero file scans) exactly like the SQL rule's
-  * `SELECT min(c) FROM graft.t` — the V1 scan contract itself cannot
+  * manifest (LocalRelation, zero file scans) like the V2 scan builder's
+  * answer to `SELECT min(c) FROM graft.t` — the V1 scan contract itself cannot
   * host this (buildScan can't see WHICH aggregate sits above it).
   * Answers are None whenever the manifest is not exact (MoR state,
   * ref/branch views) — the caller falls back to the real scan.
@@ -843,7 +843,7 @@ private[sources] final case class GraftRelation(
 
   /** An active `spark.wap.branch` naming a live branch of THIS table
     * routes plain reads to the branch's staged view — the SAME
-    * adjudication as SQL reads ([[graft.plans.ResolveGraftTables]]):
+    * adjudication as SQL reads ([[graft.catalog.GraftCatalog.loadTable]]):
     * one session conf must never make `SELECT * FROM graft.t` and
     * `spark.read.format("graft-table")` return different answers. An
     * absent branch falls back to live; an explicit `versionAsOf` wins
@@ -936,7 +936,7 @@ private[sources] final case class GraftRelation(
       case LessThanOrEqual(a, v) if v != null && cols.contains(a) => a -> v
     }
     // stacked bounds on one side fold to the TIGHTEST
-    // ([[ManagedTable.tightestBound]], shared with the SQL rule)
+    // ([[ManagedTable.tightestBound]])
     val ranges = (lows.map(_._1) ++ highs.map(_._1)).distinct.toSeq.map { c =>
       ManagedTable.PruneConjunct(c,
         ManagedTable.tightestBound(

@@ -374,14 +374,10 @@ final class ManagedTable private (
     b
   }
 
-  /** Can a range on `c` tuple-prune this table? (SQL rule's dispatch.) */
-  def isMonotonePartitionSource(c: String): Boolean =
-    _meta.schema.fieldNames.contains(c) && monotoneFieldsOf(c).nonEmpty
-
   /** Range read on a partition SOURCE column — BOTH bounds INCLUSIVE
     * (`lo <= c AND c <= hi`; half-open windows: pass `hi` just below the
-    * boundary, or post-filter — the SQL rule keeps the exact predicate on
-    * top and uses this as a superset scan). File groups whose partition
+    * boundary, or post-filter — callers keep the exact predicate on top
+    * and use this as a superset scan). File groups whose partition
     * tuple cannot intersect the transformed range are pruned at the
     * MANIFEST — a time-window query on a 100 TB log plans against the
     * touched days' group lists, opening nothing else. Monotone
@@ -1684,9 +1680,9 @@ final class ManagedTable private (
     *
     * Contract: the result holds a SUPERSET of the rows matching the
     * conjunction and a subset of the snapshot's rows — callers MUST keep
-    * the exact predicate on top (both the V1 relation and the SQL rule
-    * do). Soundness per conjunct follows [[readWhereEq]] /
-    * [[readColRange]] / [[readSourceRange]]'s per-kind rules: identifier
+    * the exact predicate on top (the V1 relation does). Soundness per
+    * conjunct follows [[readWhereEq]] / [[readColRange]] /
+    * [[readSourceRange]]'s per-kind rules: identifier
     * and tuple conjuncts prune upsert groups outright (a group with no
     * in-range keys / an out-of-range tuple carries no deletes for
     * surviving rows — scopes are key- and partition-local), non-identifier
@@ -1704,38 +1700,6 @@ final class ManagedTable private (
     val entries = ref.map(refEntries).getOrElse(currentEntries)
     val (scan, carriers) = prunedSplit(entries, preds)
     morRead(scan, deleteCarriers = carriers)
-  }
-
-  /** LIMIT-pruned read for the SQL surface's `SELECT … FROM graft.t
-    * LIMIT n` rewrite ([[graft.plans.ResolveGraftTables]]): reads only
-    * the shortest prefix of live groups whose exact manifest row counts
-    * cover n — on a 100 TB table, one group instead of every live file.
-    * None when any group could hide rows (upsert scopes, posdels,
-    * missing counts) — the caller keeps the full read. The caller ALWAYS
-    * keeps its Limit above (partial semantics, like the V2 push).
-    */
-  private[graft] def readLimitPruned(n: Int): Option[DataFrame] = {
-    val entries = currentEntries
-    if (entries.isEmpty ||
-        !entries.forall(e => e.kind == Manifest.Data && e.rows >= 0L)) None
-    else Some(morRead(StatsPrune.limitTruncate(entries, n)))
-  }
-
-  /** Top-N-pruned read for `SELECT … FROM graft.t ORDER BY c LIMIT n`:
-    * drops every group provably beaten by ≥ n rows of other groups
-    * (manifest bounds + null counts — [[StatsPrune.topNTruncate]]'s
-    * exact rule, shared with the V2 scan's pushed top-N). None when the
-    * snapshot isn't all-data or the column has no stats domain; the
-    * caller keeps its Sort + Limit above, so semantics never depend on
-    * the truncation.
-    */
-  private[graft] def readTopNPruned(c: String, asc: Boolean, nullsFirst: Boolean,
-                                    n: Int): Option[DataFrame] = {
-    val entries = currentEntries
-    if (entries.isEmpty ||
-        !entries.forall(e => e.kind == Manifest.Data && e.rows >= 0L)) None
-    else if (!_meta.schema.fieldNames.contains(c)) None
-    else Some(morRead(StatsPrune.topNTruncate(entries, c, asc, nullsFirst, n)))
   }
 
   /** Entry-set face of [[readPrunedConjunction]]: (scan entries, delete
@@ -1798,8 +1762,8 @@ final class ManagedTable private (
     Manifest.read(fs, manifestPath(v))
 
   /** Manifest-level pruning for the V2 pushed-filter path — the same
-    * superset-safe split the SQL rule uses, over the given entry set
-    * (current snapshot, or a pinned ref's).
+    * superset-safe split [[readPrunedConjunction]] uses, over the given
+    * entry set (current snapshot, or a pinned ref's).
     */
   private[graft] def v2PrunedEntries(preds: Seq[ManagedTable.PruneConjunct],
                                      entries: Seq[ManifestEntry])
@@ -2048,6 +2012,12 @@ final class ManagedTable private (
     // sidecar replaces are exactly the in-subset scopes <= S.
     val posdels = entries.filter(_.kind == Manifest.PosDel)
     val dataEntries = entries.filterNot(_.kind == Manifest.PosDel)
+    // sidecars alone hold no rows: a pruned read whose only survivors are
+    // posdel sidecars is empty
+    if (dataEntries.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(physicalSchema.fields :+ StructField(SeqCol, LongType) :+
+          StructField(TombstoneCol, BooleanType)))
     // Chain coverage is PER PARTITION TUPLE (partitioned sidecars, round
     // 6): a sidecar with tuple T at seq S asserts every equality scope of
     // tuple T at seq ≤ S is materialized — scopes are partition-local on
@@ -5318,8 +5288,8 @@ object ManagedTable {
 
   /** Fold stacked one-sided bounds on a column to the TIGHTEST (max of
     * lower bounds / min of upper bounds) — `k > 5 AND k > 10` prunes at
-    * 10, not whichever conjunct was listed first. Shared by the SQL rule
-    * and the V1 pushed-filter path so the two seams cannot diverge.
+    * 10, not whichever conjunct was listed first (the V1 pushed-filter
+    * path).
     * Values must already be in the column's domain (one Scala class per
     * column — the [[PruneConjunct]] contract), so Comparable is the
     * right order; a non-Comparable domain keeps any one bound (each

@@ -1,10 +1,8 @@
 package graft.tables
 
-/** Shared LIMIT / ORDER-BY-LIMIT group truncation over manifest entries —
-  * the one implementation behind both spellings: the V2 scan's pushed
-  * limit/top-N ([[graft.catalog.GraftScanBuilder]]) and the SQL surface's
-  * analysis-time rewrite (`SELECT … FROM graft.t [ORDER BY c] LIMIT n`,
-  * [[graft.plans.ResolveGraftTables]]). Callers guarantee the entry set
+/** LIMIT / ORDER-BY-LIMIT group truncation over manifest entries — the
+  * V2 scan's pushed limit/top-N ([[graft.catalog.GraftScanBuilder]]),
+  * which serves `<cat>.t` and `graft.t` alike. Callers guarantee the entry set
   * is an ALL-DATA snapshot (no delete scopes, no posdels) with exact row
   * counts, and keep the exact Limit/Sort above whatever is served.
   */

@@ -15,9 +15,9 @@ import scala.util.Random
   * DELETE FROM, TRUNCATE TABLE) on table `pa`, and through the
   * ManagedTable API (append / overwriteWhere / deleteWhere / truncate)
   * on sibling `pb` — must leave
-  * IDENTICAL visible states at every checkpoint, read through BOTH the
-  * catalog and the API. This is the differential net under the round-10
-  * V2 write surface: any drift between the seams' delete translation,
+  * IDENTICAL visible states at every checkpoint, read through the
+  * catalog, the graft SQL surface and the API. This is the differential
+  * net under the round-10 V2 write surface: any drift between the seams' delete translation,
   * truncate semantics, or append commit shape surfaces as a state diff
   * within a few steps.
   */
@@ -32,6 +32,23 @@ class V2ParityChaosSpec extends AnyFunSuite with SharedSpark {
   private def batch(rnd: Random, n: Int): DataFrame =
     List.fill(n)((rnd.nextInt(20), s"p${rnd.nextInt(10)}", rnd.nextInt(50).toDouble))
       .toDF("id", "name", "v")
+
+  /** A session with the graft SQL surface over `wh`, on this context. */
+  private def graftSession(wh: String): org.apache.spark.sql.SparkSession = {
+    import org.apache.spark.sql.SparkSession
+    val base = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s = SparkSession.builder().master(base.sparkContext.master)
+        .withExtensions(new graft.GraftExtensions().apply(_)).getOrCreate()
+      s.conf.set("spark.graft.warehouse", wh)
+      s
+    } finally {
+      SparkSession.setActiveSession(base)
+      SparkSession.setDefaultSession(base)
+    }
+  }
 
   private def canon(df: DataFrame): Seq[(Int, String, Double)] =
     df.select("id", "name", "v").collect()
@@ -48,8 +65,11 @@ class V2ParityChaosSpec extends AnyFunSuite with SharedSpark {
       spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
       spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
 
+      val gs = graftSession(wh)
       def check(step: Int): Unit = {
         val viaCat = canon(spark.sql(s"SELECT * FROM $cat.pa"))
+        assert(canon(gs.sql("SELECT * FROM graft.pa")) == viaCat,
+          s"step $step: graft.pa read != $cat.pa read")
         val viaApiA = canon(ManagedTable.load(spark, wh, "pa").get.read())
         val viaApiB = canon(ManagedTable.load(spark, wh, "pb").get.read())
         assert(viaCat == viaApiB, s"step $step: V2-written state != API-written state")

@@ -102,11 +102,14 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
       t.append((41 to 80).map(i => (i, s"y$i", i.toLong)).toDF("id", "tag", "v"))
       t.buildBlooms(Seq("tag"))
 
-      val all = s2.sql("SELECT * FROM graft.bl").inputFiles.length
+      // graft.<t> is a V2 relation: count the manifest groups its scan serves
+      def served(df: org.apache.spark.sql.DataFrame): Int =
+        graft.catalog.GraftScan.servedGroupDirs(df)
+      val all = served(s2.sql("SELECT * FROM graft.bl"))
       val q = s2.sql("SELECT id FROM graft.bl WHERE tag = 'y55' AND v > 0")
       assert(q.collect().map(_.getInt(0)).toSeq == Seq(55))
-      assert(q.inputFiles.length < all,
-        s"no pruning through SQL: ${q.inputFiles.length} vs $all")
+      assert(served(q) < all,
+        s"no pruning through SQL: ${served(q)} vs $all")
       // literal-on-left and cross-type literal both prune and stay correct
       assert(s2.sql("SELECT id FROM graft.bl WHERE 'x7' = tag").collect()
         .map(_.getInt(0)).toSeq == Seq(7))
@@ -119,8 +122,8 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
       // land in the second group, the first is never opened
       val inQ = s2.sql("SELECT id FROM graft.bl WHERE tag IN ('y55', 'y60')")
       assert(inQ.collect().map(_.getInt(0)).toSet == Set(55, 60))
-      assert(inQ.inputFiles.length < all,
-        s"no IN pruning through SQL: ${inQ.inputFiles.length} vs $all")
+      assert(served(inQ) < all,
+        s"no IN pruning through SQL: ${served(inQ)} vs $all")
       // a NULL member never matches a row; remaining values still exact
       assert(s2.sql("SELECT id FROM graft.bl WHERE tag IN ('x7', NULL)")
         .collect().map(_.getInt(0)).toSet == Set(7))
@@ -129,11 +132,11 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
       ManagedTable.load(s2, wh, "bl").get.tag("pin")
       val ttQ = s2.sql("SELECT id FROM graft.bl VERSION AS OF 'pin' WHERE tag = 'y55'")
       assert(ttQ.collect().map(_.getInt(0)).toSeq == Seq(55))
-      assert(ttQ.inputFiles.length < all,
-        s"no pruning through SQL time travel: ${ttQ.inputFiles.length} vs $all")
+      assert(served(ttQ) < all,
+        s"no pruning through SQL time travel: ${served(ttQ)} vs $all")
       // projection parity (round 9): a PRUNED time-travel read must keep
-      // the same columns as the unpruned one — snapshot/tag reads surface
-      // derived partition columns, and a filter on one must still resolve
+      // the same columns as the unpruned one — the table schema, like a
+      // live read — and a filter on the partition source still prunes
       val tp = ManagedTable.create(s2, wh, "blp", StructType(Seq(
         StructField("id", IntegerType, nullable = false),
         StructField("ts", TimestampType))), Seq("id"),
@@ -147,25 +150,25 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
       val prunedTt = s2.sql("SELECT * FROM graft.blp VERSION AS OF 'p0' WHERE id = 7")
       assert(prunedTt.columns.toSeq == bare.columns.toSeq,
         s"pruned TT changed the schema: ${prunedTt.columns.toSeq} vs ${bare.columns.toSeq}")
+      assert(bare.columns.toSeq == Seq("id", "ts"))
       assert(prunedTt.count() == 1)
-      // a filter naming the derived partition column resolves either way
-      val derivedCol = bare.columns.filterNot(Seq("id", "ts").contains).head
-      assert(s2.sql(s"SELECT id FROM graft.blp VERSION AS OF 'p0' " +
-        s"WHERE id <= 10 AND `$derivedCol` = '2024-01-02'").count() ==
-        (1 to 10).count(_ % 3 == 1))
+      val dayTt = s2.sql("SELECT id FROM graft.blp VERSION AS OF 'p0' " +
+        "WHERE id <= 10 AND ts >= timestamp'2024-01-02 00:00:00' " +
+        "AND ts < timestamp'2024-01-03 00:00:00'")
+      assert(dayTt.count() == (1 to 10).count(_ % 3 == 1))
+      assert(served(dayTt) < served(bare), "a source-range TT read must prune")
       // TIGHTEST-BOUND fold (round 10): stacked bounds on one column
       // prune at the strictest one — `id > 5 AND id > 50` opens only the
       // second group (41..80), not both (the first-listed bound 5 would)
-      val oneGroup = s2.sql("SELECT id FROM graft.bl WHERE id > 50")
-        .inputFiles.length
+      val oneGroup = served(s2.sql("SELECT id FROM graft.bl WHERE id > 50"))
       val tb = s2.sql("SELECT id FROM graft.bl WHERE id > 5 AND id > 50")
       assert(tb.collect().map(_.getInt(0)).toSet == (51 to 80).toSet)
-      assert(tb.inputFiles.length == oneGroup && oneGroup < all,
-        s"stacked lower bounds must fold to the max: ${tb.inputFiles.length} " +
+      assert(served(tb) == oneGroup && oneGroup < all,
+        s"stacked lower bounds must fold to the max: ${served(tb)} " +
           s"vs $oneGroup (all=$all)")
       val ub = s2.sql("SELECT id FROM graft.bl WHERE id < 50 AND id < 5")
       assert(ub.collect().map(_.getInt(0)).toSet == (1 to 4).toSet)
-      assert(ub.inputFiles.length < all,
+      assert(served(ub) < all,
         "stacked upper bounds must fold to the min")
       // COERCION GUARD: a numeric literal against a STRING column makes
       // Spark cast the COLUMN ("05" matches 5) — pruning on the string
@@ -211,6 +214,12 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
       def scanFree(d: org.apache.spark.sql.DataFrame): Boolean =
         d.queryExecution.optimizedPlan.collectLeaves().forall(
           _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      // the SQL spelling reads the V2 table: a manifest answer is a
+      // LocalTableScan with no BatchScan left in the physical plan
+      def localOnly(d: org.apache.spark.sql.DataFrame): Boolean = {
+        val p = d.queryExecution.executedPlan.toString
+        p.contains("LocalTableScan") && !p.contains("BatchScan")
+      }
 
       val agg = rel.agg(fmin($"id").as("lo"), fmax($"id").as("hi"),
         fcount(lit(1)).as("n"))
@@ -259,7 +268,7 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
       // the SQL spelling of the same pinned aggregate rewrites too
       val cleanSql = s2.sql(
         "SELECT max(id) AS hi FROM graft.ma VERSION AS OF 'clean'")
-      assert(scanFree(cleanSql), "SQL ref aggregate must rewrite:\n" +
+      assert(localOnly(cleanSql), "SQL ref aggregate must rewrite:\n" +
         cleanSql.queryExecution.optimizedPlan)
       assert(cleanSql.collect().head.getLong(0) == 90L)
       // a tag pinning the MoR state falls back (hidden rows) + stays right
@@ -302,17 +311,17 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
       // avg is not manifest-answerable: the whole aggregate keeps the scan
       assert(!scanFree(relG.groupBy($"day")
         .agg(org.apache.spark.sql.functions.avg($"id"))))
-      // the SQL spelling rewrites at the parser seam, same answers
+      // the SQL spelling answers through the V2 scan builder, same answers
       val sqlGrouped = s2.sql(
         "SELECT day, count(*) AS n, min(id) AS lo, max(id) AS hi " +
           "FROM graft.mag GROUP BY day")
-      assert(scanFree(sqlGrouped), "SQL grouped manifest agg must be scan-free:\n" +
+      assert(localOnly(sqlGrouped), "SQL grouped manifest agg must be scan-free:\n" +
         sqlGrouped.queryExecution.optimizedPlan)
       assert(sqlGrouped.collect().map(_.toSeq).toSet == expect)
       // a WHERE between relation and aggregate keeps the scan (and the answer)
       val sqlFiltered = s2.sql(
         "SELECT day, count(*) AS n FROM graft.mag WHERE id > 15 GROUP BY day")
-      assert(!scanFree(sqlFiltered))
+      assert(!localOnly(sqlFiltered))
       assert(sqlFiltered.collect().map(_.getLong(1)).sum == 15L)
 
       // MULTI-column GROUP BY over a two-dimensional identity spec — both
@@ -331,7 +340,7 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
       val sql2d = s2.sql(
         "SELECT day, reg, count(*) AS n, max(id) AS hi FROM graft.mag2 " +
           "GROUP BY day, reg")
-      assert(scanFree(sql2d), "multi-column grouped agg must be scan-free:\n" +
+      assert(localOnly(sql2d), "multi-column grouped agg must be scan-free:\n" +
         sql2d.queryExecution.optimizedPlan)
       val expect2d = src2d.groupBy($"day", $"reg")
         .agg(fcount(lit(1)).as("n"),
@@ -347,7 +356,7 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
       // grouping by only ONE of the two partition dimensions still folds
       val oneOfTwo = s2.sql(
         "SELECT reg, count(*) AS n FROM graft.mag2 GROUP BY reg")
-      assert(scanFree(oneOfTwo))
+      assert(localOnly(oneOfTwo))
       assert(oneOfTwo.collect().map(_.toSeq).toSet ==
         src2d.groupBy($"reg").agg(fcount(lit(1)).as("n"))
           .collect().map(_.toSeq).toSet)
@@ -373,7 +382,7 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
       ManagedTable.load(s2, wh, "mag").get.deleteWhere($"day" === 1)
       val gTag = s2.sql("SELECT day, count(*) AS n FROM graft.mag " +
         "VERSION AS OF 'gclean' GROUP BY day")
-      assert(scanFree(gTag), "grouped ref aggregate must rewrite:\n" +
+      assert(localOnly(gTag), "grouped ref aggregate must rewrite:\n" +
         gTag.queryExecution.optimizedPlan)
       assert(gTag.collect().map(_.toSeq).toSet ==
         src.groupBy($"day").agg(fcount(lit(1)).as("n"))

@@ -7,11 +7,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `SELECT … FROM graft.t [ORDER BY c] LIMIT n` — the SQL seam's
-  * analysis-time group truncation ([[graft.plans.ResolveGraftTables]]):
-  * the same [[graft.tables.StatsPrune]] rules the V2 scan pushes, spelled
-  * over the no-extensions-required graft SQL surface. Sort/Limit stay in
-  * the plan, so results are exact; ineligible shapes read everything.
+/** `SELECT … FROM graft.t [ORDER BY c] LIMIT n` — group truncation over
+  * the graft SQL surface. `graft.<t>` reads the DSv2 table, so LIMIT and
+  * top-N push into [[graft.catalog.GraftScanBuilder]] and truncate by the
+  * [[graft.tables.StatsPrune]] rules. Sort/Limit stay in the plan, so
+  * results are exact; ineligible shapes read everything.
   */
 class SqlLimitTopNSpec extends AnyFunSuite with SharedSpark {
 
@@ -36,7 +36,8 @@ class SqlLimitTopNSpec extends AnyFunSuite with SharedSpark {
     StructField("ts", LongType),
     StructField("name", StringType)))
 
-  private def files(df: DataFrame): Int = df.inputFiles.length
+  /** Manifest groups the V2 plan serves. */
+  private def groups(df: DataFrame): Int = graft.catalog.GraftScan.servedGroupDirs(df)
 
   test("LIMIT and ORDER BY … LIMIT read only the needed groups; exact rows") {
     withSqlSession { s2 =>
@@ -52,17 +53,17 @@ class SqlLimitTopNSpec extends AnyFunSuite with SharedSpark {
       val full = s2.sql("SELECT id, ts FROM graft.ev")
       val lim = s2.sql("SELECT id, ts FROM graft.ev LIMIT 10")
       assert(lim.count() == 10)
-      assert(files(lim) < files(full), "LIMIT must read a strict subset of files")
+      assert(groups(lim) < groups(full), "LIMIT must read a strict subset of groups")
 
       val topAsc = s2.sql("SELECT id, ts FROM graft.ev ORDER BY ts LIMIT 5")
       assert(topAsc.as[(Int, Long)].collect().toSeq ==
         (0 until 5).map(i => (i, i.toLong)))
-      assert(files(topAsc) < files(full), "top-N must read only boundary groups")
+      assert(groups(topAsc) < groups(full), "top-N must read only boundary groups")
 
       val topDesc = s2.sql("SELECT id, ts FROM graft.ev ORDER BY ts DESC LIMIT 5")
       assert(topDesc.as[(Int, Long)].collect().toSeq ==
         (499 to 495 by -1).map(i => (i, i.toLong)))
-      assert(files(topDesc) < files(full))
+      assert(groups(topDesc) < groups(full))
 
       // alias through a subquery name survives the rewrite
       val aliased = s2.sql(

@@ -13,11 +13,21 @@ Pair i uses seed `seed-base + i` on both sides and alternates which side
 runs first. The benchmark itself is only called, never changed.
 
 For each end-to-end metric of BENCHMARK.json it prints both sides' median
-and quartiles, the change of the median and the share of pairs the working
-tree won (ties count for neither side). A metric is marked GAIN when the
-working tree won at least 9/10 of the pairs and its median is better than
-the base's by more than the base's interquartile range. Exits 1 when any
-run failed or reported `correct: false`.
+and quartiles, the change of the median, the share of pairs the working
+tree won (ties count for neither side) and a no-regression verdict against
+the metric's `bound` from BENCHMARK.json:
+
+  REGRESSION  the working tree's median is worse than the base's by more
+              than the bound (as a fraction of the base median);
+  UNRESOLVED  the base's own spread (interquartile range / median) exceeds
+              the bound, so a move of that size cannot be told from noise,
+              unless every working-tree run beats every base run;
+  ok          neither.
+
+A metric is also marked GAIN when the working tree won at least 9/10 of the
+pairs and its median is better than the base's by more than the base's
+interquartile range. Exits 1 when any run failed or reported
+`correct: false`, or any metric is a REGRESSION.
 """
 
 import argparse
@@ -76,12 +86,22 @@ def summarize(spec, runs):
         bq, cq = quartiles(base), quartiles(change)
         wins = sum(1 for b, c in pairs if (c < b if lower else c > b))
         gain = (bq[1] - cq[1]) if lower else (cq[1] - bq[1])
+        worse = -gain / bq[1] if bq[1] else 0.0
+        spread = (bq[2] - bq[0]) / bq[1] if bq[1] else 0.0
+        dominates = (max(change) < min(base)) if lower else (min(change) > max(base))
+        if spread > d["bound"] and not dominates:
+            verdict = "UNRESOLVED"
+        elif worse > d["bound"]:
+            verdict = "REGRESSION"
+        else:
+            verdict = "ok"
         rows.append({
             "metric": name, "unit": d["unit"], "better": d["better"],
             "base": {"q1": bq[0], "median": bq[1], "q3": bq[2]},
             "change": {"q1": cq[0], "median": cq[1], "q3": cq[2]},
             "median_change": (cq[1] - bq[1]) / bq[1] if bq[1] else 0.0,
             "wins": wins, "pairs": len(pairs),
+            "bound": d["bound"], "base_spread": spread, "verdict": verdict,
             "gain": wins >= 0.9 * len(pairs) and gain > bq[2] - bq[0],
         })
     return rows
@@ -133,21 +153,23 @@ def main():
     rows = summarize(spec, runs)
     print("\n%s, %d pairs, %g s, base %s vs working tree; %d run(s) failed or incorrect"
           % (args.workload, len(runs), seconds, args.base, bad))
-    print("%-22s %-9s %30s %30s %8s %6s" % (
-        "metric", "unit", "base q1 / median / q3", "change q1 / median / q3", "median", "wins"))
+    print("%-22s %-9s %30s %30s %8s %6s %6s %6s  %s" % (
+        "metric", "unit", "base q1 / median / q3", "change q1 / median / q3", "median",
+        "wins", "bound", "spread", "verdict"))
     for r in rows:
         b, c = r["base"], r["change"]
-        print("%-22s %-9s %30s %30s %+7.1f%% %2d/%-3d%s" % (
+        print("%-22s %-9s %30s %30s %+7.1f%% %2d/%-3d %6.2f %6.3f  %s%s" % (
             r["metric"], r["unit"],
             "%.4g / %.4g / %.4g" % (b["q1"], b["median"], b["q3"]),
             "%.4g / %.4g / %.4g" % (c["q1"], c["median"], c["q3"]),
-            100 * r["median_change"], r["wins"], r["pairs"], "  GAIN" if r["gain"] else ""))
+            100 * r["median_change"], r["wins"], r["pairs"], r["bound"],
+            r["base_spread"], r["verdict"], "  GAIN" if r["gain"] else ""))
     if args.json:
         with open(args.json, "w") as f:
             json.dump({"workload": args.workload, "seconds": seconds, "base": args.base,
                        "seed_base": args.seed_base, "summary": rows,
                        "runs": [{"base": b, "change": c} for b, c in runs]}, f, indent=1)
-    return 1 if bad else 0
+    return 1 if bad or any(r["verdict"] == "REGRESSION" for r in rows) else 0
 
 
 if __name__ == "__main__":
