@@ -929,12 +929,6 @@ object Queries {
   private def v2PlannedGroups(df: DataFrame): Int =
     graft.catalog.GraftScan.servedGroupDirs(df)
 
-  /** A V2 manifest answer: a LocalTableScan with no BatchScan left. */
-  private def v2LocalOnly(df: DataFrame): Boolean = {
-    val plan = df.queryExecution.executedPlan.toString
-    plan.contains("LocalTableScan") && !plan.contains("BatchScan")
-  }
-
   /** Pushed LIMIT through the DSv2 catalog (round 11,
     * [[graft.catalog.GraftScanBuilder.pushLimit]]): `LIMIT n` over a
     * keyless all-data table plans only enough manifest groups to cover n
@@ -1658,7 +1652,7 @@ object Queries {
               org.apache.spark.sql.functions.lit(1)).as("n_rows"),
             org.apache.spark.sql.functions.min("o_orderkey").as("min_key"),
             org.apache.spark.sql.functions.max("o_orderkey").as("max_key"))
-        require(v2LocalOnly(sqlAnswer),
+        require(graft.catalog.GraftScan.manifestAnswered(sqlAnswer),
           "manifest-answered SQL aggregate did not produce a scan-free plan:\n" +
             sqlAnswer.queryExecution.executedPlan)
         require(v1.queryExecution.optimizedPlan.collectLeaves().forall(
@@ -1704,7 +1698,7 @@ object Queries {
           .groupBy(col("o_orderpriority"))
           .agg(count(org.apache.spark.sql.functions.lit(1)).as("n_rows"),
             min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
-        require(v2LocalOnly(bySql),
+        require(graft.catalog.GraftScan.manifestAnswered(bySql),
           "grouped manifest SQL aggregate did not produce a scan-free plan:\n" +
             bySql.queryExecution.executedPlan)
         require(byV1.queryExecution.optimizedPlan.collectLeaves().forall(

@@ -9,6 +9,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, Expression => V2
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources._
@@ -553,22 +554,35 @@ object GraftScan {
       }
     })
 
-  /** Distinct manifest group DIRS a V2 plan's splits serve — the probe
-    * bench rows, oracle queries and specs assert group truncation with
-    * (split count cannot observe it: an unpartitioned table chunks many
-    * groups into few splits).
-    */
-  def servedGroupDirs(df: org.apache.spark.sql.DataFrame): Int = {
+  /** The graft splits of a V2 plan's BatchScans (at least one required). */
+  private def servedPartitions(df: org.apache.spark.sql.DataFrame): Seq[GraftInputPartition] = {
     val scans = df.queryExecution.executedPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }
     require(scans.nonEmpty,
       s"no BatchScan in:\n${df.queryExecution.executedPlan}")
-    scans.flatMap(_.inputPartitions).flatMap {
-      case p: GraftInputPartition =>
-        p.dataFiles.map(f => f.path.substring(0, f.path.lastIndexOf('/')))
-      case _ => Seq.empty
-    }.distinct.size
+    scans.flatMap(_.inputPartitions).collect { case p: GraftInputPartition => p }
+  }
+
+  /** Distinct manifest group DIRS a V2 plan's splits serve — the probe
+    * bench rows, oracle queries and specs assert group truncation with
+    * (split count cannot observe it: an unpartitioned table chunks many
+    * groups into few splits).
+    */
+  def servedGroupDirs(df: org.apache.spark.sql.DataFrame): Int =
+    servedPartitions(df).flatMap(_.dataFiles)
+      .map(f => f.path.substring(0, f.path.lastIndexOf('/'))).distinct.size
+
+  /** Every data and delete file a V2 plan's splits serve. */
+  def servedFiles(df: org.apache.spark.sql.DataFrame): Set[String] =
+    servedPartitions(df).flatMap(p => p.dataFiles ++ p.delFiles).map(_.path).toSet
+
+  /** A manifest-answered V2 read: a LocalTableScan (the [[LocalScan]]'s
+    * exec) with no BatchScan left in the physical plan — zero file reads.
+    */
+  def manifestAnswered(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val plan = df.queryExecution.executedPlan.toString
+    plan.contains("LocalTableScan") && !plan.contains("BatchScan")
   }
 
   /** The manifest tuple key of `c` when it is an identity partition
@@ -677,18 +691,6 @@ object GraftScan {
     // maintenance ladder; CALL graft.system.compact(…) normalizes files
     // to the current spec and restores per-tuple locality + SPJ.
     val multiEpoch = keyed && !t.v2SingleEpoch
-    // Rename lineage and seq-gated initial defaults fold inside the
-    // reader (same rule as the SQL surface's scanGroups projection) —
-    // EXCEPT on identifier columns, where the fold would have to run
-    // before delete-key extraction; renameColumn refuses identifiers, so
-    // only a later SET IDENTIFIER FIELDS over a defaulted column hits this.
-    val aliases = t.v2RenameAliasesLive
-    val defaults = t.v2ColumnDefaults
-    require(!t.meta.identifierFields.exists(i =>
-        aliases.contains(i) || defaults.contains(i)),
-      s"graft V2 catalog: table $name has rename lineage / an initial default " +
-        "on an IDENTIFIER column — read via ManagedTable.read(), which folds " +
-        "them before delete resolution")
 
     val snapshot0 = entriesOverride.getOrElse(
       pinnedRef.map(t.v2RefEntries).getOrElse(t.v2SnapshotEntries))
@@ -972,14 +974,22 @@ object GraftScan {
     // seq-gated initial defaults, evaluated ONCE on the driver to a
     // catalyst value (the same lit(s).cast(dt) the SQL fold applies)
     val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val defaultVals: Array[Option[(Long, Any)]] =
-      required.fields.map { f =>
-        defaults.get(f.name).map { case (v, s) =>
-          (v, org.apache.spark.sql.catalyst.expressions.Cast(
-            org.apache.spark.sql.catalyst.expressions.Literal(
-              UTF8String.fromString(s), StringType), f.dataType, Some(tz)).eval(null))
-        }
+    def defaultOf(f: StructField): Option[(Long, Any)] =
+      defaults.get(f.name).map { case (v, s) =>
+        (v, org.apache.spark.sql.catalyst.expressions.Cast(
+          org.apache.spark.sql.catalyst.expressions.Literal(
+            UTF8String.fromString(s), StringType), f.dataType, Some(tz)).eval(null))
       }
+    val defaultVals: Array[Option[(Long, Any)]] = required.fields.map(defaultOf)
+    // identifier keys fold the same way BEFORE delete matching: a column
+    // renamed or added with a default and later made an identifier (SET
+    // IDENTIFIER FIELDS) holds its key under a prior name, or nowhere, in
+    // files written before. Delete scopes need no fold — re-keying
+    // requires a plain-data table, so every scope is written after it,
+    // under the current names.
+    val idAliasIdxs: Array[Array[Int]] = ids.map(n =>
+      aliases.getOrElse(n, Seq.empty).map(matSchema.fieldIndex).toArray).toArray
+    val idDefaults: Array[Option[(Long, Any)]] = ids.map(n => defaultOf(matSchema(n))).toArray
     val delSchema = StructType(ids.map(n => dataSchema(n)) :+ dataSchema(SeqCol))
     val fmt = fileFormats(t.v2Format)()
     // row-based output: the vectorized reader still runs inside, yielding
@@ -1012,16 +1022,18 @@ object GraftScan {
     new GraftReaderFactory(dataReader, delReader, posdelReader,
       matSchema, outBind, idIdxs, delSchema.length - 1,
       required.fields.map(_.dataType), aliasIdxs, defaultVals, dataReaderF,
-      t.v2EpochBoundaries)
+      t.v2EpochBoundaries, idAliasIdxs, idDefaults)
   }
 
   /** Group file formats the reader opens (`write.format-default`): by-name
     * projection and in-file row order, which the (file, pos) posdel pairs
-    * address, hold for both.
+    * address, hold for all three. JSON is the metadata-table format
+    * ([[graft.tables.ParityStores]]: offset and schema-history stores).
     */
   private val fileFormats: Map[String, () => FileFormat] = Map(
     "parquet" -> (() => new ParquetFileFormat()),
-    "orc"     -> (() => new OrcFileFormat()))
+    "orc"     -> (() => new OrcFileFormat()),
+    "json"    -> (() => new JsonFileFormat()))
 
   private[catalog] def keyTypeSupported(dt: DataType): Boolean = dt match {
     case StringType | IntegerType | LongType | ShortType | ByteType |
@@ -1078,7 +1090,9 @@ final class GraftReaderFactory(
     aliasIdxs: Array[Array[Int]] = Array.empty,
     defaultVals: Array[Option[(Long, Any)]] = Array.empty,
     dataReaderFiltered: PartitionedFile => Iterator[InternalRow] = null,
-    epochBoundaries: Array[Long] = Array.empty)
+    epochBoundaries: Array[Long] = Array.empty,
+    idAliasIdxs: Array[Array[Int]] = Array.empty,
+    idDefaults: Array[Option[(Long, Any)]] = Array.empty)
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -1089,7 +1103,7 @@ final class GraftReaderFactory(
       dataReaderFiltered else dataReader
     new GraftPartitionReader(p,
       dr, delReader, posdelReader, matSchema, outBind, idIdxs, delSeqIdx,
-      outTypes, aliasIdxs, defaultVals, epochBoundaries)
+      outTypes, aliasIdxs, defaultVals, epochBoundaries, idAliasIdxs, idDefaults)
   }
 }
 
@@ -1101,7 +1115,9 @@ final class GraftPartitionReader(
     matSchema: StructType, outBind: Array[Int], idIdxs: Array[Int], delSeqIdx: Int,
     outTypes: Array[DataType],
     aliasIdxs: Array[Array[Int]], defaultVals: Array[Option[(Long, Any)]],
-    epochBoundaries: Array[Long] = Array.empty)
+    epochBoundaries: Array[Long] = Array.empty,
+    idAliasIdxs: Array[Array[Int]] = Array.empty,
+    idDefaults: Array[Option[(Long, Any)]] = Array.empty)
     extends PartitionReader[InternalRow] {
 
   import GraftScan.GFile
@@ -1248,38 +1264,53 @@ final class GraftPartitionReader(
     * single static projection.
     */
   private val needsFold = aliasIdxs.exists(_.nonEmpty) || defaultVals.exists(_.isDefined)
+  private val idNeedsFold = idAliasIdxs.exists(_.nonEmpty) || idDefaults.exists(_.isDefined)
   private val metaNeeded = outBind.exists(_ < 0)
 
-  private def mkProj(entrySeq: Long): UnsafeProjection = {
+  /** Slot `j` of the physical row with its rename-lineage coalesce and
+    * seq-gated initial default applied.
+    */
+  private def foldedSlot(j: Int, dt: DataType, aliases: Array[Int],
+                         default: Option[(Long, Any)], entrySeq: Long)
+      : org.apache.spark.sql.catalyst.expressions.Expression = {
     import org.apache.spark.sql.catalyst.expressions.{And, Coalesce, Expression, If, IsNull, LessThanOrEqual, Literal}
+    val base: Expression = BoundReference(j, dt, nullable = true)
+    val folded: Expression =
+      if (aliases.isEmpty) base
+      else Coalesce(base +: aliases.toSeq.map(k =>
+        BoundReference(k, dt, nullable = true): Expression))
+    default match {
+      case Some((v, dv)) =>
+        val rowSeq = Coalesce(Seq(
+          BoundReference(seqIdx, LongType, nullable = true),
+          Literal(entrySeq, LongType)))
+        If(And(LessThanOrEqual(rowSeq, Literal(v, LongType)), IsNull(folded)),
+          Literal(dv, dt), folded)
+      case None => folded
+    }
+  }
+
+  private def mkProj(entrySeq: Long): UnsafeProjection =
     UnsafeProjection.create(
       outBind.indices.map { i =>
         outBind(i) match {
-          case -1 => BoundReference(matSchema.length, LongType, nullable = false): Expression
+          case -1 => BoundReference(matSchema.length, LongType, nullable = false)
           case -2 => BoundReference(matSchema.length + 1, StringType, nullable = false)
-          case j =>
-            val dt = outTypes(i)
-            val base: Expression = BoundReference(j, dt, nullable = true)
-            val folded: Expression =
-              if (aliasIdxs(i).isEmpty) base
-              else Coalesce(base +: aliasIdxs(i).toSeq.map(k =>
-                BoundReference(k, dt, nullable = true): Expression))
-            defaultVals(i) match {
-              case Some((v, dv)) =>
-                val rowSeq = Coalesce(Seq(
-                  BoundReference(seqIdx, LongType, nullable = true),
-                  Literal(entrySeq, LongType)))
-                If(And(LessThanOrEqual(rowSeq, Literal(v, LongType)), IsNull(folded)),
-                  Literal(dv, dt), folded)
-              case None => folded
-            }
+          case j => foldedSlot(j, outTypes(i), aliasIdxs(i), defaultVals(i), entrySeq)
         }
       })
-  }
+
+  /** The folded identifier values of a data row, slot i = identifier i. */
+  private def mkKeyProj(entrySeq: Long): UnsafeProjection =
+    UnsafeProjection.create(idIdxs.indices.map(i =>
+      foldedSlot(idIdxs(i), dataTypeAt(i), idAliasIdxs(i), idDefaults(i), entrySeq)))
 
   private val staticProj = if (needsFold) null else mkProj(0L)
   private val projCache = new java.util.HashMap[Long, UnsafeProjection]()
   private var proj: UnsafeProjection = staticProj
+  private val keyProjCache = new java.util.HashMap[Long, UnsafeProjection]()
+  private var keyProj: UnsafeProjection = null
+  private val keySlots = idIdxs.indices.toArray
   // per-row metadata tail: [version, file path] joined past the physical row
   private val metaRow = if (metaNeeded)
     new GenericInternalRow(2) else null
@@ -1304,8 +1335,10 @@ final class GraftPartitionReader(
           val tomb = !r.isNullAt(tombIdx) && r.getBoolean(tombIdx)
           if (!tomb) {
             val rowSeq = if (r.isNullAt(seqIdx)) curEntrySeq else r.getLong(seqIdx)
-            val key = if (delMax != null || crossDelMax != null)
-              keyOfIdx(r, idIdxs, i => dataTypeAt(i)) else null
+            val key =
+              if (delMax == null && crossDelMax == null) null
+              else if (keyProj == null) keyOfIdx(r, idIdxs, i => dataTypeAt(i))
+              else keyOfIdx(keyProj(r), keySlots, i => dataTypeAt(i))
             val eqHidden = delMax != null && {
               val m = delMax.get(key)
               m != null && m > rowSeq
@@ -1342,6 +1375,11 @@ final class GraftPartitionReader(
           var pj = projCache.get(curEntrySeq)
           if (pj == null) { pj = mkProj(curEntrySeq); projCache.put(curEntrySeq, pj) }
           proj = pj
+        }
+        if (idNeedsFold) {
+          var kp = keyProjCache.get(curEntrySeq)
+          if (kp == null) { kp = mkKeyProj(curEntrySeq); keyProjCache.put(curEntrySeq, kp) }
+          keyProj = kp
         }
         if (metaNeeded) curFileUtf8 = UTF8String.fromString(f.path)
         curHidden = posdelsByFile.get(fileKey(f.path))

@@ -48,22 +48,26 @@ class GraftV2Table(val t: ManagedTable,
     * metadata column entirely — the data column must win, per Spark's
     * metadata-column conflict contract (the reader applies the same
     * schema-first rule, so both layers agree).
+    *
+    * Derived partition columns (`ts_day` of a `days(ts)` spec) are
+    * metadata columns too: the groups store them, so `WHERE ts_day = …`
+    * resolves on live and time-travel reads alike, while `SELECT *`
+    * stays the table schema. Files written before the spec carried the
+    * column read null.
     */
-  override def metadataColumns(): Array[MetadataColumn] = Array[MetadataColumn](
-    new MetadataColumn {
-      override def name(): String = GraftV2Table.VersionMetaCol
-      override def dataType(): org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.LongType
-      override def isNullable: Boolean = false
-      override def comment(): String = "commit version that wrote the row"
-    },
-    new MetadataColumn {
-      override def name(): String = GraftV2Table.FileMetaCol
-      override def dataType(): org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.StringType
-      override def isNullable: Boolean = false
-      override def comment(): String = "data file path"
-    }).filterNot(mc => t.meta.schema.fieldNames.contains(mc.name()))
+  override def metadataColumns(): Array[MetadataColumn] = {
+    val schemaNames = t.meta.schema.fieldNames.toSet
+    val derived = t.v2PhysicalSchema.fields.filterNot(f => schemaNames.contains(f.name))
+      .map(f => GraftV2Table.metaColumn(f.name, f.dataType, nullable = true,
+        "derived partition column"))
+    (Array(
+      GraftV2Table.metaColumn(GraftV2Table.VersionMetaCol,
+        org.apache.spark.sql.types.LongType, nullable = false,
+        "commit version that wrote the row"),
+      GraftV2Table.metaColumn(GraftV2Table.FileMetaCol,
+        org.apache.spark.sql.types.StringType, nullable = false, "data file path"))
+      .filterNot(mc => schemaNames.contains(mc.name())) ++ derived)
+  }
 
   override def partitioning(): Array[Transform] =
     t.v2PartitionFields.map(GraftCatalog.specToTransform(_, t.meta.partitionBy)).toArray
@@ -311,6 +315,15 @@ final class GraftMetadataTable(t: ManagedTable, suffix: String)
 }
 
 object GraftV2Table {
+  private def metaColumn(n: String, dt: org.apache.spark.sql.types.DataType,
+                         nullable: Boolean, doc: String): MetadataColumn =
+    new MetadataColumn {
+      override def name(): String = n
+      override def dataType(): org.apache.spark.sql.types.DataType = dt
+      override def isNullable: Boolean = nullable
+      override def comment(): String = doc
+    }
+
   private[catalog] val VersionMetaCol = "_graft_version"
   private[catalog] val FileMetaCol = "_file"
 

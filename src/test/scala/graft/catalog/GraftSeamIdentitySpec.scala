@@ -135,6 +135,75 @@ class GraftSeamIdentitySpec extends AnyFunSuite with SharedSpark with AdaptiveSp
     }
   }
 
+  /** `graft.<t>` and `wh.<t>` return `expected` (and the V1 read's rows)
+    * through a GraftScan.
+    */
+  private def readsAs(s2: SparkSession, t: ManagedTable, expected: Seq[String]): Unit = {
+    assert(rows(t.read()) == expected, s"V1 read of ${t.name}")
+    for (rel <- Seq("graft.", "wh.")) {
+      val df = s2.sql(s"SELECT * FROM $rel${t.name}")
+      assert(rows(df) == expected, s"$rel${t.name}")
+      assert(scans(df) == Seq("GraftScan"), s"$rel${t.name}: ${scans(df)}")
+    }
+  }
+
+  test("JSON metadata tables read through both spellings") {
+    val wh = Files.createTempDirectory("graft-seam-json").toString
+    withGraftSession(wh) { s2 =>
+      import graft.tables.ParityStores
+      ParityStores.saveOffsets(s2, wh, Map("file" -> "a.json", "pos" -> "1"))
+      ParityStores.saveOffsets(s2, wh, Map("file" -> "b.json", "pos" -> "7"))
+      ParityStores.storeHistoryRecord(s2, wh, """{"ddl":"CREATE TABLE t1"}""")
+      ParityStores.storeHistoryRecord(s2, wh, """{"ddl":"ALTER TABLE t1"}""")
+      val offsets = ManagedTable.load(s2, wh, ParityStores.OffsetTable).get
+      val history = ManagedTable.load(s2, wh, ParityStores.HistoryTable).get
+      assert(offsets.meta.properties("write.format-default") == "json")
+      // the overwrite left one offset row; history appended two
+      readsAs(s2, offsets, rows(offsets.read()))
+      assert(s2.sql(s"SELECT offset_data FROM graft.${ParityStores.OffsetTable}")
+        .collect().map(_.getString(0)).toSeq == Seq("""{"file":"b.json","pos":"7"}"""))
+      readsAs(s2, history, rows(history.read()))
+      assert(s2.sql(s"SELECT history_data FROM wh.${ParityStores.HistoryTable}")
+        .collect().map(_.getString(0)).toSet ==
+        Set("""{"ddl":"CREATE TABLE t1"}""", """{"ddl":"ALTER TABLE t1"}"""))
+    }
+  }
+
+  test("an identifier column with rename lineage or an initial default folds before delete matching") {
+    val wh = Files.createTempDirectory("graft-seam-idfold").toString
+    withGraftSession(wh) { s2 =>
+      import s2.implicits._
+      val t = ManagedTable.create(s2, wh, "rk", StructType(Seq(
+        StructField("id", IntegerType, nullable = false),
+        StructField("a", StringType),
+        StructField("v", LongType))), Seq("id"))
+      t.append((0 until 10).map(i => (i, s"k$i", i.toLong)).toDF("id", "a", "v"))
+      // the files written so far hold the key under its prior name `a`
+      t.renameColumn("a", "b")
+      t.setIdentifierFields(Seq("b"))
+      t.mergeInto(Seq((30, "k3", -3L), (40, "k4", -4L)).toDF("id", "b", "v"))
+      assert(t.filesMetadata().where(col("kind") === Manifest.Upsert).count() > 0 &&
+        t.filesMetadata().where(col("kind") === Manifest.PosDel).count() == 0,
+        "the upserts must resolve by key at read time")
+      readsAs(s2, t, (0 until 10).map {
+        case 3 => "30|k3|-3"
+        case 4 => "40|k4|-4"
+        case i => s"$i|k$i|$i"
+      }.sorted)
+
+      // rows written before `c` existed hold no value: the initial default keys them
+      val d = ManagedTable.create(s2, wh, "dk", schema, Seq("id"))
+      d.append((0 until 6).map(i => (i, "d", i.toLong)).toDF("id", "day", "v"))
+      d.addColumn(StructField("c", StringType), default = Some("x"))
+      d.setIdentifierFields(Seq("id", "c"))
+      d.mergeInto(Seq((2, "d", -2L, "x"), (5, "d", -5L, "y")).toDF("id", "day", "v", "c"))
+      readsAs(s2, d, ((0 until 6).map {
+        case 2 => "2|d|-2|x"
+        case i => s"$i|d|$i|x"
+      } :+ "5|d|-5|y").sorted)
+    }
+  }
+
   test("a read pruned down to posdel sidecars is empty through every spelling") {
     val wh = Files.createTempDirectory("graft-seam-posdel").toString
     withGraftSession(wh) { s2 =>

@@ -46,10 +46,7 @@ class V2ExactRegionSpec extends AnyFunSuite with SharedSpark {
   /** Manifest-answered: the physical plan is a LocalTableScan (the V2
     * LocalScan's exec) and reads no files — zero jobs.
     */
-  private def isLocalOnly(df: DataFrame): Boolean = {
-    val p = df.queryExecution.executedPlan.toString
-    p.contains("LocalTableScan") && !p.contains("BatchScan")
-  }
+  private def isLocalOnly(df: DataFrame): Boolean = GraftScan.manifestAnswered(df)
 
   private def hasFilterNode(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.collect {

@@ -11,23 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraftSqlDdlSpec extends AnyFunSuite with SharedSpark {
 
-  /** `graft.<t>` reads the V2 table: a manifest answer is a LocalTableScan
-    * with no BatchScan left in the physical plan.
-    */
-  private def localOnly(df: org.apache.spark.sql.DataFrame): Boolean = {
-    val p = df.queryExecution.executedPlan.toString
-    p.contains("LocalTableScan") && !p.contains("BatchScan")
-  }
-
-  /** Every data and delete file the V2 plan's splits serve. */
-  private def servedFiles(df: org.apache.spark.sql.DataFrame): Set[String] =
-    df.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.flatMap(_.inputPartitions).flatMap {
-      case p: graft.catalog.GraftScan.GraftInputPartition =>
-        (p.dataFiles ++ p.delFiles).map(_.path)
-      case _ => Seq.empty
-    }.toSet
+  import graft.catalog.GraftScan.{manifestAnswered => localOnly, servedFiles}
 
   test("CREATE / ALTER / DROP statements drive the table metadata API") {
     val base = spark

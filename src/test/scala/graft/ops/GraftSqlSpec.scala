@@ -136,7 +136,9 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
         s"no pruning through SQL time travel: ${served(ttQ)} vs $all")
       // projection parity (round 9): a PRUNED time-travel read must keep
       // the same columns as the unpruned one — the table schema, like a
-      // live read — and a filter on the partition source still prunes
+      // live read; the derived partition column is a metadata column, so
+      // a filter naming it still resolves, and a filter on the partition
+      // source still prunes
       val tp = ManagedTable.create(s2, wh, "blp", StructType(Seq(
         StructField("id", IntegerType, nullable = false),
         StructField("ts", TimestampType))), Seq("id"),
@@ -152,6 +154,11 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
         s"pruned TT changed the schema: ${prunedTt.columns.toSeq} vs ${bare.columns.toSeq}")
       assert(bare.columns.toSeq == Seq("id", "ts"))
       assert(prunedTt.count() == 1)
+      // a filter naming the derived partition column resolves either way
+      for (tt <- Seq(" VERSION AS OF 'p0'", ""))
+        assert(s2.sql(s"SELECT id FROM graft.blp$tt " +
+          "WHERE id <= 10 AND ts_day = '2024-01-02'").count() ==
+          (1 to 10).count(_ % 3 == 1), s"ts_day filter on graft.blp$tt")
       val dayTt = s2.sql("SELECT id FROM graft.blp VERSION AS OF 'p0' " +
         "WHERE id <= 10 AND ts >= timestamp'2024-01-02 00:00:00' " +
         "AND ts < timestamp'2024-01-03 00:00:00'")
@@ -216,10 +223,7 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
           _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
       // the SQL spelling reads the V2 table: a manifest answer is a
       // LocalTableScan with no BatchScan left in the physical plan
-      def localOnly(d: org.apache.spark.sql.DataFrame): Boolean = {
-        val p = d.queryExecution.executedPlan.toString
-        p.contains("LocalTableScan") && !p.contains("BatchScan")
-      }
+      import graft.catalog.GraftScan.{manifestAnswered => localOnly}
 
       val agg = rel.agg(fmin($"id").as("lo"), fmax($"id").as("hi"),
         fcount(lit(1)).as("n"))
