@@ -39,17 +39,40 @@ object ConnectedComponents {
     * data-sized, so a 100 TB run still fans out to thousands of tasks
     * while a small round collapses to a handful. Saved/restored around the
     * loop only; the returned DataFrame executes under the caller's conf.
+    *
+    * Overlapping calls on one session (concurrent table workers, or
+    * threads sharing a session) share one scope: the first to enter saves
+    * the session's value and the last to leave restores it. Saving and
+    * restoring per call would let a call that entered second, and saved
+    * the first call's "false", write that back after the first restored
+    * the real value — leaving the session on "false" for good.
     */
   private def withCoalescedTinyShuffles[A](
       spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
     val key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    openScopes.synchronized {
+      val (n, saved) = Option(openScopes.get(spark)).getOrElse((0, spark.conf.getOption(key)))
+      if (n == 0) spark.conf.set(key, "false")
+      openScopes.put(spark, (n + 1, saved))
+    }
+    try body finally openScopes.synchronized {
+      val (n, saved) = openScopes.get(spark)
+      if (n > 1) openScopes.put(spark, (n - 1, saved))
+      else {
+        openScopes.remove(spark)
+        saved match {
+          case Some(v) => spark.conf.set(key, v)
+          case None => spark.conf.unset(key)
+        }
+      }
     }
   }
+
+  /** Open [[withCoalescedTinyShuffles]] scopes per session: (depth, the
+    * value saved by the first entrant). Guarded by its own monitor.
+    */
+  private val openScopes =
+    new java.util.IdentityHashMap[org.apache.spark.sql.SparkSession, (Int, Option[String])]
 
   /** Cluster assignment (`id`, `cluster`) for every node appearing in
     * `edges`; `cluster` is the component's minimum node id. Throws if the

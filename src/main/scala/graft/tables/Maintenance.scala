@@ -37,9 +37,11 @@ object Maintenance {
       /** Keep manifest Bloom filters ([[ManagedTable.buildBlooms]]) on
         * these columns: tier 5 rebuilds when more than
         * `maxBloomlessGroups` live groups lack one — fresh commits and
-        * compaction outputs arrive filter-less, so this tier restores
-        * point-lookup pruning after the cheaper tiers reshuffle the
-        * groups (it runs LAST for exactly that reason).
+        * compaction outputs arrive without filters on non-identifier
+        * columns, so this tier restores point-lookup pruning after the
+        * cheaper tiers reshuffle the groups (it runs LAST for exactly
+        * that reason). Identifier columns need no entry here: every
+        * commit, compaction included, writes their filters.
         */
       bloomCols: Seq[String] = Seq.empty,
       maxBloomlessGroups: Int = 8

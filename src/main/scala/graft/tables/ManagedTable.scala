@@ -3,7 +3,7 @@ package graft.tables
 import graft.cdc.{CdcApply, EventDecoder, Operation}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1553,62 +1553,61 @@ final class ManagedTable private (
     * time: a [[readWhereEq]] point lookup on a 100 TB table opens only
     * the groups whose filter might contain the value.
     *
+    * Identifier columns need no call: every commit that writes a
+    * data/upsert group builds their filters in its write pass
+    * ([[BloomMeta]]). This is for other columns, and for groups written
+    * before commit-time filters existed.
+    *
     * ONE columnar scan of the live data/upsert groups builds every
-    * (group, column) filter: k probe positions per value fold into 64-bit
-    * words DISTRIBUTIVELY (explode → word-indexed bit_or), so the driver
-    * collects ≤ groups × cols × m/64 longs — metadata-scale, never raw
-    * positions. Committed as a metadata-only manifest version; entries
-    * written by later commits simply have no filter (kept, not pruned)
-    * until the next build; rewritten groups (compaction) drop their
-    * filters with their entries — staleness is impossible by
+    * (group, column) filter with the write path's aggregate
+    * ([[graft.functions.BloomBitsAgg]], grouped by group dir), so the
+    * driver collects one small bitset per (group, column). Committed as a
+    * metadata-only manifest version; entries written by later commits
+    * carry filters only for identifier columns (others are kept, not
+    * pruned) until the next build; rewritten groups (compaction) drop
+    * their filters with their entries — staleness is impossible by
     * construction. Returns the number of entries carrying filters.
     *
-    * Sizing: `bits` per group per column (power of two). With k=4 probes
-    * a group of n distinct values gets fpp ≈ (1-e^(-4n/m))^4 — the
-    * default 32 Ki bits holds ~5k distinct values at ~4% fpp for 4 KiB
-    * of manifest weight.
+    * Sizing: by default each group's filter is sized to its row count
+    * ([[BloomMeta.bitsFor]]: ≥ 8 bits per row, fpp ≈ 0.2–2.4% at k = 4);
+    * `bits` > 0 fixes the width instead (a power of two in
+    * [64, [[BloomMeta.MaxBits]]]). Columns carrying rename lineage or an
+    * initial default are refused, as in [[analyzeColumns]]: their
+    * physical values differ from the values reads return.
     */
-  def buildBlooms(cols: Seq[String], bits: Int = 1 << 15, hashes: Int = 4): Int = {
+  def buildBlooms(cols: Seq[String], bits: Int = 0): Int = {
     require(cols.nonEmpty, "no columns")
-    require(Integer.bitCount(bits) == 1 && bits >= 64,
-      s"bits must be a power of two >= 64, got $bits")
-    require(hashes >= 1 && hashes <= 16, s"hashes out of range: $hashes")
+    require(bits == 0 || (Integer.bitCount(bits) == 1 && bits >= 64 && bits <= BloomMeta.MaxBits),
+      s"bits must be 0 (sized per group) or a power of two in [64, ${BloomMeta.MaxBits}], got $bits")
     val colsD = cols.distinct
-    colsD.foreach(c => require(physicalSchema.fieldNames.contains(c),
-      s"unknown column $c"))
+    colsD.foreach { c =>
+      require(physicalSchema.fieldNames.contains(c), s"unknown column $c")
+      require(BloomMeta.domainOf(physicalSchema(c).dataType).isDefined,
+        s"no Bloom filter for column $c of type ${physicalSchema(c).dataType.catalogString}")
+      require(!renameAliases.contains(c) && !columnDefaults.contains(c),
+        s"column $c carries rename lineage or an initial default; compact first")
+    }
     requireCurrentPointer()
     val entries = currentEntries
     val target = entries.filter(e =>
       e.kind == Manifest.Data || e.kind == Manifest.Upsert)
     if (target.isEmpty) return 0
     val readSchema = StructType(colsD.map(c => physicalSchema(c)))
-    val scan = spark.read.schema(readSchema).format(format)
+    val aggs = count(lit(1)).as("__rows") +: bloomAggs(colsD, readSchema)
+    val perGroup = spark.read.schema(readSchema).format(format)
       .load(target.map(e => new Path(tableDir, e.path).toString): _*)
       .withColumn("__grp", regexp_extract(col("_metadata.file_path"),
         "(files/(?:data|upsert)-[0-9]+-[0-9a-f]{8})/", 1))
-    val perCol = colsD.map { c =>
-      scan.select(col("__grp"), lit(c).as("__c"),
-        explode(array((0 until hashes).map(i =>
-          pmod(xxhash64(lit(i), col(c)), lit(bits.toLong))): _*)).as("__pos"))
-    }
-    val words = perCol.reduce(_ unionByName _)
-      .select(col("__grp"), col("__c"), expr("cast(__pos div 64 as int)").as("__w"),
-        expr("shiftleft(1L, cast(__pos % 64 as int))").as("__b"))
-      .groupBy("__grp", "__c", "__w").agg(expr("bit_or(__b)").as("__bits"))
-      .collect()
-    val byGroupCol = words.groupBy(r => (r.getString(0), r.getString(1)))
+      .groupBy("__grp").agg(aggs.head, aggs.tail: _*)
+      .collect().map(r => r.getString(0) -> r).toMap
     val updated = entries.map { e =>
-      val bl = colsD.flatMap { c =>
-        byGroupCol.get((e.path, c)).map { rows =>
-          val arr = new Array[Long](bits / 64)
-          rows.foreach(r => arr(r.getInt(2)) |= r.getLong(3))
-          val buf = java.nio.ByteBuffer.allocate(arr.length * 8)
-          arr.foreach(buf.putLong)
-          c -> BloomMeta(bits, hashes,
-            java.util.Base64.getEncoder.encodeToString(buf.array()))
-        }
-      }.toMap
-      if (bl.isEmpty) e else e.copy(blooms = e.blooms ++ bl)
+      perGroup.get(e.path) match {
+        case Some(r) =>
+          val m = if (bits > 0) bits else BloomMeta.bitsFor(r.getAs[Long]("__rows"))
+          e.copy(blooms = e.blooms ++
+            foldBlooms(colsD, readSchema, m, r.getAs[Any](_)))
+        case None => e
+      }
     }
     commitManifest(updated)
     updated.count(_.blooms.nonEmpty)
@@ -1624,36 +1623,43 @@ final class ManagedTable private (
     (es.count(e => cols.forall(e.blooms.contains)), es.size)
   }
 
-  /** Probe positions of `v` for column `c` — the driver-side twin of
-    * [[buildBlooms]]'s write expression (`xxhash64(probeIndex, value)`
-    * mod m), evaluated through the same Catalyst expression so the two
-    * agree bit-for-bit. `v` must be the column's external Scala type.
+  /** Identifier columns that get a Bloom filter in a group written from a
+    * frame of `schema` — every filterable identifier present, except
+    * columns carrying rename lineage or an initial default, whose stored
+    * values may differ from the values reads return.
     */
-  private def bloomPositions(c: String, v: Any, m: Int, k: Int): Seq[Int] = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    val dt = physicalSchema(c).dataType
-    (0 until k).map { i =>
-      // seed 42 = the SQL xxhash64 function's fixed seed
-      val h = XxHash64(Seq(Literal(i), Literal.create(v, dt)), 42L)
-        .eval(null).asInstanceOf[Long]
-      (((h % m) + m) % m).toInt
-    }
-  }
+  private def keyBloomCols(schema: StructType): Seq[String] =
+    _meta.identifierFields.filter(c => schema.fieldNames.contains(c) &&
+      BloomMeta.domainOf(schema(c).dataType).isDefined &&
+      !renameAliases.contains(c) && !columnDefaults.contains(c))
+
+  /** One [[graft.functions.BloomBitsAgg]] per column, named `bl_<c>`. */
+  private def bloomAggs(cols: Seq[String], schema: StructType): Seq[Column] =
+    cols.map(c => graft.functions.BloomBitsAgg.column(
+      BloomMeta.positionsColumn(col(c), schema(c).dataType)).as(s"bl_$c"))
+
+  /** Fold the `bl_<c>` results (looked up by `get`) to `m`-bit filters. */
+  private def foldBlooms(cols: Seq[String], schema: StructType, m: Int,
+                         get: String => Any): Map[String, BloomMeta] =
+    cols.map(c => c -> BloomMeta.fold(get(s"bl_$c").asInstanceOf[Array[Byte]], m,
+      BloomMeta.domainOf(schema(c).dataType).get)).toMap
 
   /** Equality point-read: open only the file groups whose column bounds
-    * intersect `v` AND whose Bloom filter (if built) might contain it.
-    * Sound under MoR deletes by the same rules as [[readColRange]]:
-    * identifier columns prune every kind; non-identifier columns keep
-    * upsert groups of surviving tuples as delete carriers. Posdel
-    * sidecars carry neither stats nor filters and are always kept.
+    * intersect `v` AND whose Bloom filter (if any, in the column's
+    * current domain) might contain it — on identifier columns every
+    * group written by a commit has one. Sound under MoR deletes by the
+    * same rules as [[readColRange]]: identifier columns prune every kind;
+    * non-identifier columns keep upsert groups of surviving tuples as
+    * delete carriers. Posdel sidecars carry neither stats nor filters and
+    * are always kept.
     */
   def readWhereEq(c: String, v: Any): DataFrame = {
     require(v != null, "probe value must be non-null (IS NULL can't be bloom-pruned)")
     val entries = currentEntries
     val isId = _meta.identifierFields.contains(c)
+    val probe = new BloomMeta.Probe(physicalSchema(c).dataType)
     def pass(e: ManifestEntry): Boolean =
-      e.stats.get(c).forall(_.intersects(v, v)) &&
-        e.blooms.get(c).forall(b => b.mightContain(bloomPositions(c, v, b.m, b.k)))
+      e.stats.get(c).forall(_.intersects(v, v)) && probe.mightContain(e.blooms.get(c), v)
     val passing = entries.filter(pass)
     val pruned =
       if (isId) passing
@@ -1798,17 +1804,15 @@ final class ManagedTable private (
         case None                      => None
       }
     val isIn = p.values.isDefined
-    // Bloom probe positions depend only on (value, m, k), not the entry —
-    // memoize across the manifest: a 64-value IN over thousands of
-    // entries would otherwise re-run the driver-side hash evals per
-    // (entry, value) pair on the query-planning hot path.
-    val posCache = scala.collection.mutable.HashMap.empty[(Any, Int, Int), Seq[Int]]
-    def positions(v: Any, m: Int, k: Int): Seq[Int] =
-      posCache.getOrElseUpdate((v, m, k), bloomPositions(p.c, v, m, k))
+    // Bloom probe hashes depend only on the value, not the entry: the
+    // probe hashes each value once and masks per filter width, so a
+    // 64-value IN over thousands of entries does not re-run the
+    // driver-side hash evals per (entry, value) pair on the planning path.
+    val probe = new BloomMeta.Probe(physicalSchema(p.c).dataType)
     def eqPass(e: ManifestEntry, v: Any,
                tt: Option[(Int, Map[String, String]) => Boolean]): Boolean =
       e.stats.get(p.c).forall(_.intersects(v, v)) &&
-        e.blooms.get(p.c).forall(b => b.mightContain(positions(v, b.m, b.k))) &&
+        probe.mightContain(e.blooms.get(p.c), v) &&
         tt.forall(f => f(entryEpoch(e.seq), e.partition))
     val eqVal: Option[Any] = for { l <- p.lo; h <- p.hi; if l == h } yield l
     val tupleTest: Option[(Int, Map[String, String]) => Boolean] =
@@ -1819,7 +1823,7 @@ final class ManagedTable private (
     def boundsPass(e: ManifestEntry) = e.stats.get(p.c).forall(b =>
       b.intersects(p.lo.getOrElse(b.min), p.hi.getOrElse(b.max)))
     def bloomPass(e: ManifestEntry) = eqVal.forall(v =>
-      e.blooms.get(p.c).forall(b => b.mightContain(positions(v, b.m, b.k))))
+      probe.mightContain(e.blooms.get(p.c), v))
     def tuplePass(e: ManifestEntry): Boolean =
       if (isIn) inTests.forall(_.exists { case (_, tt) =>
         tt.forall(f => f(entryEpoch(e.seq), e.partition)) })
@@ -3208,13 +3212,14 @@ final class ManagedTable private (
       val candB = Seq.newBuilder[ManifestEntry]
       var nCand = 0
       val probeIt = tPrior.iterator
+      // each key is hashed once, not once per (group, key)
+      val probes = ids.map(c => new BloomMeta.Probe(physicalSchema(c).dataType))
       while (probeIt.hasNext && nCand >= 0) {
         val e = probeIt.next()
         val isCand = keys.exists { kr =>
           ids.zipWithIndex.forall { case (c, i) =>
             e.stats.get(c).forall(_.intersects(kr.get(i), kr.get(i))) &&
-              e.blooms.get(c).forall(b =>
-                b.mightContain(bloomPositions(c, kr.get(i), b.m, b.k)))
+              probes(i).mightContain(e.blooms.get(c), kr.get(i))
           }
         }
         if (isCand) {
@@ -4143,9 +4148,14 @@ final class ManagedTable private (
     val statCols = (_meta.identifierFields ++ clusterByCols).distinct
       .filter(inSchema.fieldNames.contains)
       .flatMap(c => statsTag(inSchema(c).dataType).map(c -> _))
+    val blooms = keyBloomCols(inSchema).flatMap { c =>
+      val idx = schema.fieldIndex(c)
+      BloomMeta.fromValues(rows.iterator.map(_.get(idx)), schema(c).dataType,
+        rows.length.toLong).map(c -> _)
+    }.toMap
     (Some(stampFiles(ManifestEntry(rel, kind, seq,
       LocalCommit.bounds(rows, schema, statCols),
-      rows = rows.length.toLong))), Some((rows, schema)))
+      rows = rows.length.toLong, blooms = blooms))), Some((rows, schema)))
   }
 
   private def writeGroup(df: DataFrame, kind: String, seq: Long): Option[ManifestEntry] = {
@@ -4154,12 +4164,15 @@ final class ManagedTable private (
     val statCols = (_meta.identifierFields ++ clusterByCols).distinct
       .filter(df.columns.contains)
       .flatMap(c => statsTag(df.schema(c).dataType).map(c -> _))
-    // Row count + column bounds ride the write action via observe — zero
-    // extra job; the count feeds metadata-only counts ([[fastRowCount]]).
+    val bloomCols = keyBloomCols(df.schema)
+    // Row count + column bounds + identifier Bloom bits ride the write
+    // action via observe — zero extra job; the count feeds metadata-only
+    // counts ([[fastRowCount]]) and sizes the filters.
     val o = new org.apache.spark.sql.Observation(s"stats-$kind-$seq")
-    val aggs = count(lit(1)).as("__rows") +: statCols.flatMap { case (c, _) =>
+    val aggs = count(lit(1)).as("__rows") +: (statCols.flatMap { case (c, _) =>
       Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c"),
-        count(col(c)).as(s"nn_$c"), approx_count_distinct(col(c)).as(s"nd_$c")) }
+        count(col(c)).as(s"nn_$c"), approx_count_distinct(col(c)).as(s"nd_$c")) } ++
+      bloomAggs(bloomCols, df.schema))
     val toWrite = df.observe(o, aggs.head, aggs.tail: _*)
     // A df that already carries per-row seqs (compactMinor's fold) keeps
     // them — stamping would rewrite delete scopes; fresh commits get `seq`.
@@ -4180,8 +4193,9 @@ final class ManagedTable private (
           row("__rows").asInstanceOf[Long] - row(s"nn_$c").asInstanceOf[Long],
           math.min(row(s"nd_$c").asInstanceOf[Long], row(s"nn_$c").asInstanceOf[Long]))
       }.toMap
-      Some(stampFiles(ManifestEntry(rel, kind, seq, stats,
-        rows = row("__rows").asInstanceOf[Long])))
+      val n = row("__rows").asInstanceOf[Long]
+      Some(stampFiles(ManifestEntry(rel, kind, seq, stats, rows = n,
+        blooms = foldBlooms(bloomCols, df.schema, BloomMeta.bitsFor(n), row))))
     } else { fs.delete(dir, true); None }
   }
 
@@ -4623,10 +4637,11 @@ final class ManagedTable private (
       val statCols = (_meta.identifierFields ++ clusterByCols).distinct
         .filter(n => fileFields.exists(_.name == n))
         .flatMap(c => statsTag(readBack(c).dataType).map(c -> _))
-      val aggs = count(lit(1)).as("__n") +: statCols.flatMap { case (c, _) =>
+      val bloomCols = keyBloomCols(readBack)
+      val aggs = count(lit(1)).as("__n") +: (statCols.flatMap { case (c, _) =>
         Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c"),
           count(col(c)).as(s"nn_$c"), approx_count_distinct(col(c)).as(s"nd_$c"))
-      }
+      } ++ bloomAggs(bloomCols, readBack))
       val perPart = PhaseTimer.time("swg.readback-agg") {
         staged.groupBy(ptCols.map(col): _*).agg(aggs.head, aggs.tail: _*).collect()
       }
@@ -4650,8 +4665,9 @@ final class ManagedTable private (
         if (!fs.rename(new Path(staging, srcRel), dst))
           throw new java.io.IOException(s"failed to stage partition group $rel")
         freshenGroupDir(dst)
-        stampFiles(ManifestEntry(rel, kind, seqOf(tuple), stats, tuple,
-          rows = row.getAs[Long]("__n")))
+        val n = row.getAs[Long]("__n")
+        stampFiles(ManifestEntry(rel, kind, seqOf(tuple), stats, tuple, rows = n,
+          blooms = foldBlooms(bloomCols, readBack, BloomMeta.bitsFor(n), row.getAs[Any](_))))
       }
     } finally fs.delete(staging, true)
   }
@@ -5238,9 +5254,11 @@ final class ManagedTable private (
         .partitionBy("__zb").format(format).save(staging.toString)
       val statCols = (cols ++ _meta.identifierFields).distinct
         .flatMap(c => statsTag(_meta.schema(c).dataType).map(c -> _))
-      val aggs = count(lit(1)).as("__n") +: statCols.flatMap { case (c, _) =>
+      val bloomCols = keyBloomCols(_meta.schema)
+      val aggs = count(lit(1)).as("__n") +: (statCols.flatMap { case (c, _) =>
         Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c"),
-          count(col(c)).as(s"nn_$c"), approx_count_distinct(col(c)).as(s"nd_$c")) }
+          count(col(c)).as(s"nn_$c"), approx_count_distinct(col(c)).as(s"nd_$c")) } ++
+        bloomAggs(bloomCols, _meta.schema))
       val boundRows = spark.read.option("basePath", staging.toString).format(format)
         .load(staging.toString)
         .groupBy(col("__zb")).agg(aggs.head, aggs.tail: _*).collect()
@@ -5259,8 +5277,9 @@ final class ManagedTable private (
         if (!fs.rename(new Path(staging, s"__zb=$bucket"), dst))
           throw new java.io.IOException(s"failed to stage clustered group $rel")
         freshenGroupDir(dst)
-        stampFiles(ManifestEntry(rel, Manifest.Data, seq, stats,
-          rows = row.getAs[Long]("__n")))
+        val n = row.getAs[Long]("__n")
+        stampFiles(ManifestEntry(rel, Manifest.Data, seq, stats, rows = n,
+          blooms = foldBlooms(bloomCols, _meta.schema, BloomMeta.bitsFor(n), row.getAs[Any](_))))
       }
       commitManifestWithProps(entries, barrierProp)
     } finally fs.delete(staging, true)

@@ -46,8 +46,12 @@ final case class ColBounds(t: String, min: Any, max: Any, nulls: Long = -1L,
         b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     t match {
       case "i" | "f" =>
+        // Spark's order (SQLOrderingUtil): -0.0 = 0.0, and NaN equals
+        // itself and sorts above every other value — a group holding NaN
+        // has max NaN, which plain `<=` would compare false against all
+        def le(a: Double, b: Double) = a == b || java.lang.Double.compare(a, b) <= 0
         (for (l <- num(lo); h <- num(hi); mn <- num(min); mx <- num(max))
-          yield h >= mn && l <= mx).getOrElse(true)
+          yield le(mn, h) && le(l, mx)).getOrElse(true)
       case "s" =>
         (lo, hi, min, max) match {
           case (l: String, h: String, mn: String, mx: String) =>
@@ -90,19 +94,190 @@ final case class ColBounds(t: String, min: Any, max: Any, nulls: Long = -1L,
 /** A per-column Bloom filter over one file group's values — equality
   * pruning for columns with no sort order (manifest bounds cannot help
   * an unsorted column; a Bloom answers "definitely not in this group"
-  * regardless of layout). `m` bits, `k` hash probes, bitset base64-coded.
-  * The hash is Spark's xxHash64 seeded per probe index, so the write-side
-  * column scan and the driver-side probe agree bit-for-bit.
+  * regardless of layout). `m` bits (a power of two), `k` hash probes,
+  * bitset base64-coded. Probe `i` of a value sets bit
+  * `pmod(xxhash64(i, value), m)` — Spark's xxHash64 with the SQL
+  * function's seed, so the write-side column scan and the driver-side
+  * probe agree bit-for-bit.
+  *
+  * `domain` tags the type the value was hashed in, like [[ColBounds.t]]:
+  * "i" integral columns hash as `bigint`, "f" floating columns as
+  * `double` (Spark's hash already maps -0.0 to 0.0 and every NaN to one
+  * value, as SQL equality does), any other type under its own type name.
+  * A widening (int→long, float→double) therefore keeps a filter's
+  * domain, and a probe trusts a filter only when the tag equals the
+  * column's current domain ([[BloomMeta.Probe]]); untagged filters
+  * (written before the tag existed) are never used.
+  *
+  * Every commit that writes a data/upsert group builds one for each of
+  * the table's identifier columns in the same pass that computes the
+  * group's bounds, sized by [[BloomMeta.bitsFor]];
+  * [[ManagedTable.buildBlooms]] adds them for other columns.
   */
-final case class BloomMeta(m: Int, k: Int, bits: String) {
+final case class BloomMeta(m: Int, k: Int, bits: String, domain: String = "") {
   private lazy val words: Array[Long] = {
     val raw = java.util.Base64.getDecoder.decode(bits)
     val buf = java.nio.ByteBuffer.wrap(raw)
     Array.fill(raw.length / 8)(buf.getLong)
   }
-  /** Might the group contain a value hashing to these probe positions? */
-  def mightContain(positions: Seq[Int]): Boolean = positions.forall { p =>
-    (words(p >>> 6) & (1L << (p & 63))) != 0L
+  /** Might the group contain a value with these probe hashes (at least
+    * `k`, from [[BloomMeta.hasher]])? Each hash is masked with this
+    * filter's own `m`, so one hashing serves groups of any size.
+    */
+  def mightContain(hashes: Array[Long]): Boolean = {
+    var i = 0
+    var hit = true
+    while (hit && i < k) {
+      val p = java.lang.Math.floorMod(hashes(i), m.toLong).toInt
+      hit = (words(p >>> 6) & (1L << (p & 63))) != 0L
+      i += 1
+    }
+    hit
+  }
+}
+
+object BloomMeta {
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, XxHash64}
+  import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+  import org.apache.spark.sql.types._
+
+  /** Hash probes per filter. */
+  val K = 4
+
+  /** Bit width the distributed build ORs positions into before folding
+    * down to [[bitsFor]]: `pmod(h, MaxBits) mod m == pmod(h, m)` for
+    * every power-of-two `m ≤ MaxBits`, so the fold is exact.
+    */
+  val MaxBits: Int = 1 << 20
+
+  /** Filter width for a group of `rows` rows: the smallest power of two
+    * ≥ 8 bits per row, at least 64 and at most [[MaxBits]]. With k = 4
+    * the false-positive rate is (1 − e^(−4n/m))^4 ≈ 0.2–2.4% for n
+    * distinct values up to 2^17 rows, about 1–2 bytes of manifest per row.
+    */
+  def bitsFor(rows: Long): Int = {
+    val want = math.min(MaxBits.toLong, math.max(64L, 8L * rows))
+    java.lang.Long.highestOneBit(want - 1).toInt << 1
+  }
+
+  /** The domain tag of a column type, or None when the type gets no
+    * filter (nested and interval types).
+    */
+  def domainOf(dt: DataType): Option[String] = dt match {
+    case ByteType | ShortType | IntegerType | LongType => Some("i")
+    case FloatType | DoubleType                        => Some("f")
+    case _: StringType | BooleanType | DateType | TimestampType |
+         TimestampNTZType | BinaryType | _: DecimalType => Some(dt.catalogString)
+    case _                                             => None
+  }
+
+  /** The type a domain hashes in: integral as `bigint`, floating as
+    * `double`, anything else as itself.
+    */
+  def hashType(dt: DataType): DataType = domainOf(dt) match {
+    case Some("i") => LongType
+    case Some("f") => DoubleType
+    case _         => dt
+  }
+
+  /** Write side: the [[K]] probe positions of column `c` (of type `dt`)
+    * at the [[MaxBits]] build width, null for a null value — the input of
+    * [[graft.functions.BloomBitsAgg]].
+    */
+  def positionsColumn(c: org.apache.spark.sql.Column,
+                      dt: DataType): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions._
+    val v = c.cast(hashType(dt))
+    when(c.isNotNull, array((0 until K).map(i =>
+      pmod(xxhash64(lit(i), v), lit(MaxBits.toLong))): _*))
+  }
+
+  /** Driver side: a function from a value of `dt` (its external Scala
+    * form) to its [[K]] 64-bit probe hashes, the same `xxhash64(i, value)`
+    * [[positionsColumn]] computes, or None for a value that cannot be
+    * cast into the domain without changing it (then nothing prunes).
+    * The returned function is not thread-safe.
+    */
+  def hasher(dt: DataType): Any => Option[Array[Long]] = {
+    val ht = hashType(dt)
+    val toCatalyst: Any => Option[Any] = domainOf(dt) match {
+      case Some("i") => {
+        case n @ (_: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
+                  _: java.lang.Byte) => Some(n.asInstanceOf[Number].longValue())
+        case _ => None
+      }
+      case Some("f") => {
+        case n @ (_: java.lang.Double | _: java.lang.Float | _: java.lang.Long |
+                  _: java.lang.Integer | _: java.lang.Short | _: java.lang.Byte) =>
+          Some(n.asInstanceOf[Number].doubleValue())
+        case _ => None
+      }
+      case _ =>
+        val conv = CatalystTypeConverters.createToCatalystConverter(dt)
+        v => try Option(conv(v)) catch { case scala.util.control.NonFatal(_) => None }
+    }
+    // seed 42 = the SQL xxhash64 function's fixed seed
+    val exprs = (0 until K).map(i =>
+      XxHash64(Seq(Literal(i), BoundReference(0, ht, nullable = false)), 42L)).toArray
+    val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
+    v => if (v == null) None else toCatalyst(v).map { cv =>
+      row.update(0, cv)
+      exprs.map(_.eval(row: InternalRow).asInstanceOf[Long])
+    }
+  }
+
+  /** A filter over `values` (external Scala values of `dt`) for a group
+    * of `rows` rows — the driver-side build, sized like the distributed
+    * one; None when the type gets no filter.
+    */
+  def fromValues(values: Iterator[Any], dt: DataType, rows: Long): Option[BloomMeta] =
+    domainOf(dt).map { d =>
+      val m = bitsFor(rows)
+      val words = new Array[Long](m / 64)
+      val h = hasher(dt)
+      values.foreach(v => h(v).foreach(_.foreach { x =>
+        val p = java.lang.Math.floorMod(x, m.toLong).toInt
+        words(p >>> 6) |= 1L << (p & 63)
+      }))
+      BloomMeta(m, K, encode(words), d)
+    }
+
+  /** Fold a [[graft.functions.BloomBitsAgg]] result (positions at the
+    * [[MaxBits]] width) down to `m` bits.
+    */
+  def fold(built: Array[Byte], m: Int, domain: String): BloomMeta = {
+    require(Integer.bitCount(m) == 1 && m >= 64 && m <= MaxBits, s"bad width $m")
+    val words = new Array[Long](m / 64)
+    val bm = graft.functions.BloomBitsAgg.deserialize(built)
+    bm.forEach { (p: Int) =>
+      val q = p & (m - 1)
+      words(q >>> 6) |= 1L << (q & 63)
+    }
+    BloomMeta(m, K, encode(words), domain)
+  }
+
+  private def encode(words: Array[Long]): String = {
+    val buf = java.nio.ByteBuffer.allocate(words.length * 8)
+    words.foreach(buf.putLong)
+    java.util.Base64.getEncoder.encodeToString(buf.array())
+  }
+
+  /** Probe side of one column's filters: hashes each probe value once
+    * (memoized) and tests any group's filter by masking with that
+    * filter's own `m`. A filter whose domain differs from the column's
+    * current one, or that has no domain tag, passes every value.
+    */
+  final class Probe(dt: DataType) {
+    private val domain = domainOf(dt)
+    private lazy val hash = hasher(dt)
+    private val memo = scala.collection.mutable.HashMap.empty[Any, Option[Array[Long]]]
+
+    /** May the group whose filter for this column is `b` hold `v`? */
+    def mightContain(b: Option[BloomMeta], v: Any): Boolean = b match {
+      case Some(f) if domain.contains(f.domain) && f.k == K =>
+        memo.getOrElseUpdate(v, hash(v)).forall(f.mightContain)
+      case _ => true
+    }
   }
 }
 
@@ -166,6 +341,7 @@ object Manifest {
         e.blooms.foreach { case (c, b) =>
           val o = bl.putObject(c)
           o.put("m", b.m); o.put("k", b.k); o.put("bits", b.bits)
+          if (b.domain.nonEmpty) o.put("d", b.domain)
         }
       }
       if (e.stats.nonEmpty) {
@@ -215,7 +391,7 @@ object Manifest {
         bl.fields().asScala.map { e =>
           val o = e.getValue
           e.getKey -> BloomMeta(o.get("m").asInt, o.get("k").asInt,
-            o.get("bits").asText)
+            o.get("bits").asText, Option(o.get("d")).map(_.asText).getOrElse(""))
         }.toMap
       }.getOrElse(Map.empty[String, BloomMeta])
       val files = Option(n.get("files")).map { fl =>

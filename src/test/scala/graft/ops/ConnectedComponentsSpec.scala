@@ -5,6 +5,21 @@ import graft.dedup.ConnectedComponents
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
+/** Gates that hold two concurrent `components()` calls at chosen points;
+  * a top-level object, so task closures reach these instances instead of
+  * serialized copies.
+  */
+object OverlapGates {
+  @volatile var aInside, bInside, aDone: java.util.concurrent.CountDownLatch = _
+  def reset(): Unit = {
+    aInside = new java.util.concurrent.CountDownLatch(1)
+    bInside = new java.util.concurrent.CountDownLatch(1)
+    aDone = new java.util.concurrent.CountDownLatch(1)
+  }
+  def await(l: java.util.concurrent.CountDownLatch): Unit =
+    assert(l.await(120, java.util.concurrent.TimeUnit.SECONDS), "gate timed out")
+}
+
 class ConnectedComponentsSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
 
@@ -97,5 +112,37 @@ class ConnectedComponentsSpec extends AnyFunSuite with SharedSpark {
     val got = runStar(chain, maxIter = 15)
     assert(got.values.toSet == Set(0L), got.filter(_._2 != 0L).toString)
     assert(got.keySet == (0L to 59L).toSet)
+  }
+
+  test("overlapping components() calls leave parallelismFirst as it was") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+    val before = spark.conf.getOption(key)
+    OverlapGates.reset()
+    // A enters first and waits inside until B has entered; B then waits
+    // until A has returned, so B — the call that saw A's setting when it
+    // entered — is the last to leave
+    val gateA = udf { (x: Long) =>
+      OverlapGates.aInside.countDown(); OverlapGates.await(OverlapGates.bInside); x }
+    val gateB = udf { (x: Long) =>
+      OverlapGates.bInside.countDown(); OverlapGates.await(OverlapGates.aDone); x }
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
+    def run(gate: org.apache.spark.sql.expressions.UserDefinedFunction): Map[Long, Long] =
+      ConnectedComponents.components(
+        edges.select(gate(col("a")).as("a"), col("b")).coalesce(1), "a", "b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    @volatile var gotA, gotB: Map[Long, Long] = null
+    val ta = new Thread(() => gotA = run(gateA))
+    val tb = new Thread(() => gotB = run(gateB))
+    ta.start()
+    OverlapGates.await(OverlapGates.aInside)
+    tb.start()
+    ta.join(180000)
+    OverlapGates.aDone.countDown()
+    tb.join(180000)
+    val want = unionFind(Seq((1L, 2L), (2L, 3L), (5L, 6L)))
+    assert(gotA == want && gotB == want)
+    assert(spark.conf.getOption(key) == before,
+      s"$key left at ${spark.conf.getOption(key)} (was $before)")
   }
 }
