@@ -864,8 +864,13 @@ object GraftScan {
     }
 
     // the streaming path builds ONE factory per stream and plans
-    // partitions per micro-batch — skip the 3 reader builds it discards
-    val factory = if (withFactory) buildFactory(spark, t, required, parquetFilters) else null
+    // partitions per micro-batch — skip the reader builds it discards.
+    // A plan with no split (a point lookup every group's key filter
+    // rules out) never creates a reader either: each reader build
+    // broadcasts a Hadoop conf, most of such a lookup's planning time.
+    val factory =
+      if (withFactory && partitions.nonEmpty) buildFactory(spark, t, required, parquetFilters)
+      else null
 
     val dataRows = dataServed.map(_.rows)
     val numRowsOpt =

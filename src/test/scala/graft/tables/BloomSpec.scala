@@ -189,8 +189,12 @@ class BloomSpec extends AnyFunSuite with SharedSpark {
     assert(groups == 8 && t.v2SnapshotEntries.forall(_.blooms.contains("id")))
     def served(k: Int) = graft.catalog.GraftScan.servedGroupDirs(
       spark.sql(s"SELECT * FROM blwh.pl WHERE id = $k"))
-    for (absent <- Seq(3, 501, 999, 1201))
+    for (absent <- Seq(3, 501, 999, 1201)) {
       assert(served(absent) == 0, s"absent key $absent")
+      assert(spark.sql(s"SELECT * FROM blwh.pl WHERE id = $absent").collect().isEmpty)
+      assert(spark.sql(s"SELECT count(*), max(tag) FROM blwh.pl WHERE id = $absent")
+        .collect().head.getLong(0) == 0L)
+    }
     val probe = new BloomMeta.Probe(IntegerType)
     for (live <- Seq(0, 2, 640, 1598)) {
       val may = t.v2SnapshotEntries.count(e => probe.mightContain(e.blooms.get("id"), live))
