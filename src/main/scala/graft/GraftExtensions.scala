@@ -18,6 +18,9 @@ import org.apache.spark.sql.types.StringType
   * interfaces (SINK/IcebergUtil.java:76-89); the Spark-native analogue is
   * exactly this class: native expressions injected into the session's
   * function registry so they participate in whole-stage codegen.
+  *
+  * Reads do not need it: `spark.read.format("graft-table")` plans the
+  * same DSv2 scan, manifest-answered aggregates included, in any session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -36,11 +39,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // [[graft.plans.GraftSqlParser]] / [[graft.plans.ResolveGraftDdl]].
     ext.injectParser((session, delegate) =>
       new graft.plans.GraftSqlParser(session, delegate))
-    // manifest-answered min/max/count for the DataFrame-API spelling over
-    // V1 graft-table relations (SQL reads answer through the V2 scan
-    // builder) — see [[graft.plans.ManifestAggOnV1]].
-    ext.injectOptimizerRule(session => new graft.plans.ManifestAggOnV1(session))
-
     ext.injectFunction((
       FunctionIdentifier("decimal_from_bytes"),
       DecimalFromBytes.info,

@@ -1286,9 +1286,9 @@ object Queries {
   /** The V1 DataSource surface (round 8, [[graft.sources.GraftSource]]):
     * a third-party Spark job — NO graft extensions — writes orders
     * through `format("graft-table")` (create-on-first-write with identifier +
-    * partition options), appends a second batch, then reads back with a
-    * region filter whose pruning rides the manifest (superset scan;
-    * Spark re-applies the predicate). Oracle = the same filter in SQL.
+    * partition options), appends a second batch, then reads back through
+    * the same source — the DSv2 scan, whose region filter prunes on the
+    * manifest. Oracle = the same filter in SQL.
     */
   val tableDataSourceV1 = Q("table_datasource_v1",
     (s, dir) => {
@@ -1623,8 +1623,8 @@ object Queries {
   /** Manifest-answered SQL aggregates under the oracle: `count(*)` /
     * `min` / `max` over an all-data graft table answer from the
     * manifest's row counts and column bounds — the V2 scan builder's
-    * pushed aggregate (a LocalTableScan) for `graft.<t>` SQL, a
-    * LocalRelation for the V1 source — ZERO file scans (the Iceberg
+    * pushed aggregate (a LocalTableScan) for `graft.<t>` SQL and for the
+    * `format("graft-table")` DataFrame spelling — ZERO file scans (the Iceberg
     * snapshot-summary answer: milliseconds instead of a 100 TB scan).
     * The query function REQUIRES the scan-free plan shapes at runtime,
     * so this row fails if the answer ever stops firing, and the DuckDB
@@ -1643,9 +1643,9 @@ object Queries {
         val sqlAnswer = s2.sql(
           """SELECT count(*) AS n_rows, min(o_orderkey) AS min_key,
             |  max(o_orderkey) AS max_key FROM graft.orders_ma""".stripMargin)
-        // the V1 DataFrame spelling of the SAME question rewrites too
-        // (round 10, [[graft.plans.ManifestAggOnV1]]): one combined
-        // ungrouped aggregate over format("graft-table")
+        // the DataFrame spelling of the SAME question over
+        // format("graft-table") plans the same V2 scan: one combined
+        // ungrouped aggregate, answered from the manifest
         val v1 = s2.read.format("graft-table")
           .option("warehouse", wh).option("table", "orders_ma").load()
           .agg(org.apache.spark.sql.functions.count(
@@ -1655,10 +1655,9 @@ object Queries {
         require(graft.catalog.GraftScan.manifestAnswered(sqlAnswer),
           "manifest-answered SQL aggregate did not produce a scan-free plan:\n" +
             sqlAnswer.queryExecution.executedPlan)
-        require(v1.queryExecution.optimizedPlan.collectLeaves().forall(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
+        require(graft.catalog.GraftScan.manifestAnswered(v1),
           "manifest-answered V1 aggregate did not produce a scan-free plan:\n" +
-            v1.queryExecution.optimizedPlan)
+            v1.queryExecution.executedPlan)
         require(v1.collect().toSeq == sqlAnswer.collect().toSeq,
           "V1 and SQL manifest-agg answers diverged")
         sqlAnswer
@@ -1669,7 +1668,7 @@ object Queries {
       |FROM orders""".stripMargin))
 
   /** Partition-GROUPED manifest aggregates under the oracle (round 10,
-    * [[graft.catalog.GraftScanBuilder]] / [[graft.plans.ManifestAggOnV1]]):
+    * [[graft.catalog.GraftScanBuilder]]):
     * `GROUP BY <identity partition source>` with count/min/max answered
     * from per-entry row counts and column bounds — the Iceberg
     * partitions-metadata-table rollup, a scan-free plan with ZERO file
@@ -1701,10 +1700,9 @@ object Queries {
         require(graft.catalog.GraftScan.manifestAnswered(bySql),
           "grouped manifest SQL aggregate did not produce a scan-free plan:\n" +
             bySql.queryExecution.executedPlan)
-        require(byV1.queryExecution.optimizedPlan.collectLeaves().forall(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
+        require(graft.catalog.GraftScan.manifestAnswered(byV1),
           "grouped manifest V1 aggregate did not produce a scan-free plan:\n" +
-            byV1.queryExecution.optimizedPlan)
+            byV1.queryExecution.executedPlan)
         require(bySql.collect().map(_.toSeq).toSet ==
           byV1.collect().map(_.toSeq).toSet,
           "SQL and V1 grouped manifest-agg answers diverged")

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.expressions.{Expressions, Expression => V2Expression}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
@@ -120,8 +120,8 @@ final class GraftScanBuilder(t: ManagedTable, pinnedRef: Option[String] = None,
   }
 
   /** Manifest-answered aggregates — what `SELECT count(*)/min/max` over
-    * `graft.t` or `<cat>.t` collapses to (the V1 `df.agg(...)` gets the
-    * same from [[graft.plans.ManifestAggOnV1]]): when every live group is
+    * `graft.t` or `<cat>.t`, and `df.agg(...)` over `format("graft-table")`,
+    * collapse to: when every live group is
     * plain data carrying the needed stats, the aggregate answers from ONE
     * manifest read as a [[LocalScan]] — zero file scans on a 100 TB
     * table. The table layer's exactness gates (MoR states, branch views,
@@ -200,7 +200,7 @@ final class GraftScanBuilder(t: ManagedTable, pinnedRef: Option[String] = None,
           case ("count", _) => t.fastRowCount(pinnedRef).getOrElse(return None)
           case (k, Some(c)) =>
             t.manifestColExtreme(c, wantMin = k == "min", pinnedRef)
-              .map(graft.plans.ManifestAggOnV1.statsToColumn(_, t.meta.schema(c).dataType, session))
+              .map(GraftScan.statsToColumn(_, t.meta.schema(c).dataType, session))
               .getOrElse(return None)
           case _ => return None
         } else {
@@ -229,7 +229,7 @@ final class GraftScanBuilder(t: ManagedTable, pinnedRef: Option[String] = None,
                     else if (cmp >= 0) a else b
                   case None => return None
                 })
-              graft.plans.ManifestAggOnV1.statsToColumn(
+              GraftScan.statsToColumn(
                 folded, t.meta.schema(c).dataType, session)
             case _ => return None
           }
@@ -256,7 +256,7 @@ final class GraftScanBuilder(t: ManagedTable, pinnedRef: Option[String] = None,
           val aVals = wants.zip(vals).map {
             case (("count", _), v) => v
             case ((_, Some(c)), v) =>
-              graft.plans.ManifestAggOnV1.statsToColumn(v, t.meta.schema(c).dataType, session)
+              GraftScan.statsToColumn(v, t.meta.schema(c).dataType, session)
             case _ => throw new IllegalStateException("unreachable")
           }
           InternalRow.fromSeq(gVals ++ aVals)
@@ -585,6 +585,20 @@ object GraftScan {
     plan.contains("LocalTableScan") && !plan.contains("BatchScan")
   }
 
+  /** Stats-domain value (i→Long, f→Double, s→String) → the column's
+    * Catalyst-INTERNAL value through Catalyst's own cast.
+    */
+  def statsToColumn(raw: Any, dt: DataType, session: SparkSession): Any = {
+    val normalized = raw match {
+      case n: Number if !raw.isInstanceOf[java.lang.Double] &&
+          !raw.isInstanceOf[java.lang.Float] => Literal(n.longValue())
+      case n: Number => Literal(n.doubleValue())
+      case other     => Literal(String.valueOf(other))
+    }
+    Cast(normalized, dt,
+      Some(session.sessionState.conf.sessionLocalTimeZone)).eval(null)
+  }
+
   /** The manifest tuple key of `c` when it is an identity partition
     * source of a single-epoch table — the column whose equality filters
     * can be consumed exactly.
@@ -865,12 +879,19 @@ object GraftScan {
 
     // the streaming path builds ONE factory per stream and plans
     // partitions per micro-batch — skip the reader builds it discards.
-    // A plan with no split (a point lookup every group's key filter
-    // rules out) never creates a reader either: each reader build
-    // broadcasts a Hadoop conf, most of such a lookup's planning time.
+    // Each reader build broadcasts a Hadoop conf (most of a point
+    // lookup's planning time), so a plan builds only the readers its
+    // splits open, and none without a split. The exec keeps the first
+    // factory when a runtime filter re-plans, and a re-plan can turn a
+    // served upsert group into a delete carrier: any upsert group in
+    // reach keeps the delete reader.
     val factory =
-      if (withFactory && partitions.nonEmpty) buildFactory(spark, t, required, parquetFilters)
-      else null
+      if (withFactory && partitions.nonEmpty) {
+        val splits = partitions.map(_.asInstanceOf[GraftInputPartition])
+        buildFactory(spark, t, required, parquetFilters,
+          posdels = splits.exists(_.posdelFiles.nonEmpty),
+          deletes = (scanEntries ++ carriers).exists(_.kind == Manifest.Upsert))
+      } else null
 
     val dataRows = dataServed.map(_.rows)
     val numRowsOpt =
@@ -903,8 +924,8 @@ object GraftScan {
               if (bounds.forall(_.nulls >= 0L)) Some(bounds.map(_.nulls).sum) else None
             val (mino, maxo) = tag match {
               case "i" | "f" =>
-                (Some(graft.plans.ManifestAggOnV1.statsToColumn(mn, f.dataType, spark)),
-                 Some(graft.plans.ManifestAggOnV1.statsToColumn(mx, f.dataType, spark)))
+                (Some(statsToColumn(mn, f.dataType, spark)),
+                 Some(statsToColumn(mx, f.dataType, spark)))
               case _ => (None, None)
             }
             // NDV upper bound: per-group approx counts sum, capped at the
@@ -930,13 +951,16 @@ object GraftScan {
       numRows = numRowsOpt, colStats = colStats)
   }
 
-  /** The split-reader factory — schema-determined only (independent of
-    * which entries a particular plan serves), so the streaming path
-    * builds it ONCE per stream instead of per micro-batch.
+  /** The split-reader factory. `posdels`/`deletes` say whether any split
+    * may carry posdel sidecars / delete sources; the readers they need
+    * are built only then. The streaming path builds it ONCE per stream
+    * with every reader, instead of per micro-batch.
     */
   private[catalog] def buildFactory(spark: SparkSession, t: ManagedTable,
                                     required: StructType,
-                                    parquetFilters: Array[Filter] = Array.empty)
+                                    parquetFilters: Array[Filter] = Array.empty,
+                                    posdels: Boolean = true,
+                                    deletes: Boolean = true)
       : GraftReaderFactory = {
     val keyed = t.meta.identifierFields.nonEmpty
     val aliases = t.v2RenameAliasesLive
@@ -1003,8 +1027,6 @@ object GraftScan {
     // the conf it broadcasts.
     val opts = Map(
       org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false")
-    val dataReader = fmt.buildReaderWithPartitionValues(spark, dataSchema,
-      new StructType(), matSchema, Nil, opts, spark.sessionState.newHadoopConf())
     // filtered twin for POSDEL-FREE splits: the pushed predicates reach the
     // parquet reader for row-group/page skipping (dropped rows are exactly
     // rows the residual filter above drops anyway — predicates referencing
@@ -1017,12 +1039,19 @@ object GraftScan {
       else fmt.buildReaderWithPartitionValues(spark, dataSchema,
         new StructType(), matSchema, parquetFilters.toIndexedSeq, opts,
         spark.sessionState.newHadoopConf())
+    val dataReader =
+      if (dataReaderF != null && !posdels) null
+      else fmt.buildReaderWithPartitionValues(spark, dataSchema,
+        new StructType(), matSchema, Nil, opts, spark.sessionState.newHadoopConf())
     val delReader =
-      if (keyed) fmt.buildReaderWithPartitionValues(spark, dataSchema,
+      if (keyed && deletes) fmt.buildReaderWithPartitionValues(spark, dataSchema,
         new StructType(), delSchema, Nil, opts, spark.sessionState.newHadoopConf())
       else null
-    val posdelReader = fmt.buildReaderWithPartitionValues(spark, ManagedTable.PosDelSchema,
-      new StructType(), ManagedTable.PosDelSchema, Nil, opts, spark.sessionState.newHadoopConf())
+    val posdelReader =
+      if (posdels) fmt.buildReaderWithPartitionValues(spark, ManagedTable.PosDelSchema,
+        new StructType(), ManagedTable.PosDelSchema, Nil, opts,
+        spark.sessionState.newHadoopConf())
+      else null
 
     new GraftReaderFactory(dataReader, delReader, posdelReader,
       matSchema, outBind, idIdxs, delSchema.length - 1,
@@ -1087,14 +1116,14 @@ object GraftScan {
   * file's row index — the posdel pair domain.
   */
 final class GraftReaderFactory(
-    dataReader: PartitionedFile => Iterator[InternalRow],
-    delReader: PartitionedFile => Iterator[InternalRow],
-    posdelReader: PartitionedFile => Iterator[InternalRow],
+    private[catalog] val dataReader: PartitionedFile => Iterator[InternalRow],
+    private[catalog] val delReader: PartitionedFile => Iterator[InternalRow],
+    private[catalog] val posdelReader: PartitionedFile => Iterator[InternalRow],
     matSchema: StructType, outBind: Array[Int], idIdxs: Array[Int], delSeqIdx: Int,
     outTypes: Array[DataType],
     aliasIdxs: Array[Array[Int]] = Array.empty,
     defaultVals: Array[Option[(Long, Any)]] = Array.empty,
-    dataReaderFiltered: PartitionedFile => Iterator[InternalRow] = null,
+    private[catalog] val dataReaderFiltered: PartitionedFile => Iterator[InternalRow] = null,
     epochBoundaries: Array[Long] = Array.empty,
     idAliasIdxs: Array[Array[Int]] = Array.empty,
     idDefaults: Array[Option[(Long, Any)]] = Array.empty)

@@ -1,33 +1,42 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
+import graft.catalog.{GraftCatalog, GraftV2Table}
 import graft.tables.ManagedTable
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SQLContext}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession, SQLContext}
+import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.connector.catalog.{Identifier, MetadataColumn, SupportsMetadataColumns, SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** `spark.read.format("graft-table")` — the no-extensions integration surface:
   * any third-party Spark job reads (and appends/overwrites) a graft
-  * table without registering [[graft.GraftExtensions]], through Spark's
-  * stable V1 source API. The SQL surface (DML, DDL, time travel
-  * grammar) still needs the extensions; this is the programmatic seam a
-  * foreign pipeline embeds.
+  * table without registering [[graft.GraftExtensions]]. The SQL surface
+  * (DML, DDL, time travel grammar) still needs the extensions; this is
+  * the programmatic seam a foreign pipeline embeds.
   *
   * Options: `warehouse` (or the session's `spark.graft.warehouse`),
   * `table` (or `path`), and one of `versionAsOf` = snapshot number /
   * tag name / WAP branch name — the same ref resolution as SQL
   * `VERSION AS OF` (round 8).
   *
-  * Scan: [[PrunedFilteredScan]] — pushed filters drive COMPOSITE
-  * MANIFEST pruning ([[ManagedTable.readPrunedConjunction]]): candidate
-  * entry sets intersect across ALL pushed conjuncts (bounds ∧ Bloom ∧
-  * partition-tuple per conjunct), live and ref/time-travel reads alike,
-  * and the filters are then declared UNHANDLED, so Spark re-applies
-  * every predicate on top: pruning opens a superset of the matching
-  * groups, semantics are exactly the full scan's. Columns are pruned
-  * before the scan materializes, so the parquet reader sees the narrow
-  * schema.
+  * Batch reads of an existing table are a DSv2 [[TableProvider]] read
+  * ([[getTable]]): the table [[GraftCatalog.loadTable]] returns, the one
+  * `graft.<t>` and `<cat>.<t>` read, so all three spellings plan the same
+  * [[graft.catalog.GraftScan]] — pruning, manifest-answered aggregates,
+  * metadata columns and storage-partitioned joins included, with or
+  * without the extensions. The handle is read-only, so Spark keeps the
+  * V1 calls below for everything else: every `SaveMode` write, the
+  * `changesFrom`/`changesTo` batch changelog, the `readStream`
+  * changelog source and the `writeStream` sink. Spark itself refuses a
+  * user-specified `.schema(...)` on reads.
   *
   * Write: `SaveMode.Append` → [[ManagedTable.append]] (MoR upsert
   * semantics ride the table's identifier fields on read),
@@ -37,13 +46,13 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *
   * `spark.wap.branch` (round 10): the V1 seam adjudicates the session's
   * write-audit-publish conf exactly like SQL — plain reads of a table
-  * carrying the branch see the staged view, appends stage onto the
-  * branch (created on first touch), overwrites refuse; the streaming
-  * SINK refuses under an active branch (its exactly-once marker rides
-  * live commits), and the changelog source/batch changes keep serving
-  * the LIVE changelog (staged state joins it at publish).
+  * carrying the branch see the staged view (the catalog's rule), appends
+  * stage onto the branch (created on first touch), overwrites refuse;
+  * the streaming SINK refuses under an active branch (its exactly-once
+  * marker rides live commits), and the changelog source/batch changes
+  * keep serving the LIVE changelog (staged state joins it at publish).
   */
-class GraftSource extends RelationProvider with SchemaRelationProvider
+class GraftSource extends TableProvider with RelationProvider
     with CreatableRelationProvider with DataSourceRegister
     with org.apache.spark.sql.sources.StreamSinkProvider
     with org.apache.spark.sql.sources.StreamSourceProvider {
@@ -53,6 +62,31 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
   // `SELECT ... FROM graft.t` as a direct-file query (`format`.`path`)
   // and fail analysis before the graft resolution rules run
   override def shortName(): String = "graft-table"
+
+  /** Unused: [[getTable]] answers with the catalog table's own schema. */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = new StructType()
+
+  /** The catalog's table for a batch read, pinned to `versionAsOf` when
+    * set: ref resolution, `spark.wap.branch` and unknown-ref errors are
+    * [[GraftCatalog]]'s. A missing table and a `changesFrom`/`changesTo`
+    * read get a table without capabilities, which Spark sends to the V1
+    * [[createRelation]].
+    */
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+                        properties: java.util.Map[String, String]): Table = {
+    val spark = SparkSession.active
+    val opts = CaseInsensitiveMap(properties.asScala.toMap)
+    val (wh, name) = resolve(spark, opts)
+    val catalog = GraftCatalog.forWarehouse(spark, wh)
+    val ident = Identifier.of(Array.empty, name)
+    val loaded =
+      if (opts.contains("changesFrom") || opts.contains("changesTo")) None
+      else try Some(opts.get("versionAsOf").filter(_.nonEmpty)
+          .fold(catalog.loadTable(ident))(catalog.loadTable(ident, _)))
+        catch { case _: NoSuchTableException => None }
+    loaded.collect { case t: GraftV2Table => new GraftReadTable(t) }
+      .getOrElse(GraftSource.V1Only)
+  }
 
   private def changeSchema(spark: org.apache.spark.sql.SparkSession,
                            wh: String, name: String): StructType = {
@@ -105,7 +139,7 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
   override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
                             providerName: String, parameters: Map[String, String])
       : (String, StructType) = {
-    val (wh, name) = resolve(sqlContext, parameters)
+    val (wh, name) = resolve(sqlContext.sparkSession, parameters)
     require(schema.isEmpty, "graft source: the changelog schema is fixed — " +
       "drop the .schema(...) call")
     (s"graft.$name", changeSchema(sqlContext.sparkSession, wh, name))
@@ -115,7 +149,7 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
                             schema: Option[StructType], providerName: String,
                             parameters: Map[String, String])
       : org.apache.spark.sql.execution.streaming.Source = {
-    val (wh, name) = resolve(sqlContext, parameters)
+    val (wh, name) = resolve(sqlContext.sparkSession, parameters)
     // `startingVersion` = latest | <n>: where the stream ATTACHES. Without
     // it the seed batch is the full net snapshot (0, current] — correct
     // for a fresh replica, but attaching a follower to an existing LARGE
@@ -234,7 +268,7 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
                           partitionColumns: Seq[String],
                           outputMode: org.apache.spark.sql.streaming.OutputMode)
       : org.apache.spark.sql.execution.streaming.Sink = {
-    val (wh, name) = resolve(sqlContext, parameters)
+    val (wh, name) = resolve(sqlContext.sparkSession, parameters)
     // Complete mode re-delivers the FULL result every trigger — appending
     // it would duplicate every group each batch; refuse up front
     require(outputMode != org.apache.spark.sql.streaming.OutputMode.Complete(),
@@ -290,10 +324,10 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
     new GraftSink(sqlContext.sparkSession, wh, name, parameters)
   }
 
-  private def resolve(sqlContext: SQLContext,
+  private def resolve(spark: SparkSession,
                       parameters: Map[String, String]): (String, String) = {
     val wh = parameters.get("warehouse")
-      .orElse(sqlContext.sparkSession.conf.getOption("spark.graft.warehouse"))
+      .orElse(spark.conf.getOption("spark.graft.warehouse"))
       .getOrElse(throw new IllegalArgumentException(
         "graft source: set the 'warehouse' option or spark.graft.warehouse"))
     val name = parameters.get("table").orElse(parameters.get("path"))
@@ -304,7 +338,7 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
 
   override def createRelation(sqlContext: SQLContext,
                               parameters: Map[String, String]): BaseRelation = {
-    val (wh, name) = resolve(sqlContext, parameters)
+    val (wh, name) = resolve(sqlContext.sparkSession, parameters)
     // BATCH changelog read (round 9): `changesFrom`/`changesTo` expose
     // readChangesBetween through the no-extensions seam — the incremental
     // batch-ETL shape (poll versions(), read the delta, advance a
@@ -325,24 +359,15 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
       val to = chTo.map(v(_, "changesTo")).getOrElse(t.meta.currentVersion)
       return GraftChangesRelation(sqlContext, wh, name, from, to)
     }
-    GraftRelation(sqlContext, wh, name, parameters.get("versionAsOf"))
+    // [[getTable]] serves every existing table; a plain read lands here
+    // only when the table is missing
+    throw new IllegalArgumentException(s"graft table '$name' not found in $wh")
   }
-
-  /** User-specified schemas are not supported (the table's committed
-    * schema is authoritative) — refuse precisely instead of silently
-    * mis-projecting.
-    */
-  override def createRelation(sqlContext: SQLContext,
-                              parameters: Map[String, String],
-                              schema: StructType): BaseRelation =
-    throw new IllegalArgumentException(
-      "graft source: the table's committed schema is authoritative — " +
-        "drop the .schema(...) call")
 
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,
                               parameters: Map[String, String],
                               data: DataFrame): BaseRelation = {
-    val (wh, name) = resolve(sqlContext, parameters)
+    val (wh, name) = resolve(sqlContext.sparkSession, parameters)
     val spark = sqlContext.sparkSession
     val existing = ManagedTable.load(spark, wh, name)
     val t = existing.getOrElse {
@@ -378,8 +403,40 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
       case SaveMode.Ignore if existing.isDefined => () // per contract: no-op
       case SaveMode.Ignore => land(data)
     }
-    GraftRelation(sqlContext, wh, name, None)
+    // Spark only reads the returned relation's schema
+    val written = t.meta.schema
+    val ctx = sqlContext
+    new BaseRelation {
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType = written
+    }
   }
+}
+
+object GraftSource {
+  /** A table Spark reads and writes through the V1 calls. */
+  private object V1Only extends Table {
+    override def name(): String = "graft-table"
+    override def schema(): StructType = new StructType()
+    override def capabilities(): java.util.Set[TableCapability] =
+      java.util.EnumSet.noneOf(classOf[TableCapability])
+  }
+}
+
+/** A catalog table as `format("graft-table")` reads it: batch reads only,
+  * and no `SupportsWrite`, so Spark keeps saves on the V1 write path.
+  */
+private[sources] final class GraftReadTable(table: GraftV2Table)
+    extends Table with SupportsRead with SupportsMetadataColumns {
+  override def name(): String = table.name()
+  override def schema(): StructType = table.schema()
+  override def partitioning(): Array[Transform] = table.partitioning()
+  override def properties(): java.util.Map[String, String] = table.properties()
+  override def metadataColumns(): Array[MetadataColumn] = table.metadataColumns()
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    table.newScanBuilder(options)
 }
 
 /** The V1 changelog streaming source behind `readStream.format("graft-table")`:
@@ -738,214 +795,4 @@ private[sources] final case class GraftChangesRelation(
   override def needConversion: Boolean = false
   override def buildScan(): RDD[Row] =
     changes.queryExecution.toRdd.asInstanceOf[RDD[Row]]
-}
-
-/** Manifest-answerable aggregate surface of the V1 relation (round 10):
-  * the plan-level seam [[graft.plans.ManifestAggOnV1]] matches so a bare
-  * `df.agg(min/max/count)` over `format("graft-table")` answers from the
-  * manifest (LocalRelation, zero file scans) like the V2 scan builder's
-  * answer to `SELECT min(c) FROM graft.t` — the V1 scan contract itself cannot
-  * host this (buildScan can't see WHICH aggregate sits above it).
-  * Answers are None whenever the manifest is not exact (MoR state,
-  * ref/branch views) — the caller falls back to the real scan.
-  */
-trait ManifestAnswerable {
-  /** Exact LIVE row count from the manifest, when every group is plain
-    * data with recorded rows.
-    */
-  def manifestCount: Option[Long]
-
-  /** Exact LIVE min/max of a column: (raw stats-domain value, resolved
-    * field) — the caller casts into the column's type.
-    */
-  def manifestExtreme(colName: String, wantMin: Boolean): Option[(Any, StructField)]
-
-  /** Exact LIVE per-partition-tuple aggregates for `GROUP BY <identity
-    * partition source(s)>`: (group fields, per-want agg field (None for
-    * count), rows as (per-group tuple strings / None for null, raw
-    * values)) — see [[graft.tables.ManagedTable.manifestGroupedAgg]] for
-    * the exactness contract.
-    */
-  def manifestGroupedAgg(groupCols: Seq[String], wants: Seq[(String, Option[String])])
-      : Option[(Seq[StructField], Seq[Option[StructField]],
-        Seq[(Seq[Option[String]], Seq[Any])])]
-}
-
-private[sources] final case class GraftRelation(
-    sqlContext: SQLContext, wh: String, name: String,
-    versionAsOf: Option[String]) extends BaseRelation with PrunedFilteredScan
-    with ManifestAnswerable {
-
-  /** Live view only: a ref read's pinned manifest is not the loaded
-    * table's, and a staged branch view must aggregate staged rows.
-    */
-  private def liveView: Boolean = versionAsOf.forall(_.isEmpty) && wapBranch.isEmpty
-
-  /** The ref the metadata layer may answer aggregates for: None = live
-    * (when no wap branch is active), Some(ref) = an explicit pinned
-    * snapshot/tag (round 10 — the table layer resolves and refuses
-    * branches itself). Returns None (no answer) under an active branch
-    * view, whose staged rows only the scan sees.
-    */
-  private def metaRef: Option[Option[String]] =
-    if (liveView) Some(None)
-    else versionAsOf.filter(_.nonEmpty).map(Some(_))
-
-  override def manifestCount: Option[Long] =
-    metaRef.flatMap(table.fastRowCount)
-
-  /** Manifest-summed file bytes — the broadcast-side signal. Without
-    * this override the relation reports `defaultSizeInBytes` (huge) and
-    * a small graft dimension table in a big join can never be chosen as
-    * the broadcast side. Branch views (metaRef None) and pre-upgrade
-    * manifests keep the conservative default.
-    */
-  override def sizeInBytes: Long =
-    metaRef.flatMap(table.manifestSizeInBytes)
-      .getOrElse(super.sizeInBytes)
-
-  /** Exact name first; case-insensitive only when unambiguous (two
-    * columns differing by case must not answer for each other).
-    */
-  private def resolveField(colName: String): Option[StructField] = {
-    val cands = table.meta.schema.fields.filter(_.name.equalsIgnoreCase(colName))
-    cands.find(_.name == colName)
-      .orElse(if (cands.length == 1) cands.headOption else None)
-  }
-
-  override def manifestExtreme(colName: String, wantMin: Boolean): Option[(Any, StructField)] =
-    for {
-      ref <- metaRef
-      fld <- resolveField(colName)
-      v <- table.manifestColExtreme(fld.name, wantMin, ref)
-    } yield (v, fld)
-
-  override def manifestGroupedAgg(groupCols: Seq[String], wants: Seq[(String, Option[String])])
-      : Option[(Seq[StructField], Seq[Option[StructField]],
-        Seq[(Seq[Option[String]], Seq[Any])])] =
-    for {
-      ref <- metaRef
-      gs <- traverse(groupCols.map(resolveField))
-      aggFields <- traverse(wants.map {
-        case (_, Some(c)) => resolveField(c).map(Some(_))
-        case (_, None)    => Some(None)
-      })
-      resolved = wants.zip(aggFields).map { case ((k, _), f) => (k, f.map(_.name)) }
-      rows <- table.manifestGroupedAgg(gs.map(_.name), resolved, ref)
-    } yield (gs, aggFields, rows)
-
-  private def traverse[A](xs: Seq[Option[A]]): Option[Seq[A]] =
-    if (xs.forall(_.isDefined)) Some(xs.map(_.get)) else None
-
-  @transient private lazy val table: ManagedTable =
-    ManagedTable.load(sqlContext.sparkSession, wh, name).getOrElse(
-      throw new IllegalArgumentException(s"graft table '$name' not found in $wh"))
-
-  /** An active `spark.wap.branch` naming a live branch of THIS table
-    * routes plain reads to the branch's staged view — the SAME
-    * adjudication as SQL reads ([[graft.catalog.GraftCatalog.loadTable]]):
-    * one session conf must never make `SELECT * FROM graft.t` and
-    * `spark.read.format("graft-table")` return different answers. An
-    * absent branch falls back to live; an explicit `versionAsOf` wins
-    * (it may itself name the branch).
-    */
-  @transient private lazy val wapBranch: Option[String] =
-    if (versionAsOf.exists(_.nonEmpty)) None
-    else sqlContext.sparkSession.conf.getOption("spark.wap.branch")
-      .filter(_.nonEmpty).filter(table.branches().contains)
-
-  /** Pinned at relation creation — the scan-plans-pin-a-snapshot model;
-    * ref resolution shared with SQL ([[ManagedTable.readRef]]).
-    */
-  @transient private lazy val snapshot: DataFrame = versionAsOf match {
-    case Some(v) if v.nonEmpty => table.readRef(v)
-    case _ => wapBranch.map(table.readBranch).getOrElse(table.read())
-  }
-
-  /** Live reads answer the schema from METADATA (the declared table
-    * schema IS `read()`'s output schema) — building the MoR scan plan
-    * just for field names would list files at every analysis, and the
-    * manifest-answered `count(*)` path must not touch data paths at
-    * all. Ref reads keep the planned schema (version reads surface
-    * derived partition columns).
-    */
-  override def schema: StructType =
-    if (versionAsOf.forall(_.isEmpty) && wapBranch.isEmpty)
-      org.apache.spark.sql.graftbridge.GraftBridge.asNullable(table.meta.schema)
-    else snapshot.schema
-
-  // buildScan returns the pruned plan's InternalRow RDD directly
-  override def needConversion: Boolean = false
-
-  // every filter is re-applied by Spark on top — pruning below is a
-  // superset scan, never the final predicate
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
-
-  override def buildScan(requiredColumns: Array[String],
-                         filters: Array[Filter]): RDD[Row] = {
-    // zero-column unfiltered scan = count(*): answer from the MANIFEST
-    // when it is exact (every live group plain data with recorded rows —
-    // fastRowCount's contract; MoR states fall through to the real scan).
-    // At 100 TB this is the difference between milliseconds and a
-    // full-table job through the no-extensions seam. Live reads and
-    // pinned snapshot/tag refs (round 10) — a staged branch view must
-    // count staged rows, which only the scan sees.
-    if (requiredColumns.isEmpty && filters.isEmpty) {
-      metaRef.flatMap(table.fastRowCount).foreach { n =>
-        return sqlContext.sparkSession.range(n).toDF().select()
-          .queryExecution.toRdd.asInstanceOf[RDD[Row]]
-      }
-    }
-    val base = pruned(filters)
-    val projected =
-      if (requiredColumns.isEmpty) base.select()
-      else base.select(requiredColumns.map(col).toIndexedSeq: _*)
-    projected.queryExecution.toRdd.asInstanceOf[RDD[Row]]
-  }
-
-  /** COMPOSITE manifest pruning from pushed filters (round 9): every
-    * pushed conjunct contributes — one [[ManagedTable.PruneConjunct]] per
-    * equality plus one per range column (bounds grouped PER COLUMN, so
-    * `a > 1 AND b < 5 AND a < 9` prunes on a's closed range instead of
-    * silently degrading) — and the candidate sets intersect, bounds ∧
-    * Bloom ∧ tuple per conjunct. Ref/time-travel reads route through the
-    * SAME pruning against the pinned manifest instead of an unpruned
-    * early-return. Strict bounds prune as their inclusive counterparts
-    * (superset-sound; Spark re-applies every filter on top).
-    */
-  private def pruned(filters: Array[Filter]): DataFrame = {
-    // manifest pruning scans LIVE entries — under an active wap branch
-    // the read must see the staged view instead, so pruning steps aside
-    // (correctness over the group-skip win; same rule as SQL)
-    if (wapBranch.isDefined) return snapshot
-    val cols = schema.fieldNames.toSet
-    val eqs = filters.collect {
-      case EqualTo(a, v) if v != null && cols.contains(a) =>
-        ManagedTable.PruneConjunct(a, Some(v), Some(v))
-      // IN lists prune as any-value-may-be-present (null members never
-      // match a row, so probing the non-null values is exact)
-      case In(a, vs) if cols.contains(a) =>
-        ManagedTable.PruneConjunct(a, None, None, Some(vs.toSeq.filter(_ != null)))
-    }.toSeq
-    val lows = filters.collect {
-      case GreaterThan(a, v) if v != null && cols.contains(a) => a -> v
-      case GreaterThanOrEqual(a, v) if v != null && cols.contains(a) => a -> v
-    }
-    val highs = filters.collect {
-      case LessThan(a, v) if v != null && cols.contains(a) => a -> v
-      case LessThanOrEqual(a, v) if v != null && cols.contains(a) => a -> v
-    }
-    // stacked bounds on one side fold to the TIGHTEST
-    // ([[ManagedTable.tightestBound]])
-    val ranges = (lows.map(_._1) ++ highs.map(_._1)).distinct.toSeq.map { c =>
-      ManagedTable.PruneConjunct(c,
-        ManagedTable.tightestBound(
-          lows.collect { case (`c`, v) => v }, takeMax = true),
-        ManagedTable.tightestBound(
-          highs.collect { case (`c`, v) => v }, takeMax = false))
-    }
-    val preds = eqs ++ ranges
-    if (preds.isEmpty) snapshot
-    else table.readPrunedConjunction(preds, versionAsOf.filter(_.nonEmpty))
-  }
 }

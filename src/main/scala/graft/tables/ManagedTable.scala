@@ -496,24 +496,6 @@ final class ManagedTable private (
     */
   def rowCount(): Long = fastRowCount.getOrElse(read().count())
 
-  /** Total on-disk bytes of the snapshot's live groups, from the
-    * manifest-carried file sizes — one metadata read, zero filesystem
-    * calls. None when any entry predates file-size stamping (callers
-    * fall back to a conservative default). Drives the V1 relation's
-    * `sizeInBytes`, i.e. Spark's broadcast-side selection: without it a
-    * small graft dimension table reports the default "huge" size and a
-    * 100 TB fact join that should broadcast it sort-merges instead.
-    * MoR states overestimate (hidden rows still occupy bytes) — the
-    * safe direction for a broadcast decision.
-    */
-  def manifestSizeInBytes(ref: Option[String] = None): Option[Long] =
-    refEntries(ref).flatMap { entries =>
-      val data = entries.filterNot(_.kind == Manifest.PosDel)
-      if (data.forall(_.files.nonEmpty))
-        Some(data.flatMap(_.files).map(_.bytes).sum)
-      else None
-    }
-
   /** Exact table-level MIN/MAX of `c` from manifest column bounds, when
     * the manifest can answer it: every live group is plain data and
     * carries bounds for `c` (bounds cover the group's non-null values —
@@ -1686,7 +1668,7 @@ final class ManagedTable private (
     *
     * Contract: the result holds a SUPERSET of the rows matching the
     * conjunction and a subset of the snapshot's rows — callers MUST keep
-    * the exact predicate on top (the V1 relation does). Soundness per
+    * the exact predicate on top. Soundness per
     * conjunct follows [[readWhereEq]] / [[readColRange]] /
     * [[readSourceRange]]'s per-kind rules: identifier
     * and tuple conjuncts prune upsert groups outright (a group with no
@@ -5304,23 +5286,6 @@ object ManagedTable {
     */
   final case class PruneConjunct(c: String, lo: Option[Any], hi: Option[Any],
                                  values: Option[Seq[Any]] = None)
-
-  /** Fold stacked one-sided bounds on a column to the TIGHTEST (max of
-    * lower bounds / min of upper bounds) — `k > 5 AND k > 10` prunes at
-    * 10, not whichever conjunct was listed first (the V1 pushed-filter
-    * path).
-    * Values must already be in the column's domain (one Scala class per
-    * column — the [[PruneConjunct]] contract), so Comparable is the
-    * right order; a non-Comparable domain keeps any one bound (each
-    * converted bound is individually superset-safe).
-    */
-  def tightestBound(vs: Seq[Any], takeMax: Boolean): Option[Any] =
-    if (vs.forall(_.isInstanceOf[Comparable[_]]))
-      vs.reduceOption { (a, b) =>
-        val c = a.asInstanceOf[Comparable[Any]].compareTo(b)
-        if ((c >= 0) == takeMax) a else b
-      }
-    else vs.headOption
 
   /** Reserved property prefix for snapshot tags ([[ManagedTable.tag]]). */
   val TagPrefix = "ref.tag."

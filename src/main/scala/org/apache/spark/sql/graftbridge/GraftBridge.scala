@@ -84,13 +84,6 @@ object GraftBridge {
     cs.internalCreateDataFrame(df.queryExecution.toRdd, df.schema, isStreaming = true)
   }
 
-  /** Recursively nullable view of a schema (`asNullable` is
-    * `private[spark]`) — a file-scan relation's output is all-nullable,
-    * so a metadata-answered schema must match it field for field.
-    */
-  def asNullable(s: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = s.asNullable
-
   /** Undo [[streamingDataFrame]]'s flag so a `getBatch` result's CONTENT
     * can be asserted without running the engine (batch execution refuses
     * streaming-flagged plans) — spec support for source unit tests.

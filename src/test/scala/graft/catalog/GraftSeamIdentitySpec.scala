@@ -12,11 +12,12 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `graft.<t>` (the [[graft.GraftExtensions]] SQL surface) and `<cat>.<t>`
-  * (a registered [[GraftCatalog]]) are one table: every read shape returns
-  * the same rows through both spellings and plans the same scan — a
-  * `BatchScan` over [[GraftScan]] or a manifest-answered `LocalTableScan`,
-  * never a V1 file scan.
+/** `graft.<t>` (the [[graft.GraftExtensions]] SQL surface), `<cat>.<t>`
+  * (a registered [[GraftCatalog]]) and `format("graft-table")` (the
+  * DataFrame reader) are one table: every read shape returns the same rows
+  * through each spelling and plans the same scan — a `BatchScan` over
+  * [[GraftScan]] or a manifest-answered `LocalTableScan`, never a V1 file
+  * scan.
   */
 class GraftSeamIdentitySpec extends AnyFunSuite with SharedSpark with AdaptiveSparkPlanHelper {
 
@@ -51,6 +52,12 @@ class GraftSeamIdentitySpec extends AnyFunSuite with SharedSpark with AdaptiveSp
       case _: FileSourceScanExec  => "FileSourceScan"
       case _: RowDataSourceScanExec => "RowDataSourceScan"
     }.sorted
+
+  /** The manifest group dirs a plan's splits serve, adaptive stages included. */
+  private def groupDirs(df: DataFrame): Set[String] =
+    collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
+      .flatMap(_.inputPartitions).collect { case p: GraftScan.GraftInputPartition => p }
+      .flatMap(_.dataFiles).map(f => f.path.substring(0, f.path.lastIndexOf('/'))).toSet
 
   private val schema = StructType(Seq(
     StructField("id", IntegerType, nullable = false),
@@ -99,6 +106,19 @@ class GraftSeamIdentitySpec extends AnyFunSuite with SharedSpark with AdaptiveSp
       def same(sql: String): Unit =
         agree(sql.replace("$T", "graft."), sql.replace("$T", "wh."))
 
+      // the DataFrame spelling: same rows, scans and served groups as SQL
+      def v1(t: String, ref: Any = null): DataFrame = {
+        val r = s2.read.format("graft-table").option("table", t)
+        Option(ref).fold(r)(v => r.option("versionAsOf", v.toString)).load()
+      }
+      def third(graftSql: String, df: DataFrame): Unit = {
+        val g = s2.sql(graftSql)
+        assert(rows(df) == rows(g), s"rows differ: $graftSql")
+        assert(scans(df) == scans(g), s"scans differ for $graftSql: ${scans(df)} vs ${scans(g)}")
+        assert(groupDirs(df) == groupDirs(g), s"served groups differ for $graftSql")
+      }
+      import org.apache.spark.sql.functions.{count, lit, max, min, sum}
+
       for (t <- Seq("plain", "mor", "orct")) {
         def both(shape: String): Unit = same(shape.replace("$1", t))
         both("SELECT * FROM $T$1")
@@ -120,19 +140,59 @@ class GraftSeamIdentitySpec extends AnyFunSuite with SharedSpark with AdaptiveSp
         // a bare LIMIT may serve any rows: compare the count
         val lim = s2.sql(s"SELECT * FROM graft.$t LIMIT 4")
         assert(lim.count() == 4 && scans(lim) == scans(s2.sql(s"SELECT * FROM wh.$t LIMIT 4")))
+        assert(v1(t).limit(4).count() == 4 && scans(v1(t).limit(4)) == scans(lim))
+
+        third(s"SELECT * FROM graft.$t", v1(t))
+        third(s"SELECT * FROM graft.$t WHERE id = 7", v1(t).where(col("id") === 7))
+        third(s"SELECT id, v FROM graft.$t WHERE id > 20 AND day = 'd1'",
+          v1(t).where(col("id") > 20 && col("day") === "d1").select("id", "v"))
+        third(s"SELECT * FROM graft.$t WHERE id IN (1, 2, 3)", v1(t).where(col("id").isin(1, 2, 3)))
+        third(s"SELECT * FROM graft.$t WHERE id = -1", v1(t).where(col("id") === -1))
+        third(s"SELECT id FROM graft.$t ORDER BY id LIMIT 5", v1(t).select("id").orderBy("id").limit(5))
+        third(s"SELECT id, v FROM graft.$t ORDER BY v DESC LIMIT 3",
+          v1(t).select("id", "v").orderBy(col("v").desc).limit(3))
+        third(s"SELECT count(*), min(id), max(id) FROM graft.$t",
+          v1(t).agg(count(lit(1)), min("id"), max("id")))
+        third(s"SELECT day, count(*) AS n, max(id) FROM graft.$t GROUP BY day",
+          v1(t).groupBy("day").agg(count(lit(1)).as("n"), max("id")))
+        third(s"SELECT day, sum(v) FROM graft.$t WHERE id > 3 GROUP BY day",
+          v1(t).where(col("id") > 3).groupBy("day").agg(sum("v")))
+        third(s"SELECT * FROM graft.$t VERSION AS OF ${firstVersion(t)}", v1(t, firstVersion(t)))
       }
+      third("SELECT count(*) FROM graft.plain VERSION AS OF 'pin'", v1("plain", "pin").agg(count(lit(1))))
+      third("SELECT * FROM graft.`mor$branch_audit`", v1("mor", "audit"))
       same("SELECT count(*) FROM $Tplain VERSION AS OF 'pin'")
       agree("SELECT * FROM graft.`mor$branch_audit`", "SELECT * FROM wh.mor VERSION AS OF 'audit'")
       s2.conf.set("spark.wap.branch", "audit")
       try {
         same("SELECT * FROM $Tmor")
         same("SELECT count(*) FROM $Tmor WHERE id >= 100")
+        third("SELECT * FROM graft.mor", v1("mor"))
+        third("SELECT count(*) FROM graft.mor WHERE id >= 100",
+          v1("mor").where(col("id") >= 100).agg(count(lit(1))))
         assert(s2.sql("SELECT count(*) FROM graft.mor WHERE id >= 100").head().getLong(0) == 5L)
       } finally s2.conf.unset("spark.wap.branch")
       // the suffix grammar lives in the catalog: unknown refs stay no table
       assert(intercept[Exception](s2.sql("SELECT * FROM graft.`mor$branch_nope`"))
         .getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"))
     }
+  }
+
+  test("format(\"graft-table\") aggregates are manifest-answered without the extensions") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{count, lit, max, min}
+    val wh = Files.createTempDirectory("graft-seam-noext").toString
+    val t = ManagedTable.create(spark, wh, "agg", schema, Seq("id"), partitionBy = Seq("day"))
+    def batch(ids: Range) = ids.map(i => (i, s"d${i % 3}", i.toLong)).toDF("id", "day", "v")
+    t.append(batch(0 until 20))
+    t.append(batch(20 until 40))
+    val rel = spark.read.format("graft-table").option("warehouse", wh).option("table", "agg").load()
+    val flat = rel.agg(count(lit(1)), min("id"), max("id"))
+    assert(GraftScan.manifestAnswered(flat), flat.queryExecution.executedPlan.toString)
+    assert(rows(flat) == Seq("40|0|39"))
+    val byDay = rel.groupBy("day").agg(count(lit(1)).as("n"), max("id"))
+    assert(GraftScan.manifestAnswered(byDay), byDay.queryExecution.executedPlan.toString)
+    assert(rows(byDay) == rows(t.read().groupBy("day").agg(count(lit(1)).as("n"), max("id"))))
   }
 
   /** `graft.<t>` and `wh.<t>` return `expected` (and the V1 read's rows)

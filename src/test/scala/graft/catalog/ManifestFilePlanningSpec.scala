@@ -143,4 +143,31 @@ class ManifestFilePlanningSpec extends AnyFunSuite with SharedSpark {
     assert(canon(spark.sql(s"SELECT id, g, v FROM $cat2.t")) == expected)
     assert(CountingFs.groupListings.get() > 0, "fallback must have listed the groups")
   }
+
+  test("a filtered read builds only the readers its splits open") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-readers").toString
+    val t = ManagedTable.create(spark, wh, "rb", schema, Seq("id"),
+      properties = Map("write.mor.posdel-on-commit" -> "always"))
+    t.append((1 to 40).map(i => (i, s"g${i % 3}", i * 1.0)).toDF("id", "g", "v"))
+    t.append((41 to 80).map(i => (i, s"g${i % 3}", i * 1.0)).toDF("id", "g", "v"))
+    def filtered = spark.read.format("graft-table").option("warehouse", wh)
+      .option("table", "rb").load().where(col("v") > 30.0)
+    def factory(df: DataFrame): GraftReaderFactory =
+      df.queryExecution.executedPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.readerFactory
+      }.get.asInstanceOf[GraftReaderFactory]
+    // keyed and delete-free: only the filtered data reader
+    val f = factory(filtered)
+    assert(f.dataReaderFiltered != null && f.dataReader == null &&
+      f.delReader == null && f.posdelReader == null)
+    assert(canon(filtered) == canon(t.read().where(col("v") > 30.0)))
+    // an upsert brings the delete reader, its posdel sidecar the
+    // unfiltered data and posdel readers
+    ManagedTable.load(spark, wh, "rb").get
+      .mergeInto(Seq((5, "g2", 99.0)).toDF("id", "g", "v"))
+    val m = factory(filtered)
+    assert(m.delReader != null && m.posdelReader != null && m.dataReader != null)
+    assert(canon(filtered) ==
+      canon(ManagedTable.load(spark, wh, "rb").get.read().where(col("v") > 30.0)))
+  }
 }

@@ -218,17 +218,14 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
 
       def rel = s2.read.format("graft-table")
         .option("warehouse", wh).option("table", "ma").load()
-      def scanFree(d: org.apache.spark.sql.DataFrame): Boolean =
-        d.queryExecution.optimizedPlan.collectLeaves().forall(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-      // the SQL spelling reads the V2 table: a manifest answer is a
+      // both spellings read the V2 table: a manifest answer is a
       // LocalTableScan with no BatchScan left in the physical plan
       import graft.catalog.GraftScan.{manifestAnswered => localOnly}
 
       val agg = rel.agg(fmin($"id").as("lo"), fmax($"id").as("hi"),
         fcount(lit(1)).as("n"))
-      assert(scanFree(agg), "V1 min/max/count must collapse to the manifest:\n" +
-        agg.queryExecution.optimizedPlan)
+      assert(localOnly(agg), "V1 min/max/count must collapse to the manifest:\n" +
+        agg.queryExecution.executedPlan)
       assert(agg.collect().head.toSeq == Seq(1L, 90L, 90L))
       // Dataset.count() plans the same ungrouped count(1) — also scan-free
       assert(rel.count() == 90L)
@@ -243,12 +240,12 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
       // a FILTER above the relation changes the answer's input: no rewrite
       t.overwrite((1L to 90L).map(i => (i, s"n$i")).toDF("id", "v"))
       val filtered = rel.where($"id" > 10L).agg(fmin($"id").as("lo"))
-      assert(!scanFree(filtered), "a filtered aggregate must keep the scan")
+      assert(!localOnly(filtered), "a filtered aggregate must keep the scan")
       assert(filtered.collect().head.getLong(0) == 11L)
       // grouped aggregates keep the scan too
-      assert(!scanFree(rel.groupBy($"v").agg(fmin($"id"))))
+      assert(!localOnly(rel.groupBy($"v").agg(fmin($"id"))))
       // count(col) needs null counts the manifest does not claim: no rewrite
-      assert(!scanFree(rel.agg(fcount($"v"))))
+      assert(!localOnly(rel.agg(fcount($"v"))))
 
       // a tag pinning a PLAIN-data snapshot answers from ITS manifest
       // (round 10) — even after live DML moves on
@@ -258,16 +255,16 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
       // right (fresh handle: the tag above bumped the metadata generation)
       ManagedTable.load(s2, wh, "ma").get.mergeInto(Seq((5L, "u")).toDF("id", "v"))
       val mor = rel.agg(fmin($"id").as("lo"), fmax($"id").as("hi"))
-      assert(!scanFree(mor), "MoR states must fall back to the real scan")
+      assert(!localOnly(mor), "MoR states must fall back to the real scan")
       assert(mor.collect().head.toSeq == Seq(1L, 90L))
 
       def taggedRel(ref: String) = s2.read.format("graft-table")
         .option("warehouse", wh).option("table", "ma")
         .option("versionAsOf", ref).load()
       val cleanAgg = taggedRel("clean").agg(fmax($"id").as("hi"))
-      assert(scanFree(cleanAgg),
+      assert(localOnly(cleanAgg),
         "a plain-data pinned tag must answer from its own manifest:\n" +
-          cleanAgg.queryExecution.optimizedPlan)
+          cleanAgg.queryExecution.executedPlan)
       assert(cleanAgg.collect().head.getLong(0) == 90L)
       // the SQL spelling of the same pinned aggregate rewrites too
       val cleanSql = s2.sql(
@@ -278,7 +275,7 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
       // a tag pinning the MoR state falls back (hidden rows) + stays right
       ManagedTable.load(s2, wh, "ma").get.tag("pin")
       val tagged = taggedRel("pin").agg(fmax($"id"))
-      assert(!scanFree(tagged))
+      assert(!localOnly(tagged))
       assert(tagged.collect().head.getLong(0) == 90L)
 
       // GROUP BY an identity partition source: per-tuple count/min/max
@@ -298,22 +295,22 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
         .option("warehouse", wh).option("table", "mag").load()
       val grouped = relG.groupBy($"day")
         .agg(fcount(lit(1)).as("n"), fmin($"id").as("lo"), fmax($"id").as("hi"))
-      assert(scanFree(grouped), "grouped manifest agg must be scan-free:\n" +
-        grouped.queryExecution.optimizedPlan)
+      assert(localOnly(grouped), "grouped manifest agg must be scan-free:\n" +
+        grouped.queryExecution.executedPlan)
       val expect = src.groupBy($"day")
         .agg(fcount(lit(1)).as("n"), fmin($"id").as("lo"), fmax($"id").as("hi"))
         .collect().map(_.toSeq).toSet
       assert(grouped.collect().map(_.toSeq).toSet == expect)
       // bare DISTINCT over the partition source is the same metadata
       val dist = relG.select($"day").distinct()
-      assert(scanFree(dist), "DISTINCT partition source must be scan-free:\n" +
-        dist.queryExecution.optimizedPlan)
+      assert(localOnly(dist), "DISTINCT partition source must be scan-free:\n" +
+        dist.queryExecution.executedPlan)
       assert(dist.collect().map(r => Option(r.get(0))).toSet ==
         src.select($"day").distinct().collect().map(r => Option(r.get(0))).toSet)
       // grouping by a NON-partition column keeps the scan
-      assert(!scanFree(relG.groupBy($"v").agg(fcount(lit(1)))))
+      assert(!localOnly(relG.groupBy($"v").agg(fcount(lit(1)))))
       // avg is not manifest-answerable: the whole aggregate keeps the scan
-      assert(!scanFree(relG.groupBy($"day")
+      assert(!localOnly(relG.groupBy($"day")
         .agg(org.apache.spark.sql.functions.avg($"id"))))
       // the SQL spelling answers through the V2 scan builder, same answers
       val sqlGrouped = s2.sql(
@@ -355,7 +352,7 @@ class GraftSqlSpec extends AnyFunSuite with SharedSpark {
         .option("warehouse", wh).option("table", "mag2").load()
         .groupBy($"day", $"reg")
         .agg(fcount(lit(1)).as("n"), fmax($"id").as("hi"))
-      assert(scanFree(v12d))
+      assert(localOnly(v12d))
       assert(v12d.collect().map(_.toSeq).toSet == expect2d)
       // grouping by only ONE of the two partition dimensions still folds
       val oneOfTwo = s2.sql(

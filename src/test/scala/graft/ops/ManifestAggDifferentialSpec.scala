@@ -6,8 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Differential fold for the manifest-answered aggregate rewrites
-  * ([[graft.plans.ManifestAggOnV1]], [[graft.plans.ResolveGraftDdl]]):
+/** Differential fold for the manifest-answered aggregates
+  * ([[graft.catalog.GraftScanBuilder]] under both the SQL and the
+  * `format("graft-table")` spellings):
   * random tables — group-column types, null fractions, 1–2 partition
   * dimensions, multi-batch appends, optional MoR state, optional tag —
   * and every aggregate shape asked through BOTH rewritten seams must

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `format("graft-table")` V1 source ([[GraftSource]]): the no-extensions
+/** `format("graft-table")` ([[GraftSource]]): the no-extensions
   * read/write surface — MoR reads, ref reads, filter-driven manifest
   * pruning (superset-scan soundness), and create-on-first-write.
   */
@@ -24,7 +24,10 @@ class GraftSourceSpec extends AnyFunSuite with SharedSpark {
     val viaSource = spark.read.format("graft-table")
       .option("warehouse", w).option("table", "t1").load()
     assert(viaSource.count() == 180)
-    assert(viaSource.schema == t.read().schema)
+    // the declared schema, nullability included (table.read() is all-nullable)
+    assert(viaSource.schema == t.meta.schema)
+    assert(viaSource.schema.map(f => (f.name, f.dataType)) ==
+      t.read().schema.map(f => (f.name, f.dataType)))
     // filter + projection: same rows as the table API
     val got = viaSource.filter(col("grp") === 3).select("id").as[Long].collect().toSet
     val want = t.read().filter(col("grp") === 3).select("id").as[Long].collect().toSet
@@ -86,12 +89,13 @@ class GraftSourceSpec extends AnyFunSuite with SharedSpark {
     df.write.format("graft-table").option("warehouse", w).option("table", "t3")
       .mode(SaveMode.Ignore).save()
     assert(ManagedTable.load(spark, w, "t3").get.read().count() == 1)
-    // user schemas are refused (committed schema is authoritative)
+    // user schemas are refused (Spark's own check: the committed schema
+    // is authoritative)
     val e2 = intercept[Exception] {
       spark.read.format("graft-table").schema(df.schema)
         .option("warehouse", w).option("table", "t3").load()
     }
-    assert(e2.getMessage.contains("authoritative"), e2.getMessage)
+    assert(e2.getMessage.contains("does not support user-specified schema"), e2.getMessage)
   }
 
   test("composite pruning: conjuncts intersect (files), ref reads prune, results exact") {

@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[GraftRelation.sizeInBytes]] — manifest-summed file bytes reaching
-  * Spark's broadcast-side selection: a small graft dimension table joins
-  * as the broadcast side instead of forcing a sort-merge.
+/** The size a `format("graft-table")` read reports (the planned
+  * [[graft.catalog.GraftScan]]'s served file bytes) reaching Spark's
+  * broadcast-side selection: a small graft dimension table joins as the
+  * broadcast side instead of forcing a sort-merge.
   */
 class V1SizeInBytesSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
@@ -52,7 +53,12 @@ class V1SizeInBytesSpec extends AnyFunSuite with SharedSpark {
     val rel = spark.read.format("graft-table")
       .option("warehouse", wh).option("table", "nofiles").load()
     val size = rel.queryExecution.optimizedPlan.stats.sizeInBytes
-    assert(size > 10L * 1024 * 1024,
-      s"unknown sizes must stay conservative (never broadcast), got $size")
+    // the scan lists the group dirs whose entries carry no file list, so
+    // the size is the listed bytes: it is never unknown
+    val listed = entries.filterNot(_.kind == graft.tables.Manifest.PosDel)
+      .flatMap(e => fs.listStatus(new org.apache.hadoop.fs.Path(t.v2TableDir, e.path)).toSeq)
+      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
+    assert(listed > 0 && size == listed,
+      s"pre-upgrade manifests must report the listed bytes $listed, got $size")
   }
 }
