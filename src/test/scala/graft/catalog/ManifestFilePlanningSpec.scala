@@ -170,4 +170,26 @@ class ManifestFilePlanningSpec extends AnyFunSuite with SharedSpark {
     assert(canon(filtered) ==
       canon(ManagedTable.load(spark, wh, "rb").get.read().where(col("v") > 30.0)))
   }
+
+  test("a reader build's conf round-trips every key without its source names") {
+    import scala.jdk.CollectionConverters._
+    val base = spark.sessionState.newHadoopConf()
+    base.set("graft.test.reader-conf", "x=1,y=2")
+    def entries(c: org.apache.hadoop.conf.Configuration): Map[String, String] =
+      c.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    def roundTrip(c: org.apache.hadoop.conf.Configuration): (Int, org.apache.hadoop.conf.Configuration) = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(new org.apache.spark.util.SerializableConfiguration(c))
+      out.close()
+      val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+      (bytes.size, in.readObject().asInstanceOf[org.apache.spark.util.SerializableConfiguration].value)
+    }
+    val (plainSize, plain) = roundTrip(base)
+    val (leanSize, lean) = roundTrip(new GraftScan.ReaderConf(base))
+    assert(entries(lean) == entries(base))
+    assert(entries(lean) == entries(plain))
+    // the source names are what it leaves out: at least one byte a key
+    assert(leanSize + entries(base).size <= plainSize)
+  }
 }
