@@ -19,6 +19,12 @@ import org.apache.spark.sql.types.StringType
   * exactly this class: native expressions injected into the session's
   * function registry so they participate in whole-stage codegen.
   *
+  * It also installs the `graft.<t>` SQL surface over
+  * `spark.graft.warehouse`: reads and table DDL run through
+  * [[graft.catalog.GraftCatalog]] exactly as for a registered catalog,
+  * with no registration; DML, views, metadata statements and `CALL`
+  * through the rules in `graft.plans`.
+  *
   * Reads do not need it: `spark.read.format("graft-table")` plans the
   * same DSv2 scan, manifest-answered aggregates included, in any session.
   */
@@ -32,10 +38,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // resolves $changes, persisted views and SQL DML — see
     // [[graft.plans.ResolveGraftTables]].
     ext.injectResolutionRule(session => new graft.plans.ResolveGraftTables(session))
-    // SQL DDL: CREATE/DROP TABLE graft.<t>, ALTER TABLE graft.<t>
-    // ADD/DROP/RENAME COLUMN(S) + SET TBLPROPERTIES — rewritten at the
-    // parser seam (built-in catalog resolution would reject the
-    // statements before a resolution rule could claim them); see
+    // SQL DDL: CREATE/CTAS/DROP TABLE graft.<t>, the column and property
+    // ALTERs and TRUNCATE TABLE are GraftCatalog's own DDL — the parser
+    // only resolves the identifier onto the catalog (built-in catalog
+    // resolution would reject the statements before a resolution rule
+    // could claim them); views, SHOW/DESCRIBE, CALL and the verbs Spark's
+    // grammar lacks stay eager commands — see
     // [[graft.plans.GraftSqlParser]] / [[graft.plans.ResolveGraftDdl]].
     ext.injectParser((session, delegate) =>
       new graft.plans.GraftSqlParser(session, delegate))

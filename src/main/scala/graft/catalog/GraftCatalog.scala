@@ -14,7 +14,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.tables.{ManagedTable, TableMeta}
+import graft.tables.{ManagedTable, TableMeta, ViewStore}
 
 /** The graft DSv2 catalog — the scale seam of the table layer.
   *
@@ -43,12 +43,15 @@ import graft.tables.{ManagedTable, TableMeta}
   * `HashPartitioning`, so the physical layout IS Spark's shuffle
   * partitioning and SPJ compatibility is exact, not approximate.
   *
-  * DDL: CREATE/CTAS/DROP TABLE work through the standard V2 path; ALTER
-  * dispatches onto the SAME evolution implementation the SQL surface
-  * calls (see [[alterTable]] — add/drop columns, properties; renames and
-  * grammar-owned verbs refuse with pointers). The namespace is
-  * single-level: tables live directly under the warehouse; the empty and
-  * `default` namespaces are interchangeable.
+  * DDL: this catalog is the one implementation of CREATE / CTAS / DROP
+  * TABLE, the column and property ALTERs ([[alterTable]]) and TRUNCATE
+  * TABLE for both spellings — `graft.<t>` statements run through Spark's
+  * V2 execs on [[GraftCatalog.forWarehouse]]
+  * ([[graft.plans.GraftSqlParser]]). Verbs Spark's grammar lacks
+  * (partition fields, identifier fields, write order) refuse with a
+  * pointer to the `graft.<t>` surface. The namespace is single-level:
+  * tables live directly under the warehouse; the empty and `default`
+  * namespaces are interchangeable.
   */
 class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCatalog
     with ProcedureCatalog {
@@ -185,6 +188,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
                            properties: util.Map[String, String]): Table = {
     checkNs(ident.namespace)
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
+    require(!ViewStore.exists(spark, warehouse, ident.name),
+      s"$catalogName.${ident.name}: a view with this name exists")
     val props = properties.asScala.toMap
     val ids = props.get(GraftCatalog.IdsProp).toSeq
       .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
@@ -196,16 +201,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     GraftCatalog.v2Table(t, None)
   }
 
-  /** ALTER TABLE through the V2 catalog — a DISPATCHER onto the one
-    * evolution implementation ([[ManagedTable.evolve]]/dropColumn/
-    * renameColumn/setProperties), matching the graft SQL surface verb for
-    * verb: ADD COLUMNS (top-level, appended, nullable — same contract as
-    * the SQL rule), DROP/RENAME COLUMN, SET/UNSET TBLPROPERTIES. The V2
-    * seam is the no-extensions integration surface, so an external
-    * consumer must be able to evolve schema here; anything the SQL
-    * surface reaches through its own grammar (partition fields,
-    * identifier fields, write order) refuses with a pointer rather than
-    * growing a second spelling with different guards.
+  /** ALTER TABLE for both spellings — a DISPATCHER onto the one
+    * evolution implementation ([[ManagedTable.evolve]]/addColumn/
+    * dropColumn/renameColumn/setProperties): ADD COLUMNS (top-level,
+    * appended, nullable, optional literal DEFAULT), DROP/RENAME COLUMN,
+    * SET/UNSET TBLPROPERTIES. Anything the `graft.<t>` surface reaches
+    * through its own grammar (partition fields, identifier fields, write
+    * order) refuses with a pointer rather than growing a second spelling
+    * with different guards — the `graft.identifier-fields` property
+    * included, since setting it would skip the merge-on-read state guard
+    * of `SET IDENTIFIER FIELDS`.
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val t = managed(ident)
@@ -215,8 +220,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           s"(field ${fieldNames.mkString(".")})")
       fieldNames.head
     }
-    // a multi-column ADD lands as one union-by-name evolution commit,
-    // like the SQL surface's ADD COLUMNS list; a column WITH a default
+    changes.foreach {
+      case sp: TableChange.SetProperty if sp.property == GraftCatalog.IdsProp =>
+        throw new IllegalArgumentException(
+          s"$catalogName.${ident.name}: use ALTER TABLE graft.${ident.name} SET " +
+            "IDENTIFIER FIELDS to re-key (the property form would skip the " +
+            "merge-on-read state guard)")
+      case _ => ()
+    }
+    // a multi-column ADD lands as one union-by-name evolution commit; a
+    // column WITH a default
     // goes through addColumn's seq-gated initial-default path (the V2
     // reader folds it — GraftScan round 10), restricted to literals whose
     // string form round-trips through `lit(s).cast(dt)` (the stored
@@ -366,7 +379,9 @@ object GraftCatalog {
     c
   }
 
-  /** Same key-constraint property the graft SQL CREATE surface uses. */
+  /** The key-constraint property CREATE carries (Spark's DDL grammar has
+    * no key clause); stored as the table's identifier fields, not kept.
+    */
   val IdsProp = "graft.identifier-fields"
 
   /** The concrete V2 table handle for a live (non-time-traveled) load:
@@ -413,7 +428,11 @@ object GraftCatalog {
     * [[graft.tables.PartitionSpecParser]] parses).
     */
   def transformToSpec(table: String, t: Transform): String = {
-    val refs = t.references.toSeq.map(_.fieldNames.mkString("."))
+    val refs = t.references.toSeq.map { r =>
+      require(r.fieldNames.length == 1,
+        s"$table: nested partition source ${r.describe} is not supported")
+      r.fieldNames.head
+    }
     val lits = t.arguments.toSeq.collect {
       case l: org.apache.spark.sql.connector.expressions.Literal[_] => String.valueOf(l.value)
     }

@@ -72,6 +72,8 @@ final class GraftMicroBatchStream(
 
   private val Seed = -1L
   @volatile private var availableNowCap: Option[Long] = None
+  private val admission =
+    new graft.sources.AttachPoint.Admission(maxVersionsPerTrigger, maxRowsPerTrigger)
 
   // schema-determined only; the widen check guards mid-stream drift
   private lazy val factory: GraftReaderFactory =
@@ -150,19 +152,7 @@ final class GraftMicroBatchStream(
       // admission caps do not apply (the V1 source's over-budget rule)
       if (cur <= 0L) null else GraftV2Offset(cur)
     } else {
-      val verEnd = maxVersionsPerTrigger.map(k => math.min(cur, base + k)).getOrElse(cur)
-      val end = maxRowsPerTrigger match {
-        case Some(budget) if verEnd > base =>
-          val rows = t.rowsPerVersion(base, cur0)
-          var adm = base; var cum = 0L; var v = base + 1L; var over = false
-          while (v <= verEnd && !over) {
-            val r = rows.getOrElse(v, 0L)
-            if (adm == base || cum + r <= budget) { adm = v; cum += r; v += 1L }
-            else over = true
-          }
-          adm
-        case _ => verEnd
-      }
+      val end = admission.end(t, cur0, cur, base)
       if (end <= base) null else GraftV2Offset(end)
     }
   }

@@ -1,20 +1,33 @@
 package graft.plans
 
+import graft.catalog.GraftCatalog
+import graft.tables.ViewStore
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
+import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, ResolvedIdentifier, ResolvedTable, UnresolvedIdentifier, UnresolvedTable}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.parser.ParserInterface
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, CreateTable, CreateTableAsSelect, DropColumns, DropTable, LogicalPlan, RenameColumn, SetTableProperties, TruncateTable, UnsetTableProperties}
+import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Delegating parser that rewrites graft DDL statements straight after
-  * parse. DDL has to be intercepted HERE rather than in a resolution
-  * rule: the analyzer's built-in session-catalog resolution runs before
-  * extension rules within the resolution batch and rejects e.g. a
-  * `day(ts)` partition transform on a v1 catalog identifier before a
-  * rule could claim the statement. Reads and DML stay in
-  * [[ResolveGraftTables]] (they only involve relations, which built-in
-  * rules leave unresolved for extensions).
+/** Delegating parser for the `graft.<t>` DDL surface.
+  *
+  * CREATE TABLE, CTAS, DROP TABLE, `ALTER TABLE … ADD COLUMNS / DROP
+  * COLUMN / RENAME COLUMN / SET TBLPROPERTIES / UNSET TBLPROPERTIES` and
+  * `TRUNCATE TABLE` are the catalog's DDL: this parser only rewrites the
+  * `graft.<t>` identifier onto [[GraftCatalog.forWarehouse]] over
+  * `spark.graft.warehouse`, and Spark's own V2 execs run the statement
+  * through [[GraftCatalog]] / [[graft.catalog.GraftV2Table]], exactly as
+  * for a registered `<cat>.<t>`. The rewrite has to happen HERE rather
+  * than in a resolution rule: the analyzer's session-catalog resolution
+  * runs before extension rules and rejects e.g. a `day(ts)` partition
+  * transform on a v1 identifier before a rule could claim the statement.
+  *
+  * The verbs Spark's grammar lacks (partition fields, identifier fields,
+  * write order, branch/tag refs) are recognized from the SQL text; views,
+  * `SHOW`/`DESCRIBE`, `TRUNCATE … PARTITION` and `CALL` stay in
+  * [[ResolveGraftDdl]], reads and DML in [[ResolveGraftTables]].
   */
 class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
@@ -68,7 +81,43 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
       ddl.setIdentifierFieldsCommand(tbl, fields)
     case WriteOrderedDdl(tbl, order) => ddl.writeOrderedCommand(tbl, Some(order))
     case WriteUnorderedDdl(tbl)      => ddl.writeOrderedCommand(tbl, None)
-    case _ => ddl(delegate.parsePlan(sqlText))
+    case _ => ddl(onCatalog(delegate.parsePlan(sqlText)))
+  }
+
+  private def isGraft(parts: Seq[String]): Boolean =
+    parts.length == 2 && parts.head.equalsIgnoreCase("graft")
+
+  /** The statement kinds Spark's V2 execs run through the catalog: their
+    * `graft.<t>` target (a direct child) resolves onto [[GraftCatalog]].
+    * A missing table keeps `UnresolvedTable`, so Spark raises its normal
+    * not-found error; `DROP TABLE` over a persisted view refuses here,
+    * because `DropTableExec` only sees that no table exists.
+    */
+  private def onCatalog(plan: LogicalPlan): LogicalPlan = plan match {
+    case _: CreateTable | _: CreateTableAsSelect | _: DropTable | _: AddColumns |
+         _: DropColumns | _: RenameColumn | _: SetTableProperties |
+         _: UnsetTableProperties | _: TruncateTable =>
+      plan.mapChildren {
+        case UnresolvedIdentifier(parts, _) if isGraft(parts) =>
+          val name = parts(1)
+          val wh = ddl.warehouse(name)
+          val cat = GraftCatalog.forWarehouse(session, wh)
+          val ident = Identifier.of(Array.empty, name)
+          if (plan.isInstanceOf[DropTable] && !cat.tableExists(ident) &&
+              ViewStore.exists(session, wh, name))
+            throw new IllegalArgumentException(s"graft.$name is a view (use DROP VIEW)")
+          ResolvedIdentifier(cat, ident)
+        case u: UnresolvedTable if isGraft(u.multipartIdentifier) &&
+            !u.multipartIdentifier(1).contains('$') =>
+          val ident = Identifier.of(Array.empty, u.multipartIdentifier(1))
+          session.conf.getOption("spark.graft.warehouse").flatMap { wh =>
+            val cat = GraftCatalog.forWarehouse(session, wh)
+            try Some(ResolvedTable.create(cat, ident, cat.loadTable(ident)))
+            catch { case _: NoSuchTableException => None }
+          }.getOrElse(u)
+        case other => other
+      }
+    case _ => plan
   }
 
   override def parseQuery(sqlText: String): LogicalPlan = delegate.parseQuery(sqlText)

@@ -1,36 +1,31 @@
 package graft.plans
 
+import graft.catalog.GraftCatalog
 import graft.tables.ManagedTable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedIdentifier, UnresolvedTable}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
-import org.apache.spark.sql.types.{StructField, StructType}
 
-/** SQL DDL over graft tables — the statements that complete the SQL
-  * lakehouse surface next to [[ResolveGraftTables]]' reads and DML:
+/** The `graft.<t>` SQL statements Spark's V2 execs cannot run through
+  * [[GraftCatalog]] — next to [[ResolveGraftTables]]' reads and DML:
   *
-  *   CREATE TABLE graft.t (id BIGINT, …) PARTITIONED BY (day(ts), bucket(4, id))
-  *     TBLPROPERTIES ('graft.identifier-fields'='id', …)
-  *   DROP TABLE [IF EXISTS] graft.t
-  *   ALTER TABLE graft.t ADD COLUMNS (c TYPE, …)     — schema evolution D6
-  *   ALTER TABLE graft.t DROP COLUMN c / RENAME COLUMN a TO b
-  *   ALTER TABLE graft.t SET TBLPROPERTIES (…)
+  *   CREATE [OR REPLACE] VIEW / ALTER VIEW … AS / DROP VIEW graft.v
+  *   SHOW TABLES IN graft, SHOW TBLPROPERTIES / SHOW CREATE TABLE /
+  *     SHOW PARTITIONS / DESCRIBE graft.t
+  *   TRUNCATE TABLE graft.t PARTITION (k=v, …)
   *   ALTER TABLE graft.t ADD|DROP|REPLACE PARTITION FIELD … — spec evolution
   *   ALTER TABLE graft.t SET IDENTIFIER FIELDS a, b  — re-key (plain-data gated)
   *   ALTER TABLE graft.t WRITE ORDERED BY … / WRITE UNORDERED — D5's SQL form
+  *   ALTER TABLE graft.t CREATE|DROP BRANCH|TAG …
+  *   CALL graft.system.<proc>(…)
   *
-  * Identifier fields ride the `graft.identifier-fields` table property
-  * (Spark's DDL grammar has no key-constraint clause to carry them).
-  * Partition transforms map 1:1 onto the spec grammar the reference
-  * parses (`SINK/IcebergUtil.java:214-305`): identity, years/months/
-  * days/hours, bucket, truncate. Everything executes as an eager
-  * command, like the DML surface.
+  * CREATE / CTAS / DROP TABLE, the column and property ALTERs and
+  * `TRUNCATE TABLE` are the catalog's own DDL ([[GraftSqlParser]] only
+  * resolves their identifier). The verbs here execute as eager commands,
+  * like the DML surface.
   */
 class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
-
-  private val IdsProp = "graft.identifier-fields"
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsDown {
     case st: org.apache.spark.sql.catalyst.plans.logical.ShowTables =>
@@ -41,60 +36,6 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
       showCreateTable(sc).getOrElse(sc)
     case sp: org.apache.spark.sql.catalyst.plans.logical.ShowPartitions =>
       showPartitions(sp).getOrElse(sp)
-    case c @ CreateTable(UnresolvedIdentifier(Seq(g, name), _), columns,
-        partitioning, spec: UnresolvedTableSpec, ifNotExists)
-        if g.equalsIgnoreCase("graft") =>
-      val wh = warehouse(name)
-      val schema = StructType(columns.map(cd =>
-        StructField(cd.name, cd.dataType, cd.nullable)))
-      val props = spec.properties
-      val ids = props.get(IdsProp).toSeq
-        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-      ids.foreach(i => require(schema.fieldNames.contains(i),
-        s"CREATE TABLE graft.$name: identifier field '$i' is not a declared column"))
-      val partitionBy = partitioning.map(transformToSpec(name, _))
-      GraftDmlCommand("CREATE TABLE", name, () => {
-        require(!graft.tables.ViewStore.exists(session, wh, name),
-          s"CREATE TABLE graft.$name: a view with this name exists")
-        if (!(ifNotExists && ManagedTable.load(session, wh, name).isDefined))
-          ManagedTable.create(session, wh, name, schema, ids, partitionBy,
-            props - IdsProp): Unit
-      })
-    case c @ CreateTableAsSelect(UnresolvedIdentifier(Seq(g, name), _),
-        partitioning, query, spec: UnresolvedTableSpec, _, ifNotExists, _)
-        if g.equalsIgnoreCase("graft") =>
-      val wh = warehouse(name)
-      val props = spec.properties
-      val ids = props.get(IdsProp).toSeq
-        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-      val partitionBy = partitioning.map(transformToSpec(name, _))
-      GraftDmlCommand("CREATE TABLE AS SELECT", name, () => {
-        require(!graft.tables.ViewStore.exists(session, wh, name),
-          s"CREATE TABLE graft.$name: a view with this name exists")
-        if (!(ifNotExists && ManagedTable.load(session, wh, name).isDefined)) {
-          val df = org.apache.spark.sql.graftbridge.GraftBridge.dataFrame(session, query)
-          ids.foreach(i => require(df.schema.fieldNames.contains(i),
-            s"CREATE TABLE graft.$name: identifier field '$i' is not produced by the query"))
-          val t = ManagedTable.create(session, wh, name, df.schema, ids,
-            partitionBy, props - IdsProp)
-          t.append(df)
-        }
-      })
-    case d @ DropTable(UnresolvedIdentifier(Seq(g, name), _), ifExists, _)
-        if g.equalsIgnoreCase("graft") =>
-      val wh = warehouse(name)
-      GraftDmlCommand("DROP TABLE", name, () => {
-        val exists = ManagedTable.load(session, wh, name).isDefined
-        if (!exists && graft.tables.ViewStore.exists(session, wh, name))
-          throw new IllegalArgumentException(
-            s"graft.$name is a view (use DROP VIEW)")
-        require(exists || ifExists, s"table graft.$name does not exist")
-        if (exists) {
-          val fs = graft.tables.TableMeta.fs(
-            session.sparkContext.hadoopConfiguration, wh)
-          fs.delete(new org.apache.hadoop.fs.Path(wh, name), true): Unit
-        }
-      })
     // CREATE [OR REPLACE] VIEW graft.v AS <query> — the definition is the
     // body's ORIGINAL SQL TEXT, stored warehouse-adjacent
     // ([[graft.tables.ViewStore]]) and re-resolved at every reference
@@ -155,35 +96,6 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
           session.sessionState.sqlParser.parsePlan(originalText)).queryExecution.analyzed
         graft.tables.ViewStore.create(session, wh, name, originalText, replace = true)
       })
-    case a @ AddColumns(GraftAlterTarget(name), cols) =>
-      withTable(a, name) { t =>
-        val fields = cols.map { qc =>
-          require(qc.path.isEmpty,
-            s"ALTER TABLE graft.$name: nested ADD COLUMNS is not supported")
-          require(qc.position.isEmpty,
-            s"ALTER TABLE graft.$name: column positions are not supported (columns append)")
-          StructField(qc.colName, qc.dataType, nullable = true)
-        }
-        GraftDmlCommand("ALTER ADD COLUMNS", name,
-          () => { t.evolve(StructType(fields)): Unit })
-      }
-    case d @ DropColumns(GraftAlterTarget(name), fields, ifExists) =>
-      withTable(d, name) { t =>
-        val names = fields.map(_.name.last)
-        GraftDmlCommand("ALTER DROP COLUMNS", name, () => names.foreach { n =>
-          if (!ifExists || t.meta.schema.fieldNames.contains(n)) t.dropColumn(n)
-        })
-      }
-    case r @ RenameColumn(GraftAlterTarget(name), field, newName) =>
-      withTable(r, name) { t =>
-        GraftDmlCommand("ALTER RENAME COLUMN", name,
-          () => t.renameColumn(field.name.last, newName))
-      }
-    case tr @ org.apache.spark.sql.catalyst.plans.logical.TruncateTable(
-        GraftAlterTarget(name)) =>
-      withTable(tr, name) { t =>
-        GraftDmlCommand("TRUNCATE", name, () => t.truncate())
-      }
     // `TRUNCATE TABLE graft.t PARTITION (k=v, …)` — the static-region
     // machinery with an empty batch: keyless tables drop the named
     // region's groups at metadata cost (zero rewrite), keyed tables
@@ -206,23 +118,6 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
           // keyless → metadata drop) and the identity/cast validation
           t.overwriteStaticRegion(spec, empty)
         })
-      }
-    case s @ SetTableProperties(GraftAlterTarget(name), props) =>
-      withTable(s, name) { t =>
-        require(!props.contains(IdsProp),
-          s"ALTER TABLE graft.$name: use SET IDENTIFIER FIELDS to re-key " +
-            "(the property form would skip the merge-on-read state guard)")
-        GraftDmlCommand("ALTER SET TBLPROPERTIES", name,
-          () => t.setProperties(props))
-      }
-    // `ALTER TABLE graft.t UNSET TBLPROPERTIES [IF EXISTS] (k, …)` —
-    // the clear side of SET (round 10). Missing keys are a no-op either
-    // way ([[ManagedTable.unsetProperties]] semantics); IF EXISTS is
-    // accepted for compatibility.
-    case s @ UnsetTableProperties(GraftAlterTarget(name), keys, _) =>
-      withTable(s, name) { t =>
-        GraftDmlCommand("ALTER UNSET TBLPROPERTIES", name,
-          () => t.unsetProperties(keys))
       }
     // `SHOW TBLPROPERTIES graft.t [(key)]` — every live property (the
     // honest introspection surface: replication markers, refs, write
@@ -293,7 +188,7 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
   /** SQL-form partition transform text → the spec grammar string the
     * strict parser validates: `day(ts)` / `days(ts)`, `bucket(4, id)`
     * (either argument order), `truncate(8, c)`, or a bare identity
-    * column. The TEXT seam's analogue of [[transformToSpec]].
+    * column. The TEXT seam's analogue of [[GraftCatalog.transformToSpec]].
     */
   private def unq(id: String): String = {
     val t = id.trim
@@ -548,7 +443,7 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
   }
 
   /** `SHOW TABLES IN graft` — list the warehouse's managed tables
-    * (directories holding a `meta.json`), optionally LIKE-filtered with
+    * ([[ManagedTable.list]]) and persisted views, optionally LIKE-filtered with
     * the usual `*`/`|` glob. Answered at the parser seam as a local
     * relation shaped by the statement's own output attributes.
     */
@@ -557,15 +452,10 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
     case org.apache.spark.sql.catalyst.analysis.UnresolvedNamespace(Seq(g), _)
         if g.equalsIgnoreCase("graft") =>
       session.conf.getOption("spark.graft.warehouse").map { wh =>
-        val fs = graft.tables.TableMeta.fs(session.sparkContext.hadoopConfiguration, wh)
-        val base = new org.apache.hadoop.fs.Path(wh)
-        val names =
-          (if (!fs.exists(base)) Seq.empty[String]
-           else fs.listStatus(base).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-             .filter(n => fs.exists(new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(wh, n), "meta.json")))
-          // distinct: a raced CREATE TABLE/VIEW can leave both objects
-          // under one name (resolution prefers the table) — list it once
-          ).++(graft.tables.ViewStore.list(session, wh)).distinct.sorted
+        // distinct: a raced CREATE TABLE/VIEW can leave both objects
+        // under one name (resolution prefers the table) — list it once
+        val names = (ManagedTable.list(session, wh) ++
+          graft.tables.ViewStore.list(session, wh)).distinct.sorted
         val kept = st.pattern match {
           case Some(p) =>
             // Spark's SHOW TABLES LIKE is case-insensitive glob
@@ -737,7 +627,7 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
             internalPrefixes.exists(k.startsWith)
           }
           val props = (if (m.identifierFields.nonEmpty)
-            Seq(IdsProp -> m.identifierFields.mkString(",")) else Seq.empty) ++
+            Seq(GraftCatalog.IdsProp -> m.identifierFields.mkString(",")) else Seq.empty) ++
             userProps.toSeq.sortBy(_._1)
           val propClause =
             if (props.isEmpty) ""
@@ -848,45 +738,8 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
       .flatMap(wh => ManagedTable.load(session, wh, name))
       .map(f).getOrElse(orig)
 
-  private def warehouse(name: String): String =
+  private[plans] def warehouse(name: String): String =
     session.conf.getOption("spark.graft.warehouse").getOrElse(
       throw new IllegalArgumentException(
         s"graft.$name: set spark.graft.warehouse before DDL"))
-
-  private def ref(r: NamedReference, name: String): String = {
-    require(r.fieldNames.length == 1,
-      s"graft.$name: nested partition source ${r.describe} is not supported")
-    r.fieldNames.head
-  }
-
-  /** V2 transform → the spec grammar string the strict parser validates.
-    * Matched through the public `Transform` interface (the case classes
-    * are `private[sql]`).
-    */
-  private def transformToSpec(name: String, t: Transform): String = {
-    val refs = t.references.toSeq.map(ref(_, name))
-    val lits = t.arguments.toSeq.collect {
-      case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-        String.valueOf(l.value)
-    }
-    t.name.toLowerCase match {
-      case "identity" =>
-        require(refs.length == 1, s"graft.$name: identity takes one column")
-        refs.head
-      case "years" | "year"   => s"year(${refs.head})"
-      case "months" | "month" => s"month(${refs.head})"
-      case "days" | "day"     => s"day(${refs.head})"
-      case "hours" | "hour"   => s"hour(${refs.head})"
-      case "bucket" =>
-        require(refs.length == 1 && lits.length == 1,
-          s"graft.$name: bucket takes (N, column)")
-        s"bucket(${refs.head},${lits.head})"
-      case "truncate" =>
-        require(refs.length == 1 && lits.length == 1,
-          s"graft.$name: truncate takes (W, column)")
-        s"truncate(${refs.head},${lits.head})"
-      case other => throw new IllegalArgumentException(
-        s"graft.$name: unsupported partition transform '$other'")
-    }
-  }
 }

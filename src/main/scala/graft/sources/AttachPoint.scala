@@ -2,11 +2,13 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 
+import graft.tables.ManagedTable
+
 /** THE attach-point contract for streaming reads of a graft table — one
   * implementation of option validation, `latest`/timestamp resolution,
-  * and the durable pin, rendered by BOTH streaming seams: the V1
-  * changelog source ([[GraftSource]]) and the V2 append-only table
-  * stream ([[graft.catalog.GraftMicroBatchStream]]). A fix to the
+  * the durable pin and per-poll admission ([[Admission]]), rendered by
+  * BOTH streaming seams: the V1 changelog source ([[GraftSource]]) and
+  * the V2 append-only table stream ([[graft.catalog.GraftMicroBatchStream]]). A fix to the
   * contract (validation wording, pin-race handling, timestamp boundary)
   * lands on both seams by construction.
   */
@@ -79,5 +81,49 @@ object AttachPoint {
     try new String(org.apache.commons.io.IOUtils.toByteArray(in),
       java.nio.charset.StandardCharsets.UTF_8).trim.toLong
     finally in.close()
+  }
+
+  /** Admission of one offset poll: `maxVersionsPerTrigger` caps the
+    * versions after `base`, then `maxRowsPerTrigger` admits versions in
+    * order while the manifest's per-commit row totals fit the budget —
+    * one metadata read, zero jobs; a version is never split, so a single
+    * over-budget commit lands alone, and metadata-only commits cost 0 and
+    * always admit. One instance per stream (offset polls are
+    * single-threaded per source): it caches the per-version row totals
+    * by the table's current version, because every poll loads a FRESH
+    * handle (it must see new commits) whose entries cache is cold — a
+    * capped drain of an n-version backlog parses the manifest once, not
+    * n times.
+    */
+  final class Admission(maxVersions: Option[Long], maxRows: Option[Long]) {
+    private var rowsKey: Long = Long.MinValue
+    private var rowsBase: Long = Long.MinValue
+    private var rows: Map[Long, Long] = null
+
+    /** The last version to admit after `base` (`base` itself = nothing);
+      * `t` is the poll's handle at current version `cur0`, `cur` the
+      * highest admissible version (`cur0` under an AvailableNow pin).
+      */
+    def end(t: ManagedTable, cur0: Long, cur: Long, base: Long): Long = {
+      val verEnd = maxVersions.fold(cur)(k => math.min(cur, base + k))
+      maxRows match {
+        case Some(budget) if verEnd > base =>
+          if (rows == null || rowsKey != cur0 || rowsBase > base) {
+            rowsKey = cur0; rowsBase = base
+            rows = t.rowsPerVersion(base, cur0)
+          }
+          var adm = base
+          var cum = 0L
+          var v = base + 1L
+          var over = false
+          while (v <= verEnd && !over) {
+            val r = rows.getOrElse(v, 0L)
+            if (adm == base || cum + r <= budget) { adm = v; cum += r; v += 1L }
+            else over = true
+          }
+          adm
+        case _ => verEnd
+      }
+    }
   }
 }

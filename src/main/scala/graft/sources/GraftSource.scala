@@ -501,12 +501,7 @@ private[sources] final class GraftStreamSource(
     */
   @volatile private var availableNowCap: Option[Long] = None
 
-  // per-version row totals for maxRowsPerTrigger, keyed by the current
-  // version they were read at (see nextEnd) — offset polls are
-  // single-threaded per source, plain vars suffice
-  private var rowsCacheKey: Long = Long.MinValue
-  private var rowsCacheBase: Long = Long.MinValue
-  private var rowsCache: Map[Long, Long] = null
+  private val admission = new AttachPoint.Admission(maxVersionsPerTrigger, maxRowsPerTrigger)
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowCap = Some(table.meta.currentVersion)
@@ -542,38 +537,7 @@ private[sources] final class GraftStreamSource(
     val cur = availableNowCap.fold(cur0)(math.min(_, cur0))
     val base = math.max(math.max(lastBatchEnd, engineBase.getOrElse(Long.MinValue)),
       seedFrom)
-    val verEnd = maxVersionsPerTrigger.map(k => math.min(cur, base + k)).getOrElse(cur)
-    // row-budgeted admission (round 10): admit versions in order while
-    // the manifest's per-commit row totals fit the budget — one metadata
-    // read, zero jobs; a version is never split, so a single over-budget
-    // commit lands alone. Metadata-only commits cost 0 and always admit.
-    val end = maxRowsPerTrigger match {
-      case Some(budget) if verEnd > base =>
-        // per-version rows cached by the table's current version: while a
-        // capped drain works through a static backlog, every poll loads a
-        // FRESH handle (it must see new commits) whose entries cache is
-        // cold — without this, draining an n-version burst parses the
-        // manifest n times instead of once
-        val rows =
-          if (rowsCache != null && rowsCacheKey == cur0 && rowsCacheBase <= base)
-            rowsCache
-          else {
-            rowsCacheKey = cur0; rowsCacheBase = base
-            rowsCache = t.rowsPerVersion(base, cur0)
-            rowsCache
-          }
-        var adm = base
-        var cum = 0L
-        var v = base + 1L
-        var over = false
-        while (v <= verEnd && !over) {
-          val r = rows.getOrElse(v, 0L)
-          if (adm == base || cum + r <= budget) { adm = v; cum += r; v += 1L }
-          else over = true
-        }
-        adm
-      case _ => verEnd
-    }
+    val end = admission.end(t, cur0, cur, base)
     if (end <= base || end <= seedFrom) None else Some(end)
   }
 

@@ -256,6 +256,31 @@ class GraftCatalogSpec extends AnyFunSuite with SharedSpark {
     assert(ManagedTable.load(spark, wh, "created").isEmpty)
   }
 
+  test("CREATE TABLE and CTAS refuse a persisted view's name through the catalog") {
+    val wh = tmpWarehouse()
+    val cat = registerCatalog(wh)
+    graft.tables.ViewStore.create(spark, wh, "vw", "SELECT 1 AS x", replace = false)
+    val ec = intercept[Exception](spark.sql(s"CREATE TABLE $cat.vw (x INT)"))
+    assert(ec.getMessage.contains("a view with this name exists"), ec.getMessage)
+    val ea = intercept[Exception](spark.sql(s"CREATE TABLE $cat.vw AS SELECT 1 AS x"))
+    assert(ea.getMessage.contains("a view with this name exists"), ea.getMessage)
+    assert(ManagedTable.load(spark, wh, "vw").isEmpty, "the view must not be shadowed")
+  }
+
+  test("SET TBLPROPERTIES cannot re-key through the catalog: it points at SET IDENTIFIER FIELDS") {
+    val wh = tmpWarehouse()
+    val cat = registerCatalog(wh)
+    spark.sql(s"CREATE TABLE $cat.k (id INT, v STRING) " +
+      "TBLPROPERTIES ('graft.identifier-fields' = 'id')")
+    val e = intercept[Exception](spark.sql(
+      s"ALTER TABLE $cat.k SET TBLPROPERTIES ('graft.identifier-fields' = 'v', 'a' = 'b')"))
+    assert(e.getMessage.contains("SET IDENTIFIER FIELDS"), e.getMessage)
+    val m = ManagedTable.load(spark, wh, "k").get.meta
+    assert(m.identifierFields == Seq("id"))
+    assert(!m.properties.contains("graft.identifier-fields") && !m.properties.contains("a"),
+      "a refused ALTER must change nothing")
+  }
+
   test("V2 writes: INSERT INTO / OVERWRITE / CTAS / wap staging through one commit protocol") {
     val wh = tmpWarehouse()
     val cat = registerCatalog(wh)

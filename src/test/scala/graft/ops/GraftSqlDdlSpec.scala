@@ -5,9 +5,10 @@ import graft.tables.ManagedTable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SQL DDL over graft tables ([[graft.plans.ResolveGraftDdl]]): CREATE /
-  * DROP TABLE and the ALTER family route to the ManagedTable metadata
-  * operations as eager commands.
+/** SQL DDL over graft tables: CREATE / CTAS / DROP TABLE, the column and
+  * property ALTERs and TRUNCATE run as Spark's V2 execs on
+  * [[graft.catalog.GraftCatalog]]; views, SHOW/DESCRIBE, CALL and the
+  * grammar-less verbs run as eager commands ([[graft.plans.ResolveGraftDdl]]).
   */
 class GraftSqlDdlSpec extends AnyFunSuite with SharedSpark {
 
@@ -579,6 +580,11 @@ class GraftSqlDdlSpec extends AnyFunSuite with SharedSpark {
         s2.sql("INSERT OVERWRITE graft.wap VALUES (9, 'x')")
       }
       assert(eOver.getMessage.contains("not overwrites"), eOver.getMessage)
+      // TRUNCATE under an active wap branch refuses like <cat>.<t>: it
+      // would empty the LIVE table mid-audit (the live count is checked
+      // after the branch is unset below)
+      val eTrunc = intercept[Exception] { s2.sql("TRUNCATE TABLE graft.wap") }
+      assert(eTrunc.getMessage.contains("cannot target WAP branch"), eTrunc.getMessage)
       // row-level DML under an active wap branch STAGES onto the branch
       // (round 9, Iceberg's branch-targeted DML): the audit workflow can
       // correct staged rows in place, the live table stays untouched
@@ -848,6 +854,82 @@ class GraftSqlDdlSpec extends AnyFunSuite with SharedSpark {
     } finally {
       org.apache.spark.sql.SparkSession.setDefaultSession(base)
       org.apache.spark.sql.SparkSession.setActiveSession(base)
+    }
+  }
+
+  /** A session with the extensions over a fresh warehouse. */
+  private def withGraftSession(f: (org.apache.spark.sql.SparkSession, String) => Unit): Unit = {
+    val base = spark
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try {
+      val b = org.apache.spark.sql.SparkSession.builder()
+        .master(base.sparkContext.master)
+        .withExtensions(new graft.GraftExtensions().apply(_))
+      base.conf.getAll.foreach { case (k, v) => b.config(k, v) }
+      val s2 = b.getOrCreate()
+      val wh = java.nio.file.Files.createTempDirectory("graft-sqlddl-v2").toString
+      s2.conf.set("spark.graft.warehouse", wh)
+      f(s2, wh)
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(base)
+      org.apache.spark.sql.SparkSession.setActiveSession(base)
+    }
+  }
+
+  test("graft.<t> table DDL executes as Spark's V2 execs on GraftCatalog / GraftV2Table") {
+    withGraftSession { (s2, wh) =>
+      // the physical node an eager statement ran, and whether it holds
+      // the catalog (or, for TRUNCATE, the catalog's table)
+      def exec(sql: String): org.apache.spark.sql.execution.SparkPlan =
+        s2.sql(sql).queryExecution.commandExecuted match {
+          case c: org.apache.spark.sql.catalyst.plans.logical.CommandResult =>
+            c.commandPhysicalPlan
+          case other => fail(s"not an eager command: $other")
+        }
+      def check(sql: String, execName: String): Unit = {
+        val p = exec(sql)
+        assert(p.getClass.getSimpleName == execName, s"$sql planned $p")
+        assert(p.productIterator.exists {
+          case _: graft.catalog.GraftCatalog | _: graft.catalog.GraftV2Table => true
+          case _ => false
+        }, s"$sql did not run on the catalog: $p")
+      }
+      check("""CREATE TABLE graft.k (id BIGINT, ts TIMESTAMP, msg STRING)
+        |PARTITIONED BY (day(ts), bucket(4, id))
+        |TBLPROPERTIES ('graft.identifier-fields'='id')""".stripMargin, "CreateTableExec")
+      val m = ManagedTable.load(s2, wh, "k").get.meta
+      assert(m.identifierFields == Seq("id"))
+      assert(m.partitionBy == Seq("day(ts)", "bucket(id,4)"))
+      assert(!m.properties.contains("graft.identifier-fields"))
+      s2.sql("INSERT INTO graft.k VALUES (1, TIMESTAMP '2024-01-02 03:04:05', 'a')")
+      check("ALTER TABLE graft.k ADD COLUMNS (sev INT)", "AlterTableExec")
+      check("ALTER TABLE graft.k RENAME COLUMN msg TO note", "AlterTableExec")
+      check("ALTER TABLE graft.k DROP COLUMN sev", "AlterTableExec")
+      check("ALTER TABLE graft.k SET TBLPROPERTIES ('write.cluster-by'='id')", "AlterTableExec")
+      check("ALTER TABLE graft.k UNSET TBLPROPERTIES ('write.cluster-by')", "AlterTableExec")
+      val m2 = ManagedTable.load(s2, wh, "k").get.meta
+      assert(m2.schema.fieldNames.toSeq == Seq("id", "ts", "note"))
+      assert(!m2.properties.contains("write.cluster-by"))
+      check("CREATE TABLE graft.k2 AS SELECT id, note FROM graft.k", "CreateTableAsSelectExec")
+      assert(s2.sql("SELECT note FROM graft.k2").collect().map(_.getString(0)).toSeq == Seq("a"))
+      check("TRUNCATE TABLE graft.k2", "TruncateTableExec")
+      assert(s2.sql("SELECT * FROM graft.k2").count() == 0)
+      check("DROP TABLE graft.k2", "DropTableExec")
+      assert(ManagedTable.load(s2, wh, "k2").isEmpty)
+    }
+  }
+
+  test("ALTER TABLE graft.<t> ADD COLUMNS keeps a DEFAULT: existing rows read it") {
+    withGraftSession { (s2, _) =>
+      s2.sql("CREATE TABLE graft.d (id BIGINT, v STRING) " +
+        "TBLPROPERTIES ('graft.identifier-fields'='id')")
+      s2.sql("INSERT INTO graft.d VALUES (1, 'a')")
+      s2.sql("ALTER TABLE graft.d ADD COLUMNS (score INT DEFAULT 7)")
+      s2.sql("INSERT INTO graft.d VALUES (2, 'b', 30)")
+      val got = s2.sql("SELECT id, score FROM graft.d").collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      assert(got == Map(1L -> 7, 2L -> 30), got)
     }
   }
 }
