@@ -18,7 +18,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.tables.{ManagedTable, Manifest, ManifestEntry}
+import graft.tables.{ManagedTable, Manifest, ManifestEntry, StatsPrune}
 
 /** DSv2 read path over the manifest layer.
   *
@@ -123,12 +123,13 @@ final class GraftScanBuilder(t: ManagedTable, pinnedRef: Option[String] = None,
 
   /** Manifest-answered aggregates — what `SELECT count(*)/min/max` over
     * `graft.t` or `<cat>.t`, and `df.agg(...)` over `format("graft-table")`,
-    * collapse to: when every live group is
-    * plain data carrying the needed stats, the aggregate answers from ONE
-    * manifest read as a [[LocalScan]] — zero file scans on a 100 TB
-    * table. The table layer's exactness gates (MoR states, branch views,
-    * bound-less or pre-evolution columns, non-round-tripping tuples)
-    * return None and the real scan keeps the query.
+    * collapse to, grouped by identity partition sources or not: ONE call
+    * to [[ManagedTable.manifestGroupedAggOver]] over the entries this scan
+    * would serve (live, pinned ref or wap branch, narrowed by consumed
+    * region predicates), answered as a [[LocalScan]] — zero file scans.
+    * The fold's exactness gates (MoR states, bound-less or pre-evolution
+    * columns, non-round-tripping tuples) return None and the real scan
+    * keeps the query.
     */
   // memoized per Aggregation instance: Spark probes supportCompletePushDown
   // and pushAggregation with the same object — one manifest walk, not two
@@ -151,14 +152,6 @@ final class GraftScanBuilder(t: ManagedTable, pinnedRef: Option[String] = None,
     aggAnswer = cachedAnswer(agg)
     aggAnswer.isDefined
   }
-
-  /** Entries of the pinned/live snapshot filtered by the CONSUMED exact
-    * region predicates — the entry set every region-filtered answer and
-    * scan serves. A single-epoch entry missing the tuple key would make
-    * the consumed filter silently wrong, so it fails loudly instead.
-    */
-  private def regionEntries(snapshot: Seq[ManifestEntry]): Seq[ManifestEntry] =
-    GraftScan.filterByRegion(snapshot, exactRegion, t.name)
 
   private def answerAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
@@ -196,75 +189,24 @@ final class GraftScanBuilder(t: ManagedTable, pinnedRef: Option[String] = None,
       case Some(c) if t.meta.schema.fieldNames.contains(c) => c
       case _ => return None
     })
-    if (groupCols.isEmpty) {
-      val vals =
-        if (exactRegion.isEmpty) wants.map {
-          case ("count", _) => t.fastRowCount(pinnedRef).getOrElse(return None)
-          case (k, Some(c)) =>
-            t.manifestColExtreme(c, wantMin = k == "min", pinnedRef)
-              .map(GraftScan.statsToColumn(_, t.meta.schema(c).dataType, session))
-              .getOrElse(return None)
-          case _ => return None
-        } else {
-          // region-filtered fold (round 11): the same exactness gates as
-          // the whole-table answers (all-data entries, recorded counts,
-          // bounds present on EVERY entry — an all-null group has none
-          // and forces the scan), over the region's entries only
-          val entries = regionEntries(
-            pinnedRef.map(t.v2RefEntries).getOrElse(t.v2SnapshotEntries))
-            .filterNot(_.kind == Manifest.PosDel)
-          if (!entries.forall(e => e.kind == Manifest.Data && e.rows >= 0L))
-            return None
-          wants.map {
-            case ("count", _) => entries.map(_.rows).sum
-            case (k, Some(c)) =>
-              if (entries.isEmpty) return None // empty region: scan answers the NULL shape
-              val bs = entries.map(_.stats.get(c))
-              if (bs.exists(_.isEmpty)) return None
-              val bounds = bs.map(_.get)
-              val tag = bounds.head.t
-              if (bounds.exists(_.t != tag)) return None
-              val folded = bounds.map(b => if (k == "min") b.min else b.max)
-                .reduce((a, b) => graft.tables.StatsPrune.cmpBound(tag, a, b) match {
-                  case Some(cmp) =>
-                    if (k == "min") { if (cmp <= 0) a else b }
-                    else if (cmp >= 0) a else b
-                  case None => return None
-                })
-              GraftScan.statsToColumn(
-                folded, t.meta.schema(c).dataType, session)
-            case _ => return None
-          }
+    val entries = GraftScan.filterByRegion(
+      pinnedRef.map(t.v2RefEntries).getOrElse(t.v2SnapshotEntries), exactRegion, t.name)
+    t.manifestGroupedAggOver(groupCols, wants, entries).map { rows =>
+      val tz = session.sessionState.conf.sessionLocalTimeZone
+      val gFields = groupCols.map(c => t.meta.schema(c))
+      val data = rows.map { case (tuple, vals) =>
+        val gVals = tuple.zip(gFields).map { case (s, gf) =>
+          s.map(v => Cast(Literal(v), gf.dataType, Some(tz)).eval(null)).orNull
         }
-      Some((StructType(wants.map(aggField)), Array(InternalRow.fromSeq(vals))))
-    } else {
-      // grouped answers: whole-snapshot through the table layer, or the
-      // region's entries when exact region predicates were consumed —
-      // `GROUP BY hour WHERE day='x'` from one metadata read
-      val grouped =
-        if (exactRegion.isEmpty) t.manifestGroupedAgg(groupCols, wants, pinnedRef)
-        else t.manifestGroupedAggOver(groupCols, wants, regionEntries(
-          pinnedRef.map(t.v2RefEntries).getOrElse(t.v2SnapshotEntries))
-          .filterNot(_.kind == Manifest.PosDel))
-      grouped.map { rows =>
-        val tz = session.sessionState.conf.sessionLocalTimeZone
-        val gFields = groupCols.map(c => t.meta.schema(c))
-        val data = rows.map { case (tuple, vals) =>
-          val gVals = tuple.zip(gFields).map { case (s, gf) =>
-            s.map(v => org.apache.spark.sql.catalyst.expressions.Cast(
-              org.apache.spark.sql.catalyst.expressions.Literal(v), gf.dataType, Some(tz))
-              .eval(null)).orNull
-          }
-          val aVals = wants.zip(vals).map {
-            case (("count", _), v) => v
-            case ((_, Some(c)), v) =>
-              GraftScan.statsToColumn(v, t.meta.schema(c).dataType, session)
-            case _ => throw new IllegalStateException("unreachable")
-          }
-          InternalRow.fromSeq(gVals ++ aVals)
+        val aVals = wants.zip(vals).map {
+          case (("count", _), v) => v
+          case ((_, Some(c)), v) =>
+            GraftScan.statsToColumn(v, t.meta.schema(c).dataType, session)
+          case _ => throw new IllegalStateException("unreachable")
         }
-        (StructType(gFields ++ wants.map(aggField)), data.toArray)
+        InternalRow.fromSeq(gVals ++ aVals)
       }
+      (StructType(gFields ++ wants.map(aggField)), data.toArray)
     }
   }
 
@@ -511,15 +453,6 @@ object GraftScan {
     */
   final case class TopNHint(col: String, asc: Boolean, nullsFirst: Boolean, n: Int)
 
-  private def cmpBound(tag: String, a: Any, b: Any): Option[Int] =
-    graft.tables.StatsPrune.cmpBound(tag, a, b)
-
-  private def limitTruncate(entries: Seq[ManifestEntry], n: Int): Seq[ManifestEntry] =
-    graft.tables.StatsPrune.limitTruncate(entries, n)
-
-  private def topNTruncate(entries: Seq[ManifestEntry], tn: TopNHint): Seq[ManifestEntry] =
-    graft.tables.StatsPrune.topNTruncate(entries, tn.col, tn.asc, tn.nullsFirst, tn.n)
-
   /** An EXACT region selector: equality / IN on an identity partition
     * SOURCE column of a single-epoch table, whose literal's canonical
     * string provably equals the write path's tuple canonicalization
@@ -735,8 +668,9 @@ object GraftScan {
       dataEntries.forall(e => e.kind == Manifest.Data && e.rows >= 0L)
     val dataServed =
       if (!hintEligible) dataEntries
-      else topNHint.map(topNTruncate(dataEntries, _))
-        .orElse(limitHint.map(limitTruncate(dataEntries, _)))
+      else topNHint.map(tn =>
+          StatsPrune.topNTruncate(dataEntries, tn.col, tn.asc, tn.nullsFirst, tn.n))
+        .orElse(limitHint.map(StatsPrune.limitTruncate(dataEntries, _)))
         .getOrElse(dataEntries)
     val appliedByTuple = posdels.groupBy(_.partition)
       .map { case (p, es) => p -> es.map(_.seq).max }
@@ -906,44 +840,30 @@ object GraftScan {
     val colStats: Map[String, ColStat] =
       if (dataServed.isEmpty) Map.empty
       else required.fields.iterator.flatMap { f =>
-        val bs = dataServed.map(_.stats.get(f.name))
-        if (bs.exists(_.isEmpty)) None
-        else {
-          val bounds = bs.map(_.get)
-          val tag = bounds.head.t
-          def comp(v: Any): Boolean = tag match {
-            case "i" | "f" => v.isInstanceOf[java.lang.Number]
-            case "s"       => v.isInstanceOf[String]
-            case _         => false
+        val bounds = dataServed.flatMap(_.stats.get(f.name))
+        if (bounds.sizeIs < dataServed.size) None
+        else ManagedTable.boundsRange(bounds).map { case (mn, mx) =>
+          val nulls =
+            if (bounds.forall(_.nulls >= 0L)) Some(bounds.map(_.nulls).sum) else None
+          val (mino, maxo) = bounds.head.t match {
+            case "i" | "f" =>
+              (Some(statsToColumn(mn, f.dataType, spark)),
+               Some(statsToColumn(mx, f.dataType, spark)))
+            case _ => (None, None)
           }
-          if (bounds.exists(b => b.t != tag || !comp(b.min) || !comp(b.max))) None
-          else {
-            val mn = bounds.map(_.min).reduce((a, b) =>
-              if (cmpBound(tag, a, b).get <= 0) a else b)
-            val mx = bounds.map(_.max).reduce((a, b) =>
-              if (cmpBound(tag, a, b).get >= 0) a else b)
-            val nulls =
-              if (bounds.forall(_.nulls >= 0L)) Some(bounds.map(_.nulls).sum) else None
-            val (mino, maxo) = tag match {
-              case "i" | "f" =>
-                (Some(statsToColumn(mn, f.dataType, spark)),
-                 Some(statsToColumn(mx, f.dataType, spark)))
-              case _ => (None, None)
-            }
-            // NDV upper bound: per-group approx counts sum, capped at the
-            // non-null row total; a single-identifier key falls back to
-            // the served row count (upsert semantics make it unique)
-            val nonNull =
-              if (bounds.forall(_.nulls >= 0L))
-                numRowsOpt.map(_ - bounds.map(_.nulls).sum) else None
-            val ndv =
-              if (bounds.forall(_.ndv >= 0L)) {
-                val s = bounds.map(_.ndv).sum
-                Some(nonNull.fold(s)(math.min(s, _)))
-              } else if (t.meta.identifierFields == Seq(f.name)) numRowsOpt
-              else None
-            Some(f.name -> ColStat(mino, maxo, nulls, ndv))
-          }
+          // NDV upper bound: per-group approx counts sum, capped at the
+          // non-null row total; a single-identifier key falls back to
+          // the served row count (upsert semantics make it unique)
+          val nonNull =
+            if (bounds.forall(_.nulls >= 0L))
+              numRowsOpt.map(_ - bounds.map(_.nulls).sum) else None
+          val ndv =
+            if (bounds.forall(_.ndv >= 0L)) {
+              val s = bounds.map(_.ndv).sum
+              Some(nonNull.fold(s)(math.min(s, _)))
+            } else if (t.meta.identifierFields == Seq(f.name)) numRowsOpt
+            else None
+          f.name -> ColStat(mino, maxo, nulls, ndv)
         }
       }.toMap
 
@@ -1108,7 +1028,7 @@ object GraftScan {
     if (raw == "__HIVE_DEFAULT_PARTITION__") {
       // a STRING identity column could genuinely HOLD the sentinel text —
       // the tuple cannot distinguish it from null (same ambiguity
-      // manifestGroupedAgg refuses on), so fall back to unkeyed splits;
+      // manifestGroupedAggOver refuses on), so fall back to unkeyed splits;
       // for every other type the sentinel unambiguously means null
       val ambiguous = pf.transform == "identity" &&
         schema(pf.sourceColumn).dataType == StringType

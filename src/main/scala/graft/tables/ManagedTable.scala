@@ -304,28 +304,15 @@ final class ManagedTable private (
     * only hides older rows of P), so a pruned read and a full read agree
     * on every surviving partition.
     */
-  def readPartitions(pred: Map[String, String] => Boolean): DataFrame =
-    readPartitionsEpochAware((_, tuple) => pred(tuple))
-
-  /** [[readPartitions]] whose predicate also sees the SPEC EPOCH each
-    * group was written under. Required whenever the predicate's meaning
-    * depends on the transform's PARAMETER (truncate width, bucket count):
-    * [[updatePartitionSpec]] allows re-parameterizing a transform under
-    * the same derived name, so one tuple key can hold values of different
-    * formulas across epochs — a bound computed under one epoch's formula
-    * must never be compared against another epoch's tuples.
-    */
-  private def readPartitionsEpochAware(
-      pred: (Int, Map[String, String]) => Boolean): DataFrame = {
+  def readPartitions(pred: Map[String, String] => Boolean): DataFrame = {
     require(isPartitioned || specHistory.exists(_._2.nonEmpty),
       "readPartitions needs a partitioned table")
     val entries = currentEntries
-    val kept = entries.filter(e => pred(entryEpoch(e.seq), e.partition))
+    val kept = entries.filter(e => pred(e.partition))
     // Multi-epoch tables: an upsert group from a LATER epoch than any kept
     // group carries GLOBAL cross-epoch delete scopes that may hide kept
     // rows — it must feed the delete side even when its own tuple fails
     // `pred` (its rows stay invisible; see morResolve's deleteCarriers).
-    // `pred` sees each group's tuple under the spec it was written with.
     val carriers =
       if (specBoundaries.isEmpty) Seq.empty
       else {
@@ -374,32 +361,28 @@ final class ManagedTable private (
     b
   }
 
-  /** Range read on a partition SOURCE column — BOTH bounds INCLUSIVE
-    * (`lo <= c AND c <= hi`; half-open windows: pass `hi` just below the
-    * boundary, or post-filter — callers keep the exact predicate on top
-    * and use this as a superset scan). File groups whose partition
-    * tuple cannot intersect the transformed range are pruned at the
-    * MANIFEST — a time-window query on a 100 TB log plans against the
-    * touched days' group lists, opening nothing else. Monotone
-    * transforms only (identity / year / month / day / hour / truncate-on-
-    * string); bucket tuples and entries from epochs without a matching
-    * derived column are never pruned. Open bounds allowed. Built on
-    * [[readPartitions]], so MoR delete-carrier handling is inherited.
+  /** Range read on a monotone partition SOURCE column (identity / year /
+    * month / day / hour / truncate-on-string in some spec epoch), BOTH
+    * bounds INCLUSIVE, open bounds allowed; logical columns, exact rows.
+    * A time-window query on a day-partitioned log plans against the
+    * touched days' groups. Pruning is [[readPrunedConjunction]]'s rule; a
+    * bound that does not cast to the column's type fails here instead of
+    * silently pruning nothing.
     */
   def readSourceRange(c: String, lo: Option[Any], hi: Option[Any]): DataFrame = {
     require(_meta.schema.fieldNames.contains(c), s"unknown column $c")
     require(lo.isDefined || hi.isDefined, "at least one bound")
     require(monotoneFieldsOf(c).nonEmpty,
       s"$c is not a monotone partition source column of any spec epoch")
-    val fltr = readPartitionsEpochAware(tupleRangePred(c, lo, hi))
-    val base = fltr.select(_meta.schema.fieldNames.map(col).toIndexedSeq: _*)
+    tupleRangePred(c, lo, hi) // throws on an uncastable bound
+    val base = readPrunedConjunction(Seq(ManagedTable.PruneConjunct(c, lo, hi)))
+      .select(_meta.schema.fieldNames.map(col).toIndexedSeq: _*)
     val withLo = lo.map(v => base.filter(col(c) >= lit(v))).getOrElse(base)
     hi.map(v => withLo.filter(col(c) <= lit(v))).getOrElse(withLo)
   }
 
-  /** The epoch-aware tuple-range test behind [[readSourceRange]], reusable
-    * against any entry set (composite pruning, round 9): can the tuple
-    * hold rows with `c` in the inclusive range [lo, hi]?
+  /** The epoch-aware tuple-range test behind [[conjunctStates]]: can the
+    * tuple hold rows with `c` in the inclusive range [lo, hi]?
     *
     * Bounds are transformed PER EPOCH through that epoch's own Catalyst
     * expression: updatePartitionSpec allows re-parameterizing a transform
@@ -454,119 +437,52 @@ final class ManagedTable private (
   def partitions(): Seq[Map[String, String]] =
     currentEntries.map(_.partition).distinct
 
-  /** Metadata-only row count, when the manifest can answer it exactly:
-    * every live group is plain data (`kind=data`) with a recorded row
-    * count — no equality-delete scopes or tombstones can hide rows, so
-    * the count is the sum of entry counts, one manifest read, ZERO data
-    * scan (Iceberg's `snapshot.summary.total-records` answer to
-    * `SELECT count(*)`; at 100 TB the difference between milliseconds and
-    * a full-table job). `None` when any group is an upsert/posdel (visible
-    * rows ≠ written rows until a full [[compact]]) or predates row-count
-    * recording — callers fall back to [[rowCount]].
+  /** Metadata-only row count of the live snapshot: the `count(*)` answer
+    * of [[manifestGroupedAggOver]] (Iceberg's `total-records`), one
+    * manifest read, zero data scan. `None` when any group is an
+    * upsert/posdel (visible rows ≠ written rows until a full [[compact]])
+    * or predates row-count recording — callers fall back to [[rowCount]].
     */
-  def fastRowCount: Option[Long] = fastRowCount(None)
-
-  /** [[fastRowCount]] against a PINNED ref (snapshot number or tag) —
-    * the count of `VERSION AS OF <ref>` from its own retained manifest.
-    */
-  def fastRowCount(ref: Option[String]): Option[Long] =
-    refEntries(ref).flatMap { entries =>
-      if (entries.forall(e => e.kind == Manifest.Data && e.rows >= 0L))
-        Some(entries.map(_.rows).sum)
-      else None
-    }
-
-  /** Entries of a PINNED ref for metadata-answered aggregates: None (the
-    * ref) = the live manifest; a snapshot number or tag = its retained
-    * manifest. None (the result) when the ref is a branch (a staged view
-    * must aggregate staged rows), unknown, or its manifest aged out of
-    * retention — callers fall back to the scan path, which raises the
-    * normal error for genuinely unreadable refs.
-    */
-  private def refEntries(ref: Option[String]): Option[Seq[ManifestEntry]] =
-    ref.filter(_.nonEmpty) match {
-      case None => Some(currentEntries)
-      case Some(r) =>
-        val v = if (r.forall(_.isDigit)) Some(r.toLong) else tags().get(r)
-        v.flatMap(x => Manifest.read(fs, manifestPath(x)))
-    }
+  def fastRowCount: Option[Long] =
+    manifestGroupedAggOver(Seq.empty, Seq("count" -> None), currentEntries)
+      .map(_.head._2.head.asInstanceOf[Long])
 
   /** Exact visible-row count: the manifest answer when available, else one
     * scan. Appends/overwrites/compacted tables stay metadata-only.
     */
   def rowCount(): Long = fastRowCount.getOrElse(read().count())
 
-  /** Exact table-level MIN/MAX of `c` from manifest column bounds, when
-    * the manifest can answer it: every live group is plain data and
-    * carries bounds for `c` (bounds cover the group's non-null values —
-    * exactly SQL min/max semantics; a group whose `c` is all null has no
-    * bounds and forces the scan fallback, as do upsert groups, whose
-    * hidden rows could hold the recorded extreme). The raw stored value
-    * is returned in the stats domain (i→Long, f→Double, s→String);
-    * callers cast to the column type.
-    */
-  def manifestColExtreme(c: String, wantMin: Boolean,
-                         ref: Option[String] = None): Option[Any] = {
-    val entries = refEntries(ref).getOrElse(return None)
-    if (entries.isEmpty) return None
-    if (!entries.forall(e => e.kind == Manifest.Data && e.stats.contains(c)))
-      return None
-    val tag = entries.head.stats(c).t
-    if (!entries.forall(_.stats(c).t == tag)) return None
-    val vs = entries.map(e => if (wantMin) e.stats(c).min else e.stats(c).max)
-    Some(if (wantMin) vs.min(statsOrd(tag)) else vs.max(statsOrd(tag)))
-  }
-
-  /** Exact-domain ordering of stats-tag `t` values: SortKey's
-    * double-compare is fine for conservative pruning but manifest-agg
-    * values are claimed EXACT — a 64-bit id past 2^53 must not tie with
-    * its double-rounded neighbor.
-    */
-  private def statsOrd(tag: String): Ordering[Any] = tag match {
-    case "i" => Ordering.by((v: Any) => v.asInstanceOf[Number].longValue())
-    case "f" => Ordering.by((v: Any) => v.asInstanceOf[Number].doubleValue())
-    case _ => (a: Any, b: Any) => java.util.Arrays.compareUnsigned(
-      String.valueOf(a).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      String.valueOf(b).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  /** Per-PARTITION-TUPLE manifest aggregates (round 10): `GROUP BY <one
-    * or more identity partition sources>` with count / min / max answered
-    * from per-entry row counts and column bounds — the Iceberg
-    * partitions-metadata-table answer to the most common rollup on a
-    * partitioned table, one manifest read, ZERO data scans.
+  /** Manifest-answered aggregates: count / min / max over `entries` — the
+    * entry set a scan would serve (live, pinned ref or consumed region) —
+    * from per-entry row counts and column bounds, one manifest read, zero
+    * data scans. Ungrouped when `groupCols` is empty, else `GROUP BY <one
+    * or more identity partition sources>` (Iceberg's partitions metadata
+    * table answer to the most common rollup).
     *
-    * `wants`: ("count", None) and/or ("min"/"max", Some(col)). Returns
-    * one row per live tuple-value combination — (per-group-column tuple
-    * strings, None for the Hive null sentinel; raw values: count→Long,
-    * min/max in the stats domain, callers cast like
-    * [[manifestColExtreme]]) — or None unless EXACT:
-    *  - every live group plain data with recorded rows (no MoR hiding);
-    *  - single spec epoch (older epochs may not carry the field at all);
-    *  - every group column identity-transformed and string-round-tripping
-    *    (the tuple string must cast back to the exact value — same gate
-    *    as [[tupleRelation]], including the null-vs-"__HIVE_DEFAULT..."
-    *    ambiguity for STRING columns);
-    *  - zero-row groups contribute nothing (SQL emits no group for
-    *    them), and every counted group carries bounds for every min/max
-    *    column (an all-null group has no bounds and cannot claim one).
-    */
-  def manifestGroupedAgg(groupCols: Seq[String], wants: Seq[(String, Option[String])],
-                         ref: Option[String] = None)
-      : Option[Seq[(Seq[Option[String]], Seq[Any])]] =
-    refEntries(ref).flatMap(manifestGroupedAggOver(groupCols, wants, _))
-
-  /** [[manifestGroupedAgg]] over a CALLER-CHOSEN entry set — the seam the
-    * V2 catalog's region-filtered grouped answers use (`GROUP BY hour
-    * WHERE day='x'`): the consumed region predicate filters the entries,
-    * this folds them with the SAME exactness gates.
+    * `wants`: ("count", None) and/or ("min"/"max", Some(col)). Returns one
+    * row per live tuple-value combination (one row when ungrouped) —
+    * (per-group-column tuple strings, None for the Hive null sentinel;
+    * raw values: count→Long, min/max in the stats domain i→Long,
+    * f→Double, s→String, callers cast) — or None unless EXACT:
+    *  - every entry plain data with a recorded row count (an upsert group
+    *    or posdel sidecar can hide rows, so written ≠ visible);
+    *  - grouped only: a single spec epoch (older epochs may not carry the
+    *    field at all), and every group column identity-transformed and
+    *    string-round-tripping (the tuple string must cast back to the
+    *    exact value — same gate as [[tupleRelation]], including the
+    *    null-vs-"__HIVE_DEFAULT..." ambiguity for STRING columns);
+    *  - zero-row groups contribute nothing (SQL emits no group for them),
+    *    and every counted group carries bounds for every min/max column
+    *    (bounds cover non-null values, exactly SQL min/max; an all-null
+    *    group has none and cannot claim one). An ungrouped min/max over no
+    *    rows is left to the scan, which answers NULL.
     */
   private[graft] def manifestGroupedAggOver(groupCols: Seq[String],
                                             wants: Seq[(String, Option[String])],
                                             entries: Seq[ManifestEntry])
       : Option[Seq[(Seq[Option[String]], Seq[Any])]] = {
-    if (groupCols.isEmpty) return None
-    if (entries.exists(e => entryEpoch(e.seq) != currentEpoch)) return None
+    if (groupCols.nonEmpty && entries.exists(e => entryEpoch(e.seq) != currentEpoch))
+      return None
     val pfs = groupCols.map { gc =>
       partitionFields.find(f => f.transform == "identity" &&
         f.sourceColumn.equalsIgnoreCase(gc)).getOrElse(return None)
@@ -581,30 +497,27 @@ final class ManagedTable private (
         fld.dataType == StringType && entries.exists(
           _.partition.get(pf.name).contains(ExternalCatalogUtils.DEFAULT_PARTITION_NAME)) })
       return None
-    // validate every min/max column ONCE: consistent stats tag across all
-    // counted (rows > 0) groups
     val counted = entries.filter(_.rows > 0L)
-    val aggCols = wants.collect { case (_, Some(c)) => c }.distinct
-    aggCols.foreach { c =>
-      if (!counted.forall(_.stats.contains(c))) return None
-      if (counted.map(_.stats(c).t).distinct.sizeIs > 1) return None
-    }
-    val rows = counted.groupBy { e =>
-      pfs.map { pf =>
-        val v = e.partition(pf.name)
-        if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) None else Some(v)
-      }
-    }.toSeq.map { case (tuple, es) =>
+    val groups =
+      if (pfs.isEmpty) {
+        if (counted.isEmpty && wants.exists(_._2.isDefined)) return None
+        Seq(Seq.empty[Option[String]] -> counted)
+      } else counted.groupBy { e =>
+        pfs.map { pf =>
+          val v = e.partition(pf.name)
+          if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) None else Some(v)
+        }
+      }.toSeq
+    Some(groups.map { case (tuple, es) =>
       tuple -> wants.map {
         case ("count", _) => es.map(_.rows).sum
         case (kind, Some(c)) =>
-          val ord = statsOrd(es.head.stats(c).t)
-          val vs = es.map(e => if (kind == "min") e.stats(c).min else e.stats(c).max)
-          if (kind == "min") vs.min(ord) else vs.max(ord)
-        case other => return None // unknown want shape
+          val (mn, mx) = ManagedTable.boundsRange(
+            es.map(_.stats.getOrElse(c, return None))).getOrElse(return None)
+          if (kind == "min") mn else mx
+        case _ => return None // unknown want shape
       }
-    }
-    Some(rows)
+    })
   }
 
   /** Time travel: resolve an older manifest (previous versions are
@@ -1470,61 +1383,25 @@ final class ManagedTable private (
       .withColumn(TombstoneCol, coalesce(col(TombstoneCol), lit(false)))
   }
 
-  /** Stats-pruned key-range scan: only file groups whose manifest bounds
-    * intersect [lo, hi] on `idCol` are opened (groups without bounds are
-    * never pruned). Sound against MoR deletes: a group whose bounds
-    * exclude the range contains no in-range keys, so it can contribute
-    * neither rows nor equality deletes for them. With PK-sorted files the
-    * remaining scan also row-group-prunes inside parquet — a point lookup
-    * on a compacted 100 TB table touches one group and few pages instead
-    * of every file.
+  /** [[readColRange]] on an identifier column: a point lookup on a
+    * PK-sorted, compacted table opens one group, and parquet row-group
+    * pruning skips most of its pages.
     */
   def readKeyRange(idCol: String, lo: Any, hi: Any): DataFrame = {
     require(_meta.identifierFields.contains(idCol), s"$idCol is not an identifier field")
     readColRange(idCol, lo, hi)
   }
 
-  /** Stats-pruned range scan on ANY column with manifest bounds (the
-    * payoff of `write.cluster-by` z-order compaction, which records
-    * bounds for every clustered column on every file group).
-    *
-    * Soundness under MoR deletes differs by column role:
-    *  - identifier column: a group whose bounds exclude [lo, hi] holds
-    *    neither in-range rows nor equality deletes FOR in-range keys
-    *    (deletes target the same column) — prune every kind.
-    *  - non-identifier column: an out-of-bounds UPSERT group still
-    *    carries deletes for keys whose LIVE row is in range (the upsert
-    *    moved the column's value), so upsert groups are never pruned —
-    *    only data-kind groups are. After a clustered compaction the
-    *    table is data-kind groups plus a short trickle suffix, so this
-    *    prunes exactly where the bytes are.
+  /** Range read `lo <= c AND c <= hi` on any column, exact rows (physical
+    * columns). Pruning is [[readPrunedConjunction]]'s rule: on a column
+    * with manifest bounds — every group of a `write.cluster-by` z-order
+    * compaction carries them for each clustered column — only intersecting
+    * groups are opened.
     */
   def readColRange(c: String, lo: Any, hi: Any): DataFrame = {
     require(lo != null && hi != null, "range bounds must be non-null")
-    val entries = currentEntries
-    val isId = _meta.identifierFields.contains(c)
-    val passing = entries.filter(_.stats.get(c).forall(_.intersects(lo, hi)))
-    val pruned =
-      if (isId) passing
-      else {
-        // Non-identifier scan: an out-of-bounds UPSERT group may still
-        // carry deletes for keys whose live row is in range — but only
-        // within its own partition tuple, so keep upsert groups only for
-        // tuples that still have a bounds-passing group to hide rows in.
-        // Across spec epochs scopes are GLOBAL, so a later-epoch upsert
-        // group is kept whenever any earlier-epoch group survives.
-        // Tuple membership counts DATA-BEARING passers only: posdel
-        // sidecars carry no column stats so they always pass the bounds
-        // filter, and counting them would re-admit every tuple's upsert
-        // carriers on tables with per-tuple DV chains.
-        val dataPassing = passing.filterNot(_.kind == Manifest.PosDel)
-        val keptTuples = dataPassing.map(_.partition).toSet
-        val minKeptEpoch = dataPassing.map(e => entryEpoch(e.seq)).minOption.getOrElse(Int.MaxValue)
-        entries.filter(e => e.stats.get(c).forall(_.intersects(lo, hi)) ||
-          (e.kind == Manifest.Upsert && (keptTuples.contains(e.partition) ||
-            entryEpoch(e.seq) > minKeptEpoch)))
-      }
-    morRead(pruned).filter(col(c).between(lit(lo), lit(hi)))
+    readPrunedConjunction(Seq(ManagedTable.PruneConjunct(c, Some(lo), Some(hi))))
+      .filter(col(c).between(lit(lo), lit(hi)))
   }
 
   /** Attach per-group Bloom filters for `cols` to the current snapshot's
@@ -1626,62 +1503,32 @@ final class ManagedTable private (
     cols.map(c => c -> BloomMeta.fold(get(s"bl_$c").asInstanceOf[Array[Byte]], m,
       BloomMeta.domainOf(schema(c).dataType).get)).toMap
 
-  /** Equality point-read: open only the file groups whose column bounds
-    * intersect `v` AND whose Bloom filter (if any, in the column's
-    * current domain) might contain it — on identifier columns every
-    * group written by a commit has one. Sound under MoR deletes by the
-    * same rules as [[readColRange]]: identifier columns prune every kind;
-    * non-identifier columns keep upsert groups of surviving tuples as
-    * delete carriers. Posdel sidecars carry neither stats nor filters and
-    * are always kept.
+  /** Equality point read `c = v`, exact rows (physical columns, so a
+    * derived partition column is allowed). Pruning is
+    * [[readPrunedConjunction]]'s rule: a group is opened only if its
+    * bounds admit `v`, its Bloom filter (if any, in the column's current
+    * domain) might hold it, and its partition tuple can. Identifier
+    * columns carry a filter on every group a commit wrote; [[buildBlooms]]
+    * adds them for others.
     */
   def readWhereEq(c: String, v: Any): DataFrame = {
     require(v != null, "probe value must be non-null (IS NULL can't be bloom-pruned)")
-    val entries = currentEntries
-    val isId = _meta.identifierFields.contains(c)
-    val probe = new BloomMeta.Probe(physicalSchema(c).dataType)
-    def pass(e: ManifestEntry): Boolean =
-      e.stats.get(c).forall(_.intersects(v, v)) && probe.mightContain(e.blooms.get(c), v)
-    val passing = entries.filter(pass)
-    val pruned =
-      if (isId) passing
-      else {
-        val keptTuples = passing.map(_.partition).toSet
-        val minKeptEpoch = passing.map(e => entryEpoch(e.seq)).minOption
-          .getOrElse(Int.MaxValue)
-        entries.filter(e => pass(e) ||
-          (e.kind == Manifest.Upsert && (keptTuples.contains(e.partition) ||
-            entryEpoch(e.seq) > minKeptEpoch)))
-      }
-    morRead(pruned).filter(col(c) === lit(v))
+    readPrunedConjunction(Seq(ManagedTable.PruneConjunct(c, Some(v), Some(v))))
+      .filter(col(c) === lit(v))
   }
 
-  /** Composite manifest pruning (round 9): intersect per-conjunct
-    * candidate entry sets across ALL pushed conjuncts — for each conjunct
-    * every applicable signal fires (column bounds ∧ Bloom on equality ∧
-    * partition-tuple range on monotone source columns), and an entry
-    * survives only if EVERY conjunct keeps it, so `WHERE k = 5 AND day >=
-    * X` prunes multiplicatively instead of by one predicate. `ref` routes
-    * the same pruning against a PINNED manifest (snapshot / tag / branch
-    * read — retained manifests carry the same stats), so a time-travel
-    * audit query prunes like a live read.
+  /** Composite manifest pruning: a scan of the entries that may hold rows
+    * matching EVERY conjunct, plus the delete carriers they need
+    * ([[conjunctStates]] states the rule). `WHERE k = 5 AND day >= X`
+    * prunes multiplicatively instead of by one predicate. `ref` routes the
+    * same pruning against a PINNED manifest (snapshot / tag / branch —
+    * retained manifests carry the same stats), so a time-travel audit
+    * query prunes like a live read.
     *
     * Contract: the result holds a SUPERSET of the rows matching the
-    * conjunction and a subset of the snapshot's rows — callers MUST keep
-    * the exact predicate on top. Soundness per
-    * conjunct follows [[readWhereEq]] / [[readColRange]] /
-    * [[readSourceRange]]'s per-kind rules: identifier
-    * and tuple conjuncts prune upsert groups outright (a group with no
-    * in-range keys / an out-of-range tuple carries no deletes for
-    * surviving rows — scopes are key- and partition-local), non-identifier
-    * bounds keep failing upsert groups of surviving tuples as DELETE
-    * CARRIERS (scope side only, rows never surface), and later-epoch
-    * upsert groups always carry (cross-epoch scopes are global). The
-    * intersection of sound per-conjunct supersets is itself sound: a
-    * surviving row passes every conjunct, so every per-conjunct rule
-    * keeps both its group and any group that might hide it. A conjunct
-    * that cannot evaluate (unknown column, uncastable bound) prunes
-    * nothing — never prune on doubt.
+    * conjunction and a subset of the snapshot's rows (physical columns) —
+    * callers MUST keep the exact predicate on top. A conjunct that cannot
+    * evaluate (unknown column, uncastable bound) prunes nothing.
     */
   def readPrunedConjunction(preds: Seq[ManagedTable.PruneConjunct],
                             ref: Option[String] = None): DataFrame = {
@@ -1691,18 +1538,19 @@ final class ManagedTable private (
   }
 
   /** Entry-set face of [[readPrunedConjunction]]: (scan entries, delete
-    * carriers) over a given entry set. A sound superset per the same
-    * per-conjunct rules; callers re-apply the exact predicates.
+    * carriers) over a given entry set. An entry's state is the minimum of
+    * its per-conjunct [[conjunctStates]]: the intersection of sound
+    * per-conjunct supersets is itself sound, since a surviving row passes
+    * every conjunct, so every per-conjunct rule keeps both its group and
+    * any group that might hide it.
     */
   private def prunedSplit(entries: Seq[ManifestEntry],
                           preds: Seq[ManagedTable.PruneConjunct])
       : (Seq[ManifestEntry], Seq[ManifestEntry]) = {
+    lazy val cols = physicalSchema.fieldNames.toSet
     val valid = preds.filter(p =>
-      _meta.schema.fieldNames.contains(p.c) &&
-        (p.lo.isDefined || p.hi.isDefined || p.values.isDefined))
+      cols.contains(p.c) && (p.lo.isDefined || p.hi.isDefined || p.values.isDefined))
     if (valid.isEmpty) return (entries, Seq.empty)
-    // per-entry state per conjunct: 2 = may hold matching rows, 1 = delete
-    // scopes only (carrier), 0 = provably irrelevant; combine as min
     val states = valid.map { p =>
       try conjunctStates(entries, p)
       catch { case scala.util.control.NonFatal(_) =>
@@ -1764,7 +1612,33 @@ final class ManagedTable private (
     */
   private[graft] def v2RefEntries(ref: String): Seq[ManifestEntry] = refEntries(ref)
 
-  /** Entry states for ONE conjunct — see [[readPrunedConjunction]]. */
+  /** The manifest pruning rule, for ONE conjunct: each entry's state is
+    * 2 (may hold matching rows: scan it), 1 (delete scopes only: a
+    * CARRIER, whose rows never surface) or 0 (provably irrelevant).
+    *
+    * An entry may hold matching rows unless a signal rules it out: its
+    * column bounds miss the range, its Bloom filter (equality only) lacks
+    * the value, or its partition tuple cannot hold it (monotone transforms
+    * of `c`, each epoch's bound transformed by that epoch's own
+    * expression — [[tupleRangePred]]). An IN list passes if any value
+    * passes all three; lists over 64 values prune nothing. Absent stats,
+    * filters or tuple columns never prune, and an uncastable bound skips
+    * the tuple test.
+    *
+    * A failing entry is still a carrier when it is an upsert group whose
+    * deletes may hide a row of a passing group:
+    *  - a LATER spec epoch than some passing data group: cross-epoch
+    *    scopes are global on the identifiers;
+    *  - otherwise never when its tuple fails under its own epoch (scopes
+    *    are partition-local, and same-epoch groups of that tuple failed
+    *    too), nor when `c` is an identifier (no in-range keys, so no
+    *    deletes FOR in-range keys);
+    *  - else when its tuple holds a passing DATA-BEARING group: on a
+    *    non-identifier column an upsert may have moved a key's value out
+    *    of range. Posdel sidecars carry no stats and always pass, so
+    *    counting them would keep every tuple's upserts on tables with
+    *    per-tuple DV chains.
+    */
   private def conjunctStates(entries: Seq[ManifestEntry],
                              p: ManagedTable.PruneConjunct): Map[String, Int] = {
     val isId = _meta.identifierFields.contains(p.c)
@@ -1821,16 +1695,8 @@ final class ManagedTable private (
       val s =
         if (passAll(e)) 2
         else if (e.kind != Manifest.Upsert) 0
-        // cross-epoch scopes are GLOBAL: a later-epoch upsert group may
-        // hide kept rows of any tuple (readPartitionsEpochAware's rule)
         else if (entryEpoch(e.seq) > minKeptEpoch) 1
-        // tuple failed under its own epoch: same-epoch kept groups of this
-        // tuple would have passed too (the test is tuple+epoch-pure), so
-        // no kept row lives in its partition-local scope
-        else if (!tuplePass(e)) 0
-        // no in-range keys => no deletes FOR in-range keys (scopes are
-        // keyed on the identifier)
-        else if (isId) 0
+        else if (!tuplePass(e) || isId) 0
         else if (keptTuples.contains(e.partition)) 1
         else 0
       e.path -> s
@@ -2198,7 +2064,7 @@ final class ManagedTable private (
     * sidecar stay sound on partition-pruned reads: sidecars carry no
     * stats (every pruned scan keeps them — pairs for unscanned files
     * match nothing), and a subset that DROPS the scope's tuple re-applies
-    * its equality scope through [[readPartitionsEpochAware]]'s delete
+    * its equality scope through [[readPartitions]]'s delete
     * carriers. [[compact]] remains the recovery that also normalizes the
     * spec; this one recovers WITHOUT the data rewrite. Returns the number
     * of materialized pairs.
@@ -5286,6 +5152,30 @@ object ManagedTable {
     */
   final case class PruneConjunct(c: String, lo: Option[Any], hi: Option[Any],
                                  values: Option[Seq[Any]] = None)
+
+  /** The exact (min, max) of one column over groups' bounds — the one
+    * bounds fold behind manifest-answered min/max and the V2 scan's CBO
+    * column statistics. Compares with [[StatsPrune.cmpBound]] (integral
+    * as Long, so a 64-bit id past 2^53 never ties with its double-rounded
+    * neighbour). None when `bounds` is empty, the groups disagree on the
+    * domain, or a value does not fit it.
+    */
+  private[graft] def boundsRange(bounds: Seq[ColBounds]): Option[(Any, Any)] = {
+    if (bounds.isEmpty) return None
+    val tag = bounds.head.t
+    var mn = bounds.head.min
+    var mx = bounds.head.max
+    for (b <- bounds) {
+      if (b.t != tag) return None
+      (StatsPrune.cmpBound(tag, b.min, mn), StatsPrune.cmpBound(tag, b.max, mx)) match {
+        case (Some(lo), Some(hi)) =>
+          if (lo < 0) mn = b.min
+          if (hi > 0) mx = b.max
+        case _ => return None
+      }
+    }
+    Some((mn, mx))
+  }
 
   /** Reserved property prefix for snapshot tags ([[ManagedTable.tag]]). */
   val TagPrefix = "ref.tag."

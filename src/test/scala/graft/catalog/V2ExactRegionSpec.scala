@@ -146,4 +146,57 @@ class V2ExactRegionSpec extends AnyFunSuite with SharedSpark {
     val s3 = spark.sql(s"SELECT count(*) AS c FROM $cat.er4 WHERE day = 'd1'")
     assert(!isLocalOnly(s3) && s3.as[Long].head() == 101L)
   }
+
+  /** Under `spark.wap.branch` naming a live branch, `<cat>.t` reads the
+    * branch's staged view. For count, min and max, the plain and the
+    * region-filtered (`day = region`) query must both equal the staged
+    * view's scan, and be manifest-answered alike. Returns whether each
+    * aggregate was answered.
+    */
+  private def branchAggregates(wh: String, name: String, cat: String,
+                               region: String): Seq[Boolean] = {
+    val view = ManagedTable.load(spark, wh, name).get.readBranch("audit")
+    val shapes = Seq("" -> view,
+      s" WHERE day = '$region'" -> view.filter(col("day") === region))
+    for (agg <- Seq("count(*)", "min(id)", "max(id)")) yield {
+      val answered = shapes.map { case (where, want) =>
+        val df = spark.sql(s"SELECT $agg FROM $cat.$name$where")
+        assert(df.head().get(0) == want.selectExpr(agg).head().get(0), s"$agg$where")
+        isLocalOnly(df)
+      }
+      assert(answered.distinct.size == 1, s"$agg answered (plain, region): $answered")
+      answered.head
+    }
+  }
+
+  test("wap branch: staged appends answer count/min/max from the manifest, with or without a region") {
+    val wh = tmpWarehouse()
+    val t = ManagedTable.create(spark, wh, "wapa", schema, Seq("id"), Seq("day"))
+    def batch(ids: Range) = ids.map(i => (i, s"d${i % 3}", i.toLong)).toDF("id", "day", "v")
+    t.append(batch(0 until 60))
+    t.stageAppendInto(batch(60 until 90), "audit")
+    t.stageAppendInto(batch(90 until 99), "audit")
+    val cat = registerCatalog(wh)
+    spark.conf.set("spark.wap.branch", "audit")
+    try assert(branchAggregates(wh, "wapa", cat, "d0").forall(identity))
+    finally spark.conf.unset("spark.wap.branch")
+  }
+
+  test("wap branch: a staged delete keeps the scan for count/min/max, with or without a region") {
+    val wh = tmpWarehouse()
+    val t = ManagedTable.create(spark, wh, "wapd", schema, Seq("id"), Seq("day"))
+    def batch(ids: Range) = ids.map(i => (i, s"d${i % 3}", i.toLong)).toDF("id", "day", "v")
+    t.append(batch(0 until 60))
+    t.stageAppendInto(batch(60 until 90), "audit")
+    val cat = registerCatalog(wh)
+    spark.conf.set("spark.wap.branch", "audit")
+    try {
+      // ids 0, 3 and 63 all live in day d0: the staged upsert group is in
+      // the region's own tuple
+      spark.sql(s"DELETE FROM $cat.wapd WHERE id IN (0, 3, 63)")
+      assert(ManagedTable.load(spark, wh, "wapd").get.read().count() == 60,
+        "the delete must stage, not commit")
+      assert(!branchAggregates(wh, "wapd", cat, "d0").exists(identity))
+    } finally spark.conf.unset("spark.wap.branch")
+  }
 }

@@ -12,11 +12,12 @@ import scala.jdk.CollectionConverters._
 /** Manifest Bloom filters for equality pruning on unsorted columns:
   * the identifier-column filters every commit builds in its write pass
   * (sized to the group's rows, [[BloomMeta.bitsFor]]), the
-  * [[ManagedTable.buildBlooms]] pass for other columns, and the probes of
-  * [[ManagedTable.readWhereEq]], the V2 scan planner and the
-  * posdel-on-commit candidate search. Filters carry the domain their
-  * values were hashed in, so a widened column never trusts a filter built
-  * under its old type.
+  * [[ManagedTable.buildBlooms]] pass for other columns, and their probes
+  * in the one manifest pruning rule ([[ManagedTable.readPrunedConjunction]],
+  * behind both [[ManagedTable.readWhereEq]] and the V2 scan planner) and
+  * in the posdel-on-commit candidate search. Filters carry the domain
+  * their values were hashed in, so a widened column never trusts a filter
+  * built under its old type.
   */
 class BloomSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
@@ -89,6 +90,36 @@ class BloomSpec extends AnyFunSuite with SharedSpark {
     assert(t.readWhereEq("tag", "keep").count() == 1)
     val re = ManagedTable.load(spark, wh, "b4").get
     assert(re.meta.currentVersion == t.meta.currentVersion)
+  }
+
+  test("readWhereEq on a non-identifier column opens no other tuple's upserts for its DV sidecar") {
+    val wh = tmpWarehouse()
+    val t = ManagedTable.create(spark, wh, "b_dv", schema, Seq("id"), partitionBy = Seq("tag"),
+      properties = Map("write.mor.posdel-on-commit" -> "always",
+        "write.mor.compact-after-upserts" -> "0"))
+    val cfg = CdcApply.UpsertConfig(dedupColumn = "v")
+    t.append(rows((1 to 20).map(i => (i, "a", i.toLong)) ++
+      (21 to 40).map(i => (i, "b", 1000L + i)): _*))
+    // one upsert group per tuple, each with its tuple's posdel sidecar
+    t.merge(rows((1 to 5).map(i => (i, "a", 100L + i)) ++
+      (21 to 25).map(i => (i, "b", 2000L + i)): _*), cfg)
+    t.analyzeColumns(Seq("v"))
+    val entries = t.v2SnapshotEntries
+    def of(kind: String, tuple: String) =
+      entries.filter(e => e.kind == kind && e.partition.get("tag").contains(tuple))
+    assert(of(Manifest.PosDel, "b").nonEmpty && of(Manifest.Upsert, "b").nonEmpty,
+      s"expected a sidecar and an upsert group in tuple b: $entries")
+    for (v <- Seq(10L, 3L, 103L, 1030L, 2022L, 7777L)) {
+      val eq = t.readWhereEq("v", v)
+      val conj = t.readPrunedConjunction(
+        Seq(ManagedTable.PruneConjunct("v", Some(v), Some(v))))
+      assert(eq.inputFiles.toSet == conj.inputFiles.toSet, s"probe $v")
+      assert(eq.select("id").as[Int].collect().toSet ==
+        t.read().filter(col("v") === v).select("id").as[Int].collect().toSet, s"probe $v")
+    }
+    // v = 10 lives in tuple a only: tuple b's upsert group stays closed
+    val bUpserts = of(Manifest.Upsert, "b").map(_.path)
+    assert(!t.readWhereEq("v", 10L).inputFiles.exists(f => bUpserts.exists(f.contains)))
   }
 
   test("guards: unknown column, non-power-of-two bits, null probe") {
