@@ -36,6 +36,22 @@ class GraftV2Table(val t: ManagedTable,
 
   override def name(): String = t.name
 
+  /** Two handles are equal when they name one table at one ref, whatever
+    * snapshot each pinned — Iceberg's rule for Spark's cache. A cached
+    * read then serves later reads of the table, and the refresh after a
+    * write through Spark (a V2 write exec, [[graft.plans.GraftDmlCommand]])
+    * re-plans the cache entry over a freshly loaded handle. A write that
+    * bypasses Spark (the table API, the CDC pipeline) leaves such a cache
+    * stale until it is unpersisted, as for an Iceberg table.
+    */
+  override def equals(other: Any): Boolean = other match {
+    case o: GraftV2Table => o.getClass == getClass &&
+      o.t.v2TableDir == t.v2TableDir && o.pinnedRef == pinnedRef
+    case _ => false
+  }
+
+  override def hashCode(): Int = (t.v2TableDir, pinnedRef).hashCode()
+
   override def schema(): StructType = t.meta.schema
 
   /** Iceberg-style metadata columns, resolved only when NAMED (never in
@@ -408,8 +424,8 @@ final class GraftWriteBuilder(t: ManagedTable, info: LogicalWriteInfo)
     overwriteCond = Some(filters.toSeq.map(f =>
       GraftV2Table.filterToColumn(t.meta.schema, f).getOrElse(
         throw new UnsupportedOperationException(
-          s"graft V2 catalog: cannot translate overwrite condition $f — " +
-            s"use the graft SQL surface (INSERT OVERWRITE graft.${t.name} …)")))
+          s"graft V2 catalog: cannot translate overwrite condition $f — only " +
+            "comparison, IN and null predicates on top-level columns translate")))
       .reduceOption(_ && _).getOrElse(lit(true)))
     this
   }

@@ -3,33 +3,24 @@ package graft.plans
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 
-/** Eager side-effect node for the SQL DML surface over graft tables:
-  * `DELETE FROM graft.t …`, `UPDATE graft.t …`, `INSERT INTO graft.t …`,
-  * `MERGE INTO graft.t …` analyze into one of these, and Spark's
+/** Eager side-effect node for the `graft.<t>` statements Spark's V2 execs
+  * cannot run: `DELETE FROM`, `UPDATE` and `MERGE INTO graft.t …`
+  * ([[ResolveGraftTables]]) and the view, ref and partition-field DDL
+  * ([[ResolveGraftDdl]]) analyze into one of these, and Spark's
   * command-execution phase runs the captured [[graft.tables.ManagedTable]]
-  * operation exactly once when the statement executes — the same
-  * eager-command shape Spark's own INSERT uses, so `.explain` on the
-  * statement does NOT mutate the table and a re-collect does not re-run
-  * the write.
+  * operation exactly once when the statement executes — so `.explain` on
+  * the statement does NOT mutate the table and a re-collect does not
+  * re-run the write. Afterwards it refreshes cached reads of `graft.<t>`,
+  * as Spark's V2 write execs do for an INSERT.
   */
 case class GraftDmlCommand(operation: String, table: String,
                            body: () => Unit) extends LeafRunnableCommand {
-  override def run(session: SparkSession): Seq[Row] = { body(); Seq.empty }
+  override def run(session: SparkSession): Seq[Row] = {
+    body()
+    val classic = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    classic.sharedState.cacheManager.recacheTableOrView(classic, Seq("graft", table))
+    Seq.empty
+  }
   override def simpleString(maxFields: Int): String =
     s"GraftDmlCommand $operation graft.$table"
-}
-
-/** [[GraftDmlCommand]] with a result relation — the maintenance-procedure
-  * surface (`CALL graft.system.compact('t')`, the Iceberg stored-procedure
-  * analogue): eager like the DML commands (explain does not run the
-  * procedure), but the run returns informational rows (files rewritten,
-  * snapshots expired, …) like Iceberg's procedures do.
-  */
-case class GraftCallCommand(
-    operation: String, table: String,
-    override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-    body: () => Seq[Row]) extends LeafRunnableCommand {
-  override def run(session: SparkSession): Seq[Row] = body()
-  override def simpleString(maxFields: Int): String =
-    s"GraftCallCommand $operation graft.$table"
 }

@@ -4,30 +4,34 @@ import graft.catalog.GraftCatalog
 import graft.tables.ViewStore
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, ResolvedIdentifier, ResolvedTable, UnresolvedIdentifier, UnresolvedTable}
+import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, ResolvedIdentifier, ResolvedProcedure, ResolvedTable, UnresolvedIdentifier, UnresolvedProcedure, UnresolvedTable}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.parser.ParserInterface
-import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, CreateTable, CreateTableAsSelect, DropColumns, DropTable, LogicalPlan, RenameColumn, SetTableProperties, TruncateTable, UnsetTableProperties}
+import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, Call, CreateTable, CreateTableAsSelect, DropColumns, DropTable, LogicalPlan, RenameColumn, SetTableProperties, TruncateTable, UnsetTableProperties}
 import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.execution.command.ExplainCommand
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Delegating parser for the `graft.<t>` DDL surface.
+/** Delegating parser for the `graft.<t>` DDL and CALL surface.
   *
   * CREATE TABLE, CTAS, DROP TABLE, `ALTER TABLE … ADD COLUMNS / DROP
-  * COLUMN / RENAME COLUMN / SET TBLPROPERTIES / UNSET TBLPROPERTIES` and
-  * `TRUNCATE TABLE` are the catalog's DDL: this parser only rewrites the
-  * `graft.<t>` identifier onto [[GraftCatalog.forWarehouse]] over
+  * COLUMN / RENAME COLUMN / SET TBLPROPERTIES / UNSET TBLPROPERTIES`,
+  * `TRUNCATE TABLE` and `CALL graft.system.<proc>(…)` are the catalog's
+  * statements: this parser only rewrites the `graft.<t>` identifier (or
+  * the procedure) onto [[GraftCatalog.forWarehouse]] over
   * `spark.graft.warehouse`, and Spark's own V2 execs run the statement
-  * through [[GraftCatalog]] / [[graft.catalog.GraftV2Table]], exactly as
-  * for a registered `<cat>.<t>`. The rewrite has to happen HERE rather
-  * than in a resolution rule: the analyzer's session-catalog resolution
-  * runs before extension rules and rejects e.g. a `day(ts)` partition
-  * transform on a v1 identifier before a rule could claim the statement.
+  * through [[GraftCatalog]] / [[graft.catalog.GraftV2Table]] /
+  * [[graft.catalog.GraftProcedures]], exactly as for a registered
+  * `<cat>.<t>`. The rewrite has to happen HERE rather than in a
+  * resolution rule: the analyzer's session-catalog resolution runs before
+  * extension rules and rejects e.g. a `day(ts)` partition transform on a
+  * v1 identifier before a rule could claim the statement.
   *
   * The verbs Spark's grammar lacks (partition fields, identifier fields,
   * write order, branch/tag refs) are recognized from the SQL text; views,
-  * `SHOW`/`DESCRIBE`, `TRUNCATE … PARTITION` and `CALL` stay in
-  * [[ResolveGraftDdl]], reads and DML in [[ResolveGraftTables]].
+  * `SHOW`/`DESCRIBE` and `TRUNCATE … PARTITION` stay in
+  * [[ResolveGraftDdl]], reads, INSERT and the row-level DML in
+  * [[ResolveGraftTables]].
   */
 class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
@@ -73,10 +77,10 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
       ddl.refDdlCommand(tbl, verb.toUpperCase(java.util.Locale.ROOT),
         kind.toUpperCase(java.util.Locale.ROOT), ref, Option(ver).map(_.toLong))
     case ReplacePartitionFieldDdl(tbl, oldF, newF) =>
-      ddl.replacePartitionFieldCommand(tbl, oldF, newF)
+      ddl.partitionFieldCommand(tbl, Some(oldF), Some(newF))
     case PartitionFieldDdl(tbl, verb, field) =>
-      ddl.partitionFieldCommand(tbl,
-        verb.toUpperCase(java.util.Locale.ROOT), field)
+      if (verb.equalsIgnoreCase("ADD")) ddl.partitionFieldCommand(tbl, None, Some(field))
+      else ddl.partitionFieldCommand(tbl, Some(field), None)
     case SetIdentifierFieldsDdl(tbl, fields) =>
       ddl.setIdentifierFieldsCommand(tbl, fields)
     case WriteOrderedDdl(tbl, order) => ddl.writeOrderedCommand(tbl, Some(order))
@@ -91,9 +95,17 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     * `graft.<t>` target (a direct child) resolves onto [[GraftCatalog]].
     * A missing table keeps `UnresolvedTable`, so Spark raises its normal
     * not-found error; `DROP TABLE` over a persisted view refuses here,
-    * because `DropTableExec` only sees that no table exists.
+    * because `DropTableExec` only sees that no table exists. `CALL
+    * graft.system.<proc>` resolves to the catalog's procedure, which
+    * Spark binds and invokes; EXPLAIN resolves the statement it wraps.
     */
   private def onCatalog(plan: LogicalPlan): LogicalPlan = plan match {
+    case e: ExplainCommand => e.copy(logicalPlan = onCatalog(e.logicalPlan))
+    case c @ Call(UnresolvedProcedure(Seq(g, ns, proc)), _, _)
+        if g.equalsIgnoreCase("graft") && ns.equalsIgnoreCase("system") =>
+      val cat = GraftCatalog.forWarehouse(session, ddl.warehouse(s"system.$proc"))
+      val ident = Identifier.of(Array("system"), proc)
+      c.copy(procedure = ResolvedProcedure(cat, ident, cat.loadProcedure(ident)))
     case _: CreateTable | _: CreateTableAsSelect | _: DropTable | _: AddColumns |
          _: DropColumns | _: RenameColumn | _: SetTableProperties |
          _: UnsetTableProperties | _: TruncateTable =>

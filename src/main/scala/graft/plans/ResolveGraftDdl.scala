@@ -18,12 +18,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *   ALTER TABLE graft.t SET IDENTIFIER FIELDS a, b  — re-key (plain-data gated)
   *   ALTER TABLE graft.t WRITE ORDERED BY … / WRITE UNORDERED — D5's SQL form
   *   ALTER TABLE graft.t CREATE|DROP BRANCH|TAG …
-  *   CALL graft.system.<proc>(…)
   *
-  * CREATE / CTAS / DROP TABLE, the column and property ALTERs and
-  * `TRUNCATE TABLE` are the catalog's own DDL ([[GraftSqlParser]] only
-  * resolves their identifier). The verbs here execute as eager commands,
-  * like the DML surface.
+  * CREATE / CTAS / DROP TABLE, the column and property ALTERs, `TRUNCATE
+  * TABLE` and `CALL graft.system.<proc>(…)` are the catalog's own
+  * statements ([[GraftSqlParser]] only resolves their identifier). The
+  * verbs here execute as eager [[GraftDmlCommand]]s, like UPDATE, DELETE
+  * and MERGE.
   */
 class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -150,17 +150,6 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
         }
         .getOrElse(s)
     }
-    // `CALL graft.system.<proc>(…)` — the Iceberg stored-procedure
-    // analogue over the maintenance ladder: compact / compact_minor /
-    // materialize_position_deletes / expire_snapshots /
-    // rollback_to_version / maintenance. Eager commands returning
-    // informational rows, like Iceberg's procedures.
-    case org.apache.spark.sql.catalyst.plans.logical.Call(
-        up: org.apache.spark.sql.catalyst.analysis.UnresolvedProcedure, args, _)
-        if up.nameParts.length == 3 &&
-          up.nameParts.head.equalsIgnoreCase("graft") &&
-          up.nameParts(1).equalsIgnoreCase("system") =>
-      procedureCommand(up.nameParts(2).toLowerCase(java.util.Locale.ROOT), args)
   }
 
   /** Snapshot-ref DDL (round 8): `ALTER TABLE graft.t CREATE|DROP
@@ -230,79 +219,23 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** `ALTER TABLE graft.t ADD|DROP PARTITION FIELD <transform>` —
-    * partition-spec EVOLUTION through SQL
-    * ([[ManagedTable.updatePartitionSpec]]): metadata-only, nothing
-    * rewritten; existing groups keep their epoch's layout, future writes
-    * use the new spec. DROP matches the field's derived NAME (unique
-    * within a spec), so `DROP PARTITION FIELD bucket(4, id)` and
-    * `DROP PARTITION FIELD id_bucket`'s transform form both resolve.
+  /** `ALTER TABLE graft.t ADD|DROP PARTITION FIELD <transform>` and
+    * `REPLACE PARTITION FIELD <old> WITH <new>` — partition-spec
+    * EVOLUTION through SQL ([[ManagedTable.replacePartitionField]]):
+    * metadata-only, nothing rewritten; existing groups keep their epoch's
+    * layout, future writes use the new spec. A dropped or replaced field
+    * is named by its derived NAME or its transform, so `DROP PARTITION
+    * FIELD bucket(4, id)` and `DROP PARTITION FIELD id_bucket` both
+    * resolve.
     */
-  def partitionFieldCommand(name: String, verb: String, field: String): LogicalPlan = {
-    def t = ManagedTable.load(session, warehouse(name), name).getOrElse(
-      throw new IllegalArgumentException(s"table graft.$name does not exist"))
-    GraftDmlCommand(s"ALTER $verb PARTITION FIELD", name, () => {
-      val tbl = t
-      val cols = tbl.meta.schema.fieldNames.toSet
-      val current = tbl.meta.partitionBy.map(_.trim).filter(_.nonEmpty)
-      def nameOf(s: String): Option[String] =
-        graft.tables.PartitionSpecParser.parse(Seq(s), cols).headOption.map(_.name)
-      verb match {
-        case "ADD" =>
-          val spec = sqlTransformToSpec(name, field)
-          val target = graft.tables.PartitionSpecParser
-            .parse(Seq(spec), cols, strict = true).head
-          require(!current.flatMap(nameOf).contains(target.name),
-            s"ALTER TABLE graft.$name: partition field '${target.name}' already " +
-              s"exists (spec: ${current.mkString(", ")})")
-          tbl.updatePartitionSpec(current :+ spec)
-        case "DROP" =>
-          // a bare token naming a CURRENT field's derived name (id_bucket)
-          // resolves to that field — derived names are not schema columns,
-          // so the transform parse below could never see them
-          val targetName = Some(unq(field))
-            .filter(b => current.flatMap(nameOf).contains(b))
-            .getOrElse(graft.tables.PartitionSpecParser
-              .parse(Seq(sqlTransformToSpec(name, field)), cols, strict = true)
-              .head.name)
-          val keep = current.filterNot(s => nameOf(s).contains(targetName))
-          require(keep.size < current.size,
-            s"ALTER TABLE graft.$name: no partition field '$targetName' " +
-              s"(spec: ${current.mkString(", ")})")
-          tbl.updatePartitionSpec(keep)
-        case other => throw new IllegalStateException(s"unreachable verb $other")
-      }
-    })
-  }
-
-  /** `ALTER TABLE graft.t REPLACE PARTITION FIELD <old> WITH <new>` —
-    * one spec evolution (a single epoch boundary), not a DROP + ADD pair.
-    */
-  def replacePartitionFieldCommand(name: String, oldField: String,
-                                   newField: String): LogicalPlan = {
-    def t = ManagedTable.load(session, warehouse(name), name).getOrElse(
-      throw new IllegalArgumentException(s"table graft.$name does not exist"))
-    GraftDmlCommand("ALTER REPLACE PARTITION FIELD", name, () => {
-      val tbl = t
-      val cols = tbl.meta.schema.fieldNames.toSet
-      val current = tbl.meta.partitionBy.map(_.trim).filter(_.nonEmpty)
-      def nameOf(s: String): Option[String] =
-        graft.tables.PartitionSpecParser.parse(Seq(s), cols).headOption.map(_.name)
-      val newSpec = sqlTransformToSpec(name, newField)
-      // the OLD side resolves like DROP: a current field's derived name
-      // first, else a schema-validated transform
-      val oldName = Some(unq(oldField))
-        .filter(b => current.flatMap(nameOf).contains(b))
-        .getOrElse(graft.tables.PartitionSpecParser
-          .parse(Seq(sqlTransformToSpec(name, oldField)), cols, strict = true)
-          .head.name)
-      graft.tables.PartitionSpecParser.parse(Seq(newSpec), cols, strict = true)
-      require(current.flatMap(nameOf).contains(oldName),
-        s"ALTER TABLE graft.$name: no partition field '$oldName' to replace " +
-          s"(spec: ${current.mkString(", ")})")
-      tbl.updatePartitionSpec(current.map(s =>
-        if (nameOf(s).contains(oldName)) newSpec else s))
-    })
+  def partitionFieldCommand(name: String, oldField: Option[String],
+                            newField: Option[String]): LogicalPlan = {
+    val verb = if (oldField.isEmpty) "ADD" else if (newField.isEmpty) "DROP" else "REPLACE"
+    GraftDmlCommand(s"ALTER $verb PARTITION FIELD", name, () =>
+      ManagedTable.load(session, warehouse(name), name).getOrElse(
+        throw new IllegalArgumentException(s"table graft.$name does not exist"))
+        .replacePartitionField(oldField.map(sqlTransformToSpec(name, _)),
+          newField.map(sqlTransformToSpec(name, _))))
   }
 
   /** `ALTER TABLE graft.t SET IDENTIFIER FIELDS a, b` — re-key through
@@ -366,82 +299,6 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
     })
   }
 
-  private def procedureCommand(
-      proc: String,
-      rawArgs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): LogicalPlan = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Literal, NamedArgumentExpression}
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.sql.Row
-    // ONE spec declares every procedure (names, params, result schemas,
-    // dispatch bodies) for BOTH seams — this parser seam and the V2
-    // ProcedureCatalog ([[graft.catalog.GraftProcedures]]) render it
-    val spec = ProcedureSpecs.byName.getOrElse(proc,
-      throw new IllegalArgumentException(
-        s"CALL graft.system.$proc: unknown procedure " +
-          s"(have: ${ProcedureSpecs.names.mkString(", ")})"))
-    // fold named arguments onto the declared positional slots — with the
-    // standard procedure-call rules: no positional after named, no
-    // duplicate/unknown names, no extra arguments
-    val params = spec.params.map(_._1)
-    val args: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
-      require(params.isEmpty || rawArgs.length <= params.length,
-        s"CALL graft.system.$proc: too many arguments " +
-          s"(${rawArgs.length} given, takes ${params.mkString(", ")})")
-      val slots = new Array[org.apache.spark.sql.catalyst.expressions.Expression](
-        math.max(params.length, rawArgs.length))
-      var pos = 0
-      var sawNamed = false
-      rawArgs.foreach {
-        case NamedArgumentExpression(key, value) =>
-          sawNamed = true
-          val i = params.indexWhere(_.equalsIgnoreCase(key))
-          require(i >= 0, s"CALL graft.system.$proc: unknown argument '$key' " +
-            s"(have: ${params.mkString(", ")})")
-          require(slots(i) == null,
-            s"CALL graft.system.$proc: argument '$key' given twice")
-          slots(i) = value
-        case e =>
-          require(!sawNamed,
-            s"CALL graft.system.$proc: positional argument after a named one")
-          require(slots(pos) == null,
-            s"CALL graft.system.$proc: argument ${pos + 1} given twice")
-          slots(pos) = e; pos += 1
-      }
-      slots.toSeq
-    }
-    def lit(i: Int): Any = args.lift(i) match {
-      case Some(l: Literal) =>
-        org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .convertToScala(l.value, l.dataType)
-      case Some(null) | None => throw new IllegalArgumentException(
-        s"CALL graft.system.$proc: missing argument " +
-          params.lift(i).map(n => s"'$n'").getOrElse(s"${i + 1}"))
-      case Some(other) => throw new IllegalArgumentException(
-        s"CALL graft.system.$proc: arguments must be literals, got $other")
-    }
-    def str(i: Int): String = String.valueOf(lit(i))
-    def lng(i: Int): Long = lit(i) match {
-      case n: java.lang.Number      => n.longValue()
-      case t: java.sql.Timestamp    => t.getTime
-      case t: java.time.Instant     => t.toEpochMilli
-      case other => throw new IllegalArgumentException(
-        s"CALL graft.system.$proc: expected a numeric or timestamp argument, got $other")
-    }
-    def table(name: String): ManagedTable =
-      ManagedTable.load(session, warehouse(name), name).getOrElse(
-        throw new IllegalArgumentException(s"table graft.$name does not exist"))
-    // spec boundary: String / Long, timestamps as epoch MILLIS (lng
-    // already folds numeric and timestamp literals to millis)
-    val argVals: Seq[Any] = spec.params.zipWithIndex.map {
-      case ((_, StringType), i) => str(i)
-      case ((_, _), i)          => lng(i)
-    }
-    GraftCallCommand(s"CALL ${spec.name}",
-      String.valueOf(argVals(spec.displayArg)),
-      spec.out.map { case (n, t) => AttributeReference(n, t, nullable = false)() },
-      () => spec.run(session, table, argVals).map(vs => Row(vs: _*)))
-  }
-
   /** `SHOW TABLES IN graft` — list the warehouse's managed tables
     * ([[ManagedTable.list]]) and persisted views, optionally LIKE-filtered with
     * the usual `*`/`|` glob. Answered at the parser seam as a local
@@ -491,8 +348,7 @@ class ResolveGraftDdl(session: SparkSession) extends Rule[LogicalPlan] {
       val name = u.multipartIdentifier(1)
       session.conf.getOption("spark.graft.warehouse").flatMap { wh =>
         ManagedTable.load(session, wh, name).map { t =>
-          val pf = graft.tables.PartitionSpecParser.parse(
-            t.meta.partitionBy, t.meta.schema.fieldNames.toSet)
+          val pf = t.v2PartitionFields
           require(pf.nonEmpty,
             s"SHOW PARTITIONS: graft.$name is not a partitioned table")
           val resolver = session.sessionState.analyzer.resolver

@@ -9,17 +9,16 @@ import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, InsertIntoS
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Analyzer rule giving managed tables a first-class SQL identity against
   * `spark.graft.warehouse`, injected via [[graft.GraftExtensions]] (the
   * Catalyst-native seam the reference's CDI strategy injection maps to,
-  * SURVEY §2.8). A `graft.<t>` READ is the DSv2 table: the rule loads it
-  * through [[GraftCatalog]] and resolves it to the same
-  * `DataSourceV2Relation` a registered `<cat>.<t>` gets, so one scan
-  * builder serves both spellings.
+  * SURVEY §2.8). A `graft.<t>` READ, and the target of an INSERT, is the
+  * DSv2 table: the rule loads it through [[GraftCatalog]] and resolves it
+  * to the same `DataSourceV2Relation` a registered `<cat>.<t>` gets, so
+  * one scan builder and one write builder serve both spellings.
   *
   * Identifier forms (Iceberg metadata-table style), parsed by the
   * catalog except where noted:
@@ -32,21 +31,22 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    resolved here: a changelog, not a table scan
   *  - `graft.<view>`             — a persisted view, expanded here
   *
-  * The rule also turns SQL DML over `graft.<t>` into eager
-  * [[GraftDmlCommand]]s. Unknown tables fall through unresolved so
-  * Spark's normal error (and temp-view/catalog resolution for other
-  * names) is preserved.
+  * DELETE, UPDATE and MERGE over `graft.<t>` become eager
+  * [[GraftDmlCommand]]s: Spark's row-level protocol needs non-nullable
+  * row ids, which keyless and nullable-key tables lack. Unknown tables
+  * fall through unresolved so Spark's normal error (and temp-view/catalog
+  * resolution for other names) is preserved.
   */
 class ResolveGraftTables(session: SparkSession) extends Rule[LogicalPlan] {
 
   // top-down: DML statements and time travel must see their
   // still-unresolved relation before the bare-relation case rewrites it
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsDown {
-    // ---- SQL DML: the statement nodes Spark's parser produces become
-    // eager [[GraftDmlCommand]]s over the ManagedTable row-level DML API
+    // ---- SQL DML: DELETE / UPDATE / MERGE become eager
+    // [[GraftDmlCommand]]s over the ManagedTable row-level DML API
     // (merge-on-read commits — the SQL spellings of deleteWhere /
-    // updateWhere / append / mergeInto). Matched BEFORE the relation
-    // cases so the target never resolves into a bare scan.
+    // updateWhere / mergeInto). Matched BEFORE the relation cases so the
+    // target never resolves into a bare scan.
     case d @ DeleteFromTable(GraftMetaTarget(full), _) => readOnly(full, d)
     case u0 @ UpdateTable(GraftMetaTarget(full), _, _) => readOnly(full, u0)
     case i: InsertIntoStatement if GraftMetaTarget.unapply(i.table).isDefined =>
@@ -77,126 +77,20 @@ class ResolveGraftTables(session: SparkSession) extends Rule[LogicalPlan] {
             case None    => t.updateWhere(GraftBridge.column(c), set)
           }): LogicalPlan
       }.getOrElse(refuseIfView(name, "UPDATE", u0))
-    // INSERT [OVERWRITE] — with an optional `PARTITION (k=v, k2, …)`
-    // spec on identity partition sources. STATIC entries (k=v) become
-    // literal columns; DYNAMIC entries (bare k) take their values from
-    // the query, exactly like omitting them (Spark's equivalence).
-    // Positional queries provide the non-static columns in schema order.
-    // OVERWRITE with a fully-static spec replaces EXACTLY the named
-    // region (stale sibling tuples under extra derived transforms
-    // cleared; an empty source truncates — SQL static semantics). With
-    // dynamic entries present, partitionOverwriteMode decides, per
-    // Spark: static mode clears the whole static-prefix region; dynamic
-    // mode replaces only the tuples the batch writes.
-    case i: InsertIntoStatement if (i.table match {
-        case GraftTarget(_, _) => true
-        case _ => false
-      }) =>
+    // INSERT [OVERWRITE] [PARTITION (…)]: the target resolves to the
+    // catalog relation reads get, and Spark's own INSERT resolution plans
+    // AppendData / OverwriteByExpression / OverwritePartitionsDynamic onto
+    // [[graft.catalog.GraftWriteBuilder]], as for `<cat>.<t>`. BY NAME
+    // waits for its query's output names (see requireDynamicColumns).
+    case i: InsertIntoStatement if GraftTarget.unapply(i.table).isDefined &&
+        (!i.byName || i.query.resolved) =>
       val GraftTarget(name, _) = i.table: @unchecked
-      loadTable(name).map { t =>
-        // spec keys are canonicalized to the schema's field names with the
-        // session resolver, so PARTITION (G=7) works (and is refused for
-        // overlap) exactly like (g=7) under case-insensitive resolution
-        val resolver = session.sessionState.analyzer.resolver
-        def schemaName(k: String): String =
-          t.meta.schema.fields.find(f => resolver(f.name, k)).getOrElse(
-            throw new IllegalArgumentException(
-              s"INSERT ... PARTITION graft.$name: unknown column '$k'")).name
-        val staticSpec: Seq[(String, String)] = i.partitionSpec.toSeq.collect {
-          case (k, Some(v)) => schemaName(k) -> v
-        }
-        val dynamicKeys: Seq[String] = i.partitionSpec.toSeq.collect {
-          case (k, None) => schemaName(k)
-        }
-        // identity sources come from the real spec parser — the same
-        // grammar the write path uses (IDENTITY(g), inner spaces, ...)
-        val identitySources = graft.tables.PartitionSpecParser
-          .parse(t.meta.partitionBy, t.meta.schema.fieldNames.toSet)
-          .filter(_.transform == "identity").map(_.sourceColumn).toSet
-        (staticSpec.map(_._1) ++ dynamicKeys).foreach { k =>
-          require(identitySources.contains(k),
-            s"INSERT ... PARTITION graft.$name: '$k' is not an identity " +
-              s"partition source column (spec: ${t.meta.partitionBy.mkString(", ")})")
-        }
-        val (q, cols, over, byName) =
-          (i.query, i.userSpecifiedCols, i.overwrite, i.byName)
-        val label = (if (over) "INSERT OVERWRITE" else "INSERT") +
-          (if (i.partitionSpec.nonEmpty) " PARTITION" else "")
-        GraftDmlCommand(label, name, () => {
-          val df0 = GraftBridge.dataFrame(session, q)
-          val specCols = staticSpec.map(_._1).toSet
-          val expected = t.meta.schema.fields.toSeq.filterNot(f => specCols.contains(f.name))
-          def noSpecOverlap(produced: Seq[String]): Unit = {
-            val dup = produced.filter(p => specCols.exists(resolver(p, _)))
-            require(dup.isEmpty,
-              s"INSERT ... PARTITION graft.$name: the query/column list also " +
-                s"provides PARTITION column(s) ${dup.mkString(", ")} — their " +
-                "per-row values would be silently replaced by the static spec")
-          }
-          def requireDynamic(produced: Seq[String]): Unit = {
-            val missing = dynamicKeys.filterNot(k => produced.exists(resolver(_, k)))
-            require(missing.isEmpty,
-              s"INSERT ... PARTITION graft.$name: dynamic partition column(s) " +
-                s"${missing.mkString(", ")} must be provided by the query")
-          }
-          val base =
-            if (cols.nonEmpty) {
-              noSpecOverlap(cols); requireDynamic(cols)
-              require(df0.columns.length == cols.length,
-                s"INSERT column list has ${cols.length} columns but the query produces ${df0.columns.length}")
-              df0.toDF(cols: _*)
-            } else if (byName) {
-              noSpecOverlap(df0.columns.toSeq); requireDynamic(df0.columns.toSeq)
-              df0
-            } else {
-              require(df0.columns.length == expected.length,
-                s"positional INSERT needs ${expected.length} columns " +
-                  s"(${expected.map(_.name).mkString(", ")}), query produces ${df0.columns.length}")
-              df0.toDF(expected.map(_.name): _*)
-            }
-          val df = staticSpec.foldLeft(base) { case (d, (k, v)) =>
-            d.withColumn(k, lit(v).cast(t.meta.schema(k).dataType))
-          }
-          def dynamicMode = session.conf
-            .get("spark.sql.sources.partitionOverwriteMode", "static")
-            .equalsIgnoreCase("dynamic")
-          // Spark's rule: partition columns the spec OMITS are dynamic
-          // too — the spec is fully static only when it names EVERY
-          // identity source. overwriteStaticRegion routes both keyed and
-          // keyless tables to the zero-rewrite region drop (keyed since
-          // round 8; `delete.keyed-region-mode=tombstone` opts keyed
-          // tables back into changelog-precise tombstones).
-          val fullyStatic = dynamicKeys.isEmpty &&
-            identitySources.subsetOf(staticSpec.map(_._1).toSet)
-          // write-audit-publish: with `spark.wap.branch` set, a plain
-          // INSERT stages onto that branch instead of committing — the
-          // live table is untouched until CALL publish_branch (Iceberg's
-          // write-to-branch session conf). Overwrites are refused: a
-          // branch stages appends and row-level DML (round 9), not
-          // whole-region replacement.
-          val wapBranch = session.conf.getOption("spark.wap.branch").filter(_.nonEmpty)
-          require(wapBranch.isEmpty || !over,
-            s"INSERT OVERWRITE graft.$name cannot target WAP branch " +
-              s"'${wapBranch.get}' — branches stage appends and row-level " +
-              "DML, not overwrites (unset spark.wap.branch to overwrite " +
-              "the live table)")
-          if (over && i.partitionSpec.nonEmpty) {
-            if (fullyStatic) t.overwriteStaticRegion(staticSpec, df) // the NAMED region, both modes
-            else if (dynamicMode) t.overwritePartitions(df) // only the batch's tuples
-            else if (staticSpec.nonEmpty) t.overwriteStaticRegion(staticSpec, df) // static mode: whole static-prefix region
-            else t.overwrite(df) // fully dynamic spec ≡ no spec, static mode: whole table
-          } else if (over) {
-            // honor Spark's dynamic partition-overwrite mode: replace
-            // only the batch's partitions on partitioned tables
-            if (dynamicMode && t.meta.partitionBy.exists(_.trim.nonEmpty))
-              t.overwritePartitions(df)
-            else t.overwrite(df)
-          } else wapBranch match {
-            case Some(br) => t.stageAppendInto(df, br)
-            case None     => t.append(df)
-          }
-        }): LogicalPlan
-      }.getOrElse(refuseIfView(name, "INSERT", i))
+      resolve(name) match {
+        case Some(SubqueryAlias(_, r: DataSourceV2Relation)) =>
+          requireDynamicColumns(name, i)
+          i.copy(table = r)
+        case _ => refuseIfView(name, "INSERT", i)
+      }
     case m: MergeIntoTable if (m.targetTable match {
         case GraftTarget(_, _) => true
         case _ => false
@@ -245,6 +139,25 @@ class ResolveGraftTables(session: SparkSession) extends Rule[LogicalPlan] {
     throw new IllegalArgumentException(
       s"graft.$full is a read-only view (time travel / metadata table); " +
         s"DML must target the base table (statement: ${stmt.nodeName})")
+
+  /** `INSERT … PARTITION (k) (cols)` or `… PARTITION (k) BY NAME` whose
+    * column list or query lacks the dynamic `k`: Spark fills a missing
+    * nullable column with null, so the rows would land in the null
+    * partition instead of taking `k` from the query as the statement says.
+    */
+  private def requireDynamicColumns(name: String, i: InsertIntoStatement): Unit = {
+    val produced =
+      if (i.userSpecifiedCols.nonEmpty) i.userSpecifiedCols
+      else if (i.byName) i.query.output.map(_.name)
+      else return
+    val resolver = session.sessionState.analyzer.resolver
+    val missing = i.partitionSpec.collect {
+      case (k, None) if !produced.exists(resolver(_, k)) => k
+    }
+    require(missing.isEmpty,
+      s"INSERT ... PARTITION graft.$name: dynamic partition column(s) " +
+        s"${missing.mkString(", ")} must be provided by the query")
+  }
 
   /** DML target: a `graft.<t>` relation, optionally behind the
     * statement's alias. Metadata suffixes (`$files`…) are not writable.

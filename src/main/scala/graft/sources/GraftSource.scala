@@ -379,7 +379,7 @@ class GraftSource extends TableProvider with RelationProvider
     }
     // write-audit-publish: an active `spark.wap.branch` routes V1 appends
     // to branch STAGING — the same adjudication as SQL INSERT
-    // ([[graft.plans.ResolveGraftTables]]'s DML): writes under the conf always
+    // ([[graft.catalog.GraftWriteBuilder]]): writes under the conf always
     // target the branch (created on first touch), so a misspelled or
     // not-yet-staged name stages rather than silently mutating the live
     // table mid-audit; overwrites are refused (branches stage appends and

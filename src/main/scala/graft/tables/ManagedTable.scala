@@ -190,6 +190,32 @@ final class ManagedTable private (
     writeMeta()
   }
 
+  /** One field-level [[updatePartitionSpec]]: drop the field `oldField`
+    * names, add the field `newField` specifies, or replace one with the
+    * other in place (one epoch boundary, not a drop and an add). A dropped
+    * field is named by its derived name (`id_bucket`, not a schema column)
+    * or by its transform spec.
+    */
+  def replacePartitionField(oldField: Option[String], newField: Option[String]): Unit = {
+    val cols = _meta.schema.fieldNames.toSet
+    val current = _meta.partitionBy.map(_.trim).filter(_.nonEmpty)
+    def nameOf(s: String): Option[String] =
+      PartitionSpecParser.parse(Seq(s), cols).headOption.map(_.name)
+    def strictName(s: String): String =
+      PartitionSpecParser.parse(Seq(s), cols, strict = true).head.name
+    def spec = current.mkString(", ")
+    val oldName = oldField.map(f => if (current.flatMap(nameOf).contains(f)) f else strictName(f))
+    val kept = current.filterNot(s => oldName.exists(nameOf(s).contains))
+    oldName.foreach(n => require(kept.size < current.size,
+      s"${_meta.name}: no partition field '$n' (spec: $spec)"))
+    newField.map(strictName).foreach(n => require(!kept.flatMap(nameOf).contains(n),
+      s"${_meta.name}: partition field '$n' already exists (spec: $spec)"))
+    updatePartitionSpec((oldName, newField) match {
+      case (Some(n), Some(f)) => current.map(s => if (nameOf(s).contains(n)) f else s)
+      case _ => kept ++ newField
+    })
+  }
+
   /** Data file format — the reference's `write.format-default`
     * (docs/iceberg.md write-format config; ORC covered by its config-matrix
     * tests). parquet | orc.

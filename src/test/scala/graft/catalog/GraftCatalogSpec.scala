@@ -919,6 +919,11 @@ class GraftCatalogSpec extends AnyFunSuite with SharedSpark {
     val ex = spark.sql(
       s"CALL $cat.system.expire_snapshots('mp', TIMESTAMP '2020-01-01 00:00:00')").collect()
     assert(ex(0).getLong(0) == 0L, "nothing is older than 2020")
+    // …or an integral epoch-millis cutoff, like the graft.system spelling
+    val exMillis = spark.sql(
+      s"CALL $cat.system.expire_snapshots('mp', 9999999999999)").collect()
+    assert(exMillis(0).getLong(0) >= 0L)
+    assert(ManagedTable.load(spark, wh, "mp").get.read().count() == 31)
 
     // maintenance returns informational action rows
     val m = spark.sql(s"CALL $cat.system.maintenance('mp')").collect()

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SQL DDL over graft tables: CREATE / CTAS / DROP TABLE, the column and
-  * property ALTERs and TRUNCATE run as Spark's V2 execs on
-  * [[graft.catalog.GraftCatalog]]; views, SHOW/DESCRIBE, CALL and the
+  * property ALTERs, TRUNCATE and CALL run as Spark's V2 execs on
+  * [[graft.catalog.GraftCatalog]]; views, SHOW/DESCRIBE and the
   * grammar-less verbs run as eager commands ([[graft.plans.ResolveGraftDdl]]).
   */
 class GraftSqlDdlSpec extends AnyFunSuite with SharedSpark {
@@ -235,22 +235,26 @@ class GraftSqlDdlSpec extends AnyFunSuite with SharedSpark {
       val exN = s2.sql(
         "CALL graft.system.expire_snapshots(older_than => 9999999999999, table => 'mt')")
       assert(exN.head().getLong(0) >= 0L)
+      // Spark's procedure-call rules: names, arity, order, duplicates —
+      // each refusal leaves the table's history untouched
+      val mtVersions = ManagedTable.load(s2, wh, "mt").get.versions()
       val eArg = intercept[Exception] {
         s2.sql("CALL graft.system.compact(nope => 'mt')")
       }
-      assert(eArg.getMessage.contains("unknown argument"), eArg.getMessage)
-      // standard procedure-call rules: arity, order, duplicates
+      assert(eArg.getMessage.contains("UNRECOGNIZED_PARAMETER_NAME"), eArg.getMessage)
       assert(intercept[Exception] {
         s2.sql("CALL graft.system.compact('mt', 'junk')")
-      }.getMessage.contains("too many arguments"))
+      }.getMessage.contains("WRONG_NUM_ARGS"))
       assert(intercept[Exception] {
         s2.sql("CALL graft.system.expire_snapshots(table => 'mt', 9999999999999)")
-      }.getMessage.contains("positional argument after a named one"))
+      }.getMessage.contains("UNEXPECTED_POSITIONAL_ARGUMENT"))
       assert(intercept[Exception] {
         s2.sql("CALL graft.system.expire_snapshots('mt', table => 'x')")
-      }.getMessage.contains("given twice"))
+      }.getMessage.contains("DUPLICATE_ROUTINE_PARAMETER_ASSIGNMENT"))
       val eProc = intercept[Exception] { s2.sql("CALL graft.system.nope('mt')") }
       assert(eProc.getMessage.contains("unknown procedure"), eProc.getMessage)
+      assert(ManagedTable.load(s2, wh, "mt").get.versions() == mtVersions,
+        "a refused CALL must not change the table")
 
       // remove_orphan_files: stale debris goes, referenced groups stay,
       // and a young unreferenced dir (possible in-flight staging) is

@@ -5,10 +5,11 @@ import graft.tables.ManagedTable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SQL DML over graft tables ([[graft.plans.ResolveGraftTables]] →
-  * [[graft.plans.GraftDmlCommand]]): INSERT / DELETE / UPDATE / MERGE
-  * statements route to the ManagedTable row-level API as eager commands —
-  * .explain must not mutate, unsupported shapes must fail at analysis.
+/** SQL DML over graft tables ([[graft.plans.ResolveGraftTables]]):
+  * INSERT plans Spark's V2 write onto the catalog table; DELETE / UPDATE
+  * / MERGE route to the ManagedTable row-level API as eager
+  * [[graft.plans.GraftDmlCommand]]s — .explain must not mutate,
+  * unsupported shapes must fail at analysis.
   */
 class GraftSqlDmlSpec extends AnyFunSuite with SharedSpark {
 
@@ -25,7 +26,9 @@ class GraftSqlDmlSpec extends AnyFunSuite with SharedSpark {
       import s2.implicits._
       val wh = java.nio.file.Files.createTempDirectory("graft-sqldml").toString
       s2.conf.set("spark.graft.warehouse", wh)
-      val df = Seq((1L, "alice", 10.0), (2L, "bob", 20.0)).toDF("id", "name", "v")
+      // v is nullable (Option), id is NOT NULL (primitive Long)
+      val df = Seq((1L, "alice", Option(10.0)), (2L, "bob", Option(20.0)))
+        .toDF("id", "name", "v")
       val t = ManagedTable.create(s2, wh, "people", df.schema, Seq("id"))
       t.append(df)
       // the SQL commands commit through their own table handles — reload
@@ -38,10 +41,23 @@ class GraftSqlDmlSpec extends AnyFunSuite with SharedSpark {
       // INSERT with a column list fills the rest with nulls
       s2.sql("INSERT INTO graft.people (id, name) SELECT 5, 'eve'")
       assert(cur.where(col("id") === 5).select("v").head().isNullAt(0))
-
-      // .explain on a DML statement must NOT run it (eager-command shape:
-      // building the plan is side-effect-free until execution)
+      // …but never with a null for a NOT NULL column
+      val eNull = intercept[Exception] {
+        s2.sql("INSERT INTO graft.people (name, v) SELECT 'nokey', 1.0") }
+      assert(eNull.getMessage.contains("CANNOT_FIND_DATA"), eNull.getMessage)
       assert(cur.count() == 5)
+
+      // .explain on a DML statement must NOT run it: INSERT plans Spark's
+      // V2 write node (the same one `<cat>.people` plans), and neither it
+      // nor an EXPLAIN CALL changes the rows or commits a version
+      def versions = ManagedTable.load(s2, wh, "people").get.versions()
+      val versionsBefore = versions
+      val plan = s2.sql("EXPLAIN INSERT INTO graft.people VALUES (6, 'fay', 60.0)")
+        .head().getString(0)
+      assert(plan.contains("AppendData") && !plan.contains("GraftDmlCommand"), plan)
+      s2.sql("EXPLAIN CALL graft.system.compact('people')").collect()
+      assert(cur.count() == 5)
+      assert(versions == versionsBefore)
 
       // UPDATE with alias + qualified references
       s2.sql("UPDATE graft.people AS p SET v = p.v * 2 WHERE p.name = 'bob'")
@@ -133,25 +149,30 @@ class GraftSqlDmlSpec extends AnyFunSuite with SharedSpark {
       s2.sql("INSERT INTO graft.pt PARTITION (g) VALUES (90, 'dyn', 9)")
       assert(curPt.where(col("g") === 9).select("id").head().getLong(0) == 90)
       // non-partition columns are refused precisely
+      val ptRows = curPt.count()
       val eNp = intercept[Exception] {
         s2.sql("INSERT INTO graft.pt PARTITION (name='x') VALUES (1, 2)") }
-      assert(eNp.getMessage.contains("identity partition source"), eNp.getMessage)
+      assert(eNp.getMessage.contains("NON_PARTITION_COLUMN"), eNp.getMessage)
       // a query that ALSO provides the static column is refused in every
       // shape — its per-row values would silently vanish (column list,
       // BY NAME)
       val eClash1 = intercept[Exception] {
         s2.sql("INSERT INTO graft.pt PARTITION (g=7) (id, name, g) VALUES (1, 'x', 9)") }
-      assert(eClash1.getMessage.contains("PARTITION column"), eClash1.getMessage)
+      assert(eClash1.getMessage.contains("STATIC_PARTITION_COLUMN_IN_INSERT_COLUMN_LIST"),
+        eClash1.getMessage)
       val eClash2 = intercept[Exception] {
         s2.sql("INSERT INTO graft.pt PARTITION (g=7) BY NAME SELECT 1L AS id, 'x' AS name, 9 AS g") }
-      assert(eClash2.getMessage.contains("PARTITION column"), eClash2.getMessage)
+      assert(eClash2.getMessage.contains("STATIC_PARTITION_COLUMN_IN_INSERT_COLUMN_LIST"),
+        eClash2.getMessage)
       // case-insensitive resolution (Spark's default): an upper-cased
       // spec key resolves to the schema column, and an upper-cased query
       // column still trips the overlap guard — it would otherwise be
       // silently replaced by the static value
       val eClash3 = intercept[Exception] {
         s2.sql("INSERT INTO graft.pt PARTITION (g=7) BY NAME SELECT 1L AS id, 'x' AS name, 9 AS G") }
-      assert(eClash3.getMessage.contains("PARTITION column"), eClash3.getMessage)
+      assert(eClash3.getMessage.contains("STATIC_PARTITION_COLUMN_IN_INSERT_COLUMN_LIST"),
+        eClash3.getMessage)
+      assert(curPt.count() == ptRows, "a refused INSERT must not change the table")
       s2.sql("INSERT INTO graft.pt PARTITION (G=6) VALUES (60, 'up')")
       assert(curPt.where(col("g") === 6 && col("id") === 60).count() == 1,
         "upper-cased PARTITION key must resolve case-insensitively")
@@ -184,6 +205,14 @@ class GraftSqlDmlSpec extends AnyFunSuite with SharedSpark {
       val eMiss = intercept[Exception] {
         s2.sql("INSERT INTO graft.pt2 PARTITION (g=1, h) (id, name) VALUES (1, 'x')") }
       assert(eMiss.getMessage.contains("must be provided"), eMiss.getMessage)
+      // …and from a BY NAME query: Spark would fill a nullable h with null
+      val p2n = ManagedTable.create(s2, wh, "pt2n",
+        org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, g INT, h INT"),
+        Seq.empty, Seq("g", "h"))
+      val eMissByName = intercept[Exception] {
+        s2.sql("INSERT INTO graft.pt2n PARTITION (g=1, h) BY NAME SELECT 1L AS id") }
+      assert(eMissByName.getMessage.contains("must be provided"), eMissByName.getMessage)
+      assert(p2n.read().count() == 0, "a refused INSERT must not change the table")
       // an identity column the spec OMITS is dynamic too (Spark's rule:
       // fully static only when every partition column is named) — so
       // dynamic mode keeps the prefix's untouched tuples
@@ -200,6 +229,49 @@ class GraftSqlDmlSpec extends AnyFunSuite with SharedSpark {
       }
       assert(e3.getMessage.contains("read-only"), e3.getMessage)
       assert(cur.count() == 3)
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(base)
+      org.apache.spark.sql.SparkSession.setActiveSession(base)
+    }
+  }
+
+  test("a cached graft.<t> read follows INSERT, UPDATE, DELETE and MERGE") {
+    val base = spark
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try {
+      val b = org.apache.spark.sql.SparkSession.builder()
+        .master(base.sparkContext.master)
+        .withExtensions(new graft.GraftExtensions().apply(_))
+      base.conf.getAll.foreach { case (k, v) => b.config(k, v) }
+      val s2 = b.getOrCreate()
+      val wh = java.nio.file.Files.createTempDirectory("graft-sqlcache").toString
+      s2.conf.set("spark.graft.warehouse", wh)
+      s2.sql("CREATE TABLE graft.cached (id BIGINT, v STRING) " +
+        "TBLPROPERTIES ('graft.identifier-fields'='id')")
+      s2.sql("INSERT INTO graft.cached VALUES (1, 'a'), (2, 'b')")
+      val cached = s2.table("graft.cached").cache()
+      // a read derived from the cached Dataset, answered by the cache
+      def rows = {
+        val read = cached.select("id", "v")
+        assert(read.queryExecution.withCachedData.exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]),
+          "the read must be served by the cache")
+        read.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      }
+      try {
+        assert(rows == Map(1L -> "a", 2L -> "b"))
+        s2.sql("INSERT INTO graft.cached VALUES (3, 'c')")
+        assert(rows == Map(1L -> "a", 2L -> "b", 3L -> "c"), "after INSERT")
+        s2.sql("UPDATE graft.cached SET v = 'b2' WHERE id = 2")
+        assert(rows == Map(1L -> "a", 2L -> "b2", 3L -> "c"), "after UPDATE")
+        s2.sql("DELETE FROM graft.cached WHERE id = 1")
+        assert(rows == Map(2L -> "b2", 3L -> "c"), "after DELETE")
+        s2.sql("""MERGE INTO graft.cached t USING
+          |(SELECT 3L AS id, 'c2' AS v UNION ALL SELECT 4L, 'd') s ON t.id = s.id
+          |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+        assert(rows == Map(2L -> "b2", 3L -> "c2", 4L -> "d"), "after MERGE")
+      } finally cached.unpersist()
     } finally {
       org.apache.spark.sql.SparkSession.setDefaultSession(base)
       org.apache.spark.sql.SparkSession.setActiveSession(base)
