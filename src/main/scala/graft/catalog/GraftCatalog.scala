@@ -104,16 +104,25 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     * (manifest-scale, zero file reads) describing the LIVE table.
     */
   override def loadTable(ident: Identifier): Table =
-    metadataTable(ident).orElse(refTable(ident)).getOrElse {
-      val t = managed(ident)
-      val wap = spark.conf.getOption("spark.wap.branch").filter(_.nonEmpty)
-        .filter(b => t.branches().contains(b))
-      // all-identity single-epoch specs additionally expose Spark's native
-      // partition management (SHOW PARTITIONS / DROP PARTITION); derived
-      // transforms and evolved specs keep the plain table — Spark then
-      // raises its standard not-partition-managed error
-      GraftCatalog.v2Table(t, wap)
-    }
+    metadataTable(ident).orElse(refTable(ident)).getOrElse(liveTable(ident, writeTarget = false))
+
+  /** The target of an INSERT, DELETE, UPDATE or MERGE: a handle that is
+    * never equal to a read handle ([[GraftV2Table.equals]]).
+    */
+  override def loadTable(ident: Identifier,
+                         writePrivileges: util.Set[TableWritePrivilege]): Table =
+    metadataTable(ident).orElse(refTable(ident)).getOrElse(liveTable(ident, writeTarget = true))
+
+  private def liveTable(ident: Identifier, writeTarget: Boolean): Table = {
+    val t = managed(ident)
+    val wap = spark.conf.getOption("spark.wap.branch").filter(_.nonEmpty)
+      .filter(b => t.branches().contains(b))
+    // all-identity single-epoch specs additionally expose Spark's native
+    // partition management (SHOW PARTITIONS / DROP PARTITION); derived
+    // transforms and evolved specs keep the plain table — Spark then
+    // raises its standard not-partition-managed error
+    GraftCatalog.v2Table(t, wap, writeTarget)
+  }
 
   private val MetaSuffixes = Set("files", "partitions", "snapshots", "refs")
 
@@ -294,7 +303,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     ManagedTable.load(spark, warehouse, ident.name) match {
       case Some(_) =>
         val fs = TableMeta.fs(spark.sparkContext.hadoopConfiguration, warehouse)
-        fs.delete(new Path(warehouse, ident.name), true)
+        val deleted = fs.delete(new Path(warehouse, ident.name), true)
+        GraftCatalog.refreshCachedReads(spark, warehouse, ident.name, dropped = true)
+        deleted
       case None => false
     }
   }
@@ -379,6 +390,36 @@ object GraftCatalog {
     c
   }
 
+  /** Re-plans every cached read of table `name` over a freshly loaded
+    * handle, or removes those reads when the table was `dropped`. Spark's
+    * write execs refresh only the spelling the statement named, but one
+    * table answers to several: `graft.<t>` and `<cat>.<t>` /
+    * `<cat>.default.<t>` for each loaded graft catalog over `warehouse`.
+    * [[GraftV2Table]] equality ignores the snapshot, so an entry left
+    * unrefreshed would answer every later read of the table. Every write
+    * Spark drives calls this after its commit.
+    */
+  private[graft] def refreshCachedReads(session: SparkSession, warehouse: String,
+                                        name: String, dropped: Boolean = false): Unit = {
+    val s = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val cache = s.sharedState.cacheManager
+    if (cache.isEmpty) return
+    val conf = s.sessionState.newHadoopConf()
+    def dir(wh: String) = TableMeta.fs(conf, wh).makeQualified(new Path(wh))
+    val here = dir(warehouse)
+    val cats = s.sessionState.catalogManager
+    val names = cats.listCatalogs(None).filter(n => cats.catalog(n) match {
+      case g: GraftCatalog => dir(g.warehouse) == here
+      case _ => false
+    }) ++ s.conf.getOption("spark.graft.warehouse").filter(dir(_) == here).map(_ => "graft")
+    for (c <- names.distinct; ns <- Seq(Nil, Seq("default")); parts = (c +: ns) :+ name)
+      if (dropped) cache.uncacheTableOrView(s, parts, cascade = true)
+      else cache.recacheTableOrView(s, parts)
+  }
+
+  private[graft] def refreshCachedReads(t: ManagedTable): Unit =
+    refreshCachedReads(t.spark, t.warehouse, t.name)
+
   /** The key-constraint property CREATE carries (Spark's DDL grammar has
     * no key clause); stored as the table's identifier fields, not kept.
     */
@@ -396,14 +437,15 @@ object GraftCatalog {
     * would break the translatable filter-based DELETEs that work today
     * through [[org.apache.spark.sql.connector.catalog.SupportsDelete]].
     */
-  private[catalog] def v2Table(t: ManagedTable, wap: Option[String]): GraftV2Table = {
+  private[catalog] def v2Table(t: ManagedTable, wap: Option[String],
+                               writeTarget: Boolean = false): GraftV2Table = {
     val rowLevel = t.meta.identifierFields.nonEmpty &&
       GraftRowLevelOperation.rowIdColumns(t).forall(c => !t.meta.schema(c).nullable)
     (partitionManaged(t), rowLevel) match {
-      case (true, true)   => new GraftV2PartitionedTable(t, wap) with GraftRowLevelOps
-      case (true, false)  => new GraftV2PartitionedTable(t, wap)
-      case (false, true)  => new GraftV2Table(t, wap) with GraftRowLevelOps
-      case (false, false) => new GraftV2Table(t, wap)
+      case (true, true)   => new GraftV2PartitionedTable(t, wap, writeTarget) with GraftRowLevelOps
+      case (true, false)  => new GraftV2PartitionedTable(t, wap, writeTarget)
+      case (false, true)  => new GraftV2Table(t, wap, writeTarget) with GraftRowLevelOps
+      case (false, false) => new GraftV2Table(t, wap, writeTarget)
     }
   }
 

@@ -78,6 +78,7 @@ private[catalog] final class GraftDynamicOverwriteWrite(
           else t.overwritePartitions(staged)
         }
       } finally fs.delete(stagingDir, true)
+      GraftCatalog.refreshCachedReads(t)
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -80,13 +80,18 @@ object GraftProcedures {
       ManagedTable.load(spark, warehouse, name).getOrElse(
         throw new IllegalArgumentException(s"table '$name' does not exist in $warehouse"))
     all.find(_.name == proc.toLowerCase(java.util.Locale.ROOT))
-      .map(new GraftUnboundProcedure(_, table))
+      .map(new GraftUnboundProcedure(_, table,
+        GraftCatalog.refreshCachedReads(spark, warehouse, _)))
   }
 }
 
+/** `refresh` runs for every table the call loaded, after the call: a
+  * rollback or a publish changes the rows a cached read answers.
+  */
 private final class GraftUnboundProcedure(
     spec: GraftProcedures.Spec,
-    table: String => ManagedTable) extends UnboundProcedure {
+    table: String => ManagedTable,
+    refresh: String => Unit) extends UnboundProcedure {
 
   override def name(): String = spec.name
   override def description(): String = s"graft maintenance procedure ${spec.name}"
@@ -124,11 +129,13 @@ private final class GraftUnboundProcedure(
         }
         val out = StructType(spec.out.map { case (n, dt) =>
           StructField(n, dt, nullable = false) })
-        val result = spec.run(table, args).map(vals =>
+        val loaded = scala.collection.mutable.LinkedHashSet.empty[String]
+        val result = spec.run(n => { loaded += n; table(n) }, args).map(vals =>
           InternalRow.fromSeq(vals.map {
             case s: String => UTF8String.fromString(s)
             case x => x
           })).toArray
+        loaded.foreach(refresh)
         java.util.List.of[Scan](new LocalScan {
           override def rows(): Array[InternalRow] = result
           override def readSchema(): StructType = out

@@ -217,6 +217,7 @@ private[catalog] final class GraftDeltaBatchWrite(t: ManagedTable, info: Logical
         }
       }
     } finally fs.delete(stagingDir, true)
+    GraftCatalog.refreshCachedReads(t)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -30,27 +30,37 @@ import graft.tables.ManagedTable
   * surface's INSERT.
   */
 class GraftV2Table(val t: ManagedTable,
-                   val pinnedRef: Option[String] = None)
+                   val pinnedRef: Option[String] = None,
+                   writeTarget: Boolean = false)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsMetadataColumns {
 
   override def name(): String = t.name
 
-  /** Two handles are equal when they name one table at one ref, whatever
-    * snapshot each pinned — Iceberg's rule for Spark's cache. A cached
-    * read then serves later reads of the table, and the refresh after a
-    * write through Spark (a V2 write exec, [[graft.plans.GraftDmlCommand]])
-    * re-plans the cache entry over a freshly loaded handle. A write that
-    * bypasses Spark (the table API, the CDC pipeline) leaves such a cache
-    * stale until it is unpersisted, as for an Iceberg table.
+  /** Two live read handles of one table are equal, whatever snapshot
+    * each pinned — Iceberg's rule for Spark's cache. A cached read then
+    * serves later reads of the table, so every write Spark drives (the V2
+    * writes, [[graft.plans.GraftDmlCommand]], CALL) re-plans the table's
+    * cache entries under all its spellings over a freshly loaded handle,
+    * and DROP TABLE removes them ([[GraftCatalog.refreshCachedReads]]). A
+    * write that bypasses Spark (the table API, the CDC pipeline) leaves
+    * such a cache stale until it is unpersisted, as for an Iceberg table.
+    *
+    * Every other handle is equal only to itself: one pinned to a ref (time
+    * travel, a branch, the wap branch), because a branch moves without
+    * that refresh; and a write target, because Spark would otherwise plan
+    * a cached read in place of a filter DELETE's target.
     */
+  private def live: Boolean = pinnedRef.isEmpty && !writeTarget
+
   override def equals(other: Any): Boolean = other match {
-    case o: GraftV2Table => o.getClass == getClass &&
-      o.t.v2TableDir == t.v2TableDir && o.pinnedRef == pinnedRef
+    case o: GraftV2Table => (o eq this) || (live && o.live &&
+      o.getClass == getClass && o.t.v2TableDir == t.v2TableDir)
     case _ => false
   }
 
-  override def hashCode(): Int = (t.v2TableDir, pinnedRef).hashCode()
+  override def hashCode(): Int =
+    if (live) t.v2TableDir.hashCode() else System.identityHashCode(this)
 
   override def schema(): StructType = t.meta.schema
 
@@ -139,6 +149,7 @@ class GraftV2Table(val t: ManagedTable,
       case Some(b) => t.deleteWhereOnBranch(cond, b)
       case None    => t.deleteWhere(cond)
     }
+    GraftCatalog.refreshCachedReads(t)
   }
 
   /** `TRUNCATE TABLE <cat>.t` — the metadata-only truncate (zero files
@@ -157,6 +168,7 @@ class GraftV2Table(val t: ManagedTable,
       s"graft V2 catalog: cannot TRUNCATE ${t.name} VERSION AS OF " +
         s"'${pinnedRef.get}' — time-traveled tables are read-only")
     t.truncate()
+    GraftCatalog.refreshCachedReads(t)
     true
   }
 }
@@ -173,8 +185,9 @@ class GraftV2Table(val t: ManagedTable,
   * on write (Iceberg's model), an empty partition has no representation.
   */
 class GraftV2PartitionedTable(t2: ManagedTable,
-                              pinnedRef2: Option[String] = None)
-    extends GraftV2Table(t2, pinnedRef2)
+                              pinnedRef2: Option[String] = None,
+                              writeTarget2: Boolean = false)
+    extends GraftV2Table(t2, pinnedRef2, writeTarget2)
     with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.types.{DataType, DateType, StringType => SStr}
@@ -460,6 +473,7 @@ final class GraftWriteBuilder(t: ManagedTable, info: LogicalWriteInfo)
               case None     => t.append(data)
             }
         }
+        GraftCatalog.refreshCachedReads(t)
       }
     }
   }

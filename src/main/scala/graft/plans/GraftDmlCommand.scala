@@ -10,15 +10,16 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
   * command-execution phase runs the captured [[graft.tables.ManagedTable]]
   * operation exactly once when the statement executes — so `.explain` on
   * the statement does NOT mutate the table and a re-collect does not
-  * re-run the write. Afterwards it refreshes cached reads of `graft.<t>`,
-  * as Spark's V2 write execs do for an INSERT.
+  * re-run the write. Afterwards it refreshes every cached read of the
+  * table, under either spelling
+  * ([[graft.catalog.GraftCatalog.refreshCachedReads]]).
   */
 case class GraftDmlCommand(operation: String, table: String,
                            body: () => Unit) extends LeafRunnableCommand {
   override def run(session: SparkSession): Seq[Row] = {
     body()
-    val classic = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sharedState.cacheManager.recacheTableOrView(classic, Seq("graft", table))
+    session.conf.getOption("spark.graft.warehouse").foreach(
+      graft.catalog.GraftCatalog.refreshCachedReads(session, _, table))
     Seq.empty
   }
   override def simpleString(maxFields: Int): String =

@@ -81,9 +81,10 @@ class ResolveGraftTables(session: SparkSession) extends Rule[LogicalPlan] {
     // catalog relation reads get, and Spark's own INSERT resolution plans
     // AppendData / OverwriteByExpression / OverwritePartitionsDynamic onto
     // [[graft.catalog.GraftWriteBuilder]], as for `<cat>.<t>`. BY NAME
-    // waits for its query's output names (see requireDynamicColumns).
+    // with a dynamic PARTITION column waits for its query's output names
+    // (see requireDynamicColumns).
     case i: InsertIntoStatement if GraftTarget.unapply(i.table).isDefined &&
-        (!i.byName || i.query.resolved) =>
+        (i.query.resolved || !(i.byName && dynamicColumns(i).nonEmpty)) =>
       val GraftTarget(name, _) = i.table: @unchecked
       resolve(name) match {
         case Some(SubqueryAlias(_, r: DataSourceV2Relation)) =>
@@ -146,18 +147,21 @@ class ResolveGraftTables(session: SparkSession) extends Rule[LogicalPlan] {
     * partition instead of taking `k` from the query as the statement says.
     */
   private def requireDynamicColumns(name: String, i: InsertIntoStatement): Unit = {
+    val dynamic = dynamicColumns(i)
     val produced =
-      if (i.userSpecifiedCols.nonEmpty) i.userSpecifiedCols
+      if (dynamic.isEmpty) return
+      else if (i.userSpecifiedCols.nonEmpty) i.userSpecifiedCols
       else if (i.byName) i.query.output.map(_.name)
       else return
     val resolver = session.sessionState.analyzer.resolver
-    val missing = i.partitionSpec.collect {
-      case (k, None) if !produced.exists(resolver(_, k)) => k
-    }
+    val missing = dynamic.filterNot(k => produced.exists(resolver(_, k)))
     require(missing.isEmpty,
       s"INSERT ... PARTITION graft.$name: dynamic partition column(s) " +
         s"${missing.mkString(", ")} must be provided by the query")
   }
+
+  private def dynamicColumns(i: InsertIntoStatement): Seq[String] =
+    i.partitionSpec.collect { case (k, None) => k }.toSeq
 
   /** DML target: a `graft.<t>` relation, optionally behind the
     * statement's alias. Metadata suffixes (`$files`…) are not writable.

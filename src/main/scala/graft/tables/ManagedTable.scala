@@ -194,9 +194,13 @@ final class ManagedTable private (
     * names, add the field `newField` specifies, or replace one with the
     * other in place (one epoch boundary, not a drop and an add). A dropped
     * field is named by its derived name (`id_bucket`, not a schema column)
-    * or by its transform spec.
+    * or by its transform spec. The SQL partition-field DDL's one entry;
+    * the public API is [[updatePartitionSpec]].
     */
-  def replacePartitionField(oldField: Option[String], newField: Option[String]): Unit = {
+  private[graft] def replacePartitionField(oldField: Option[String],
+                                           newField: Option[String]): Unit = {
+    require(oldField.isDefined || newField.isDefined,
+      s"${_meta.name}: a partition-field change needs a field to drop or to add")
     val cols = _meta.schema.fieldNames.toSet
     val current = _meta.partitionBy.map(_.trim).filter(_.nonEmpty)
     def nameOf(s: String): Option[String] =

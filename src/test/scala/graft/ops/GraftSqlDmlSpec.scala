@@ -213,6 +213,13 @@ class GraftSqlDmlSpec extends AnyFunSuite with SharedSpark {
         s2.sql("INSERT INTO graft.pt2n PARTITION (g=1, h) BY NAME SELECT 1L AS id") }
       assert(eMissByName.getMessage.contains("must be provided"), eMissByName.getMessage)
       assert(p2n.read().count() == 0, "a refused INSERT must not change the table")
+      // a BY NAME query that never resolves fails on its own column, not
+      // on the (existing) target table
+      val eBadCol = intercept[Exception] {
+        s2.sql("INSERT INTO graft.pt2n BY NAME SELECT nosuch AS id") }
+      assert(eBadCol.getMessage.contains("nosuch") &&
+        !eBadCol.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"), eBadCol.getMessage)
+      assert(p2n.read().count() == 0, "a refused INSERT must not change the table")
       // an identity column the spec OMITS is dynamic too (Spark's rule:
       // fully static only when every partition column is named) — so
       // dynamic mode keeps the prefix's untouched tuples
@@ -272,6 +279,84 @@ class GraftSqlDmlSpec extends AnyFunSuite with SharedSpark {
           |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin)
         assert(rows == Map(2L -> "b2", 3L -> "c2", 4L -> "d"), "after MERGE")
       } finally cached.unpersist()
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(base)
+      org.apache.spark.sql.SparkSession.setActiveSession(base)
+    }
+  }
+
+  test("a cached read of either spelling follows writes through the other, and DROP + CREATE") {
+    val base = spark
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try {
+      val b = org.apache.spark.sql.SparkSession.builder()
+        .master(base.sparkContext.master)
+        .withExtensions(new graft.GraftExtensions().apply(_))
+      base.conf.getAll.foreach { case (k, v) => b.config(k, v) }
+      val s2 = b.getOrCreate()
+      val wh = java.nio.file.Files.createTempDirectory("graft-sqlcache2").toString
+      s2.conf.set("spark.graft.warehouse", wh)
+      val cat = s"gcache_${java.util.UUID.randomUUID().toString.take(8)}"
+      s2.conf.set(s"spark.sql.catalog.$cat", classOf[graft.catalog.GraftCatalog].getName)
+      s2.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val create = "CREATE TABLE graft.x (id BIGINT, v STRING) " +
+        "TBLPROPERTIES ('graft.identifier-fields'='id')"
+      s2.sql(create)
+      s2.sql("INSERT INTO graft.x VALUES (1, 'a'), (2, 'b')")
+      def rowsOf(name: String) =
+        s2.table(name).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val viaCat = s2.table(s"$cat.x").cache()
+      val viaGraft = s2.table("graft.x").cache()
+      try {
+        assert(rowsOf(s"$cat.x") == Map(1L -> "a", 2L -> "b"))
+        assert(rowsOf("graft.x") == Map(1L -> "a", 2L -> "b"))
+        // writes through graft.x reach a cached <cat>.x read
+        s2.sql("INSERT INTO graft.x VALUES (3, 'c')")
+        assert(rowsOf(s"$cat.x") == Map(1L -> "a", 2L -> "b", 3L -> "c"), "after INSERT")
+        s2.sql("UPDATE graft.x SET v = 'b2' WHERE id = 2")
+        assert(rowsOf(s"$cat.x") == Map(1L -> "a", 2L -> "b2", 3L -> "c"), "after UPDATE")
+        s2.sql("DELETE FROM graft.x WHERE id = 1")
+        assert(rowsOf(s"$cat.x") == Map(2L -> "b2", 3L -> "c"), "after DELETE")
+        s2.sql("""MERGE INTO graft.x t USING (SELECT 4L AS id, 'd' AS v) s
+          |ON t.id = s.id WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+        assert(rowsOf(s"$cat.x") == Map(2L -> "b2", 3L -> "c", 4L -> "d"), "after MERGE")
+        // …and writes through <cat>.x reach a cached graft.x read
+        s2.sql(s"INSERT INTO $cat.x VALUES (5, 'e')")
+        assert(rowsOf("graft.x") == Map(2L -> "b2", 3L -> "c", 4L -> "d", 5L -> "e"),
+          s"after INSERT INTO $cat.x")
+        s2.sql(s"DELETE FROM $cat.x WHERE id = 5")
+        assert(rowsOf("graft.x") == Map(2L -> "b2", 3L -> "c", 4L -> "d"),
+          s"after DELETE FROM $cat.x")
+        // a table dropped and re-created under the same name starts empty
+        // on both spellings, whichever spelling dropped it
+        s2.sql("DROP TABLE graft.x")
+        s2.sql(create)
+        assert(rowsOf(s"$cat.x").isEmpty, s"$cat.x after DROP TABLE graft.x + CREATE")
+        assert(rowsOf("graft.x").isEmpty, "graft.x after DROP TABLE graft.x + CREATE")
+        s2.sql("INSERT INTO graft.x VALUES (7, 'g')")
+        s2.table("graft.x").cache()
+        s2.table(s"$cat.x").cache()
+        assert(rowsOf("graft.x") == Map(7L -> "g") && rowsOf(s"$cat.x") == Map(7L -> "g"))
+        s2.sql(s"DROP TABLE $cat.x")
+        s2.sql(create)
+        assert(rowsOf("graft.x").isEmpty, s"graft.x after DROP TABLE $cat.x + CREATE")
+        assert(rowsOf(s"$cat.x").isEmpty, s"$cat.x after DROP TABLE $cat.x + CREATE")
+        // a cached read of a branch follows a write staged onto it
+        s2.sql("INSERT INTO graft.x VALUES (8, 'h')")
+        s2.sql("ALTER TABLE graft.x CREATE BRANCH b1")
+        def branchRows = s2.sql(s"SELECT * FROM $cat.x VERSION AS OF 'b1'")
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        s2.sql(s"SELECT * FROM $cat.x VERSION AS OF 'b1'").cache()
+        assert(branchRows == Map(8L -> "h"))
+        s2.conf.set("spark.wap.branch", "b1")
+        try s2.sql("INSERT INTO graft.x VALUES (9, 'i')")
+        finally s2.conf.unset("spark.wap.branch")
+        assert(branchRows == Map(8L -> "h", 9L -> "i"), "branch after a staged INSERT")
+      } finally {
+        viaCat.unpersist(); viaGraft.unpersist()
+        s2.catalog.clearCache()
+      }
     } finally {
       org.apache.spark.sql.SparkSession.setDefaultSession(base)
       org.apache.spark.sql.SparkSession.setActiveSession(base)
